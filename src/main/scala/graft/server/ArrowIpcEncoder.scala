@@ -1,6 +1,7 @@
 package graft.server
 
 import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
@@ -8,17 +9,24 @@ import org.apache.arrow.vector.ipc.ArrowStreamWriter
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
 import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Arrow IPC stream encoder (uquery-rs src/web/consumers.rs:47-75:
   * schema message lazily on first batch, then RecordBatches).
   *
-  * Built on the public arrow-vector API over `toLocalIterator` — the
-  * type-preserving response path. Scalar Spark types map 1:1;
-  * LIST-of-scalar columns stream as native Arrow list vectors
-  * (round-15 bytes fuzz — the reference streams DuckDB's own arrow,
-  * where lists are real list types); deeper nesting (struct / map /
-  * list-of-list) falls back to JSON stringification as utf8.
+  * Built on the public arrow-vector API over Spark's internal rows —
+  * the type-preserving response path. Each column compiles once per
+  * schema into a typed setter over `SpecializedGetters`. Scalar Spark
+  * types map 1:1 (TIMESTAMP to UTC `timestamp[us]`, TIMESTAMP_NTZ to
+  * naive `timestamp[us]`); LIST-of-scalar columns stream as native
+  * Arrow list vectors (round-15 bytes fuzz — the reference streams
+  * DuckDB's own arrow, where lists are real list types); deeper nesting
+  * (struct / map / list-of-list) falls back to JSON stringification as
+  * utf8.
   */
 object ArrowIpcEncoder {
 
@@ -35,6 +43,8 @@ object ArrowIpcEncoder {
     case FloatType => Some(new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
     case BooleanType => Some(ArrowType.Bool.INSTANCE)
     case TimestampType => Some(new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+    // DuckDB's naive TIMESTAMP: the same micros, no time zone
+    case TimestampNTZType => Some(new ArrowType.Timestamp(TimeUnit.MICROSECOND, null))
     case DateType => Some(new ArrowType.Date(org.apache.arrow.vector.types.DateUnit.DAY))
     case BinaryType => Some(ArrowType.Binary.INSTANCE)
     case d: DecimalType => Some(new ArrowType.Decimal(d.precision, d.scale, 128))
@@ -68,51 +78,70 @@ object ArrowIpcEncoder {
     }
   }
 
-  private def setValue(vec: FieldVector, i: Int, v: Any, dt: DataType): Unit = (vec, v) match {
-    case (x: complex.ListVector, seq: scala.collection.Seq[_]) =>
-      val et = dt.asInstanceOf[ArrayType].elementType
-      val start = x.startNewValue(i)
+  /** Sets slot `i` of a vector from the non-null value at (row, ordinal). */
+  private trait Setter { def apply(r: SpecializedGetters, o: Int, i: Int): Unit }
+
+  /** The typed setter of `vec`, the vector arrowField made for `dt`. */
+  private def setter(vec: FieldVector, dt: DataType): Setter = vec match {
+    case x: complex.ListVector =>
       val child = x.getDataVector
-      var j = 0
-      seq.foreach { e =>
-        if (e == null) child.setNull(start + j)
-        else setValue(child, start + j, e, et)
-        j += 1
+      val elem = setter(child, dt.asInstanceOf[ArrayType].elementType)
+      (r, o, i) => {
+        val a = r.getArray(o)
+        val start = x.startNewValue(i)
+        var j = 0
+        while (j < a.numElements()) {
+          if (a.isNullAt(j)) child.setNull(start + j) else elem(a, j, start + j)
+          j += 1
+        }
+        x.endValue(i, j)
       }
-      x.endValue(i, j)
-    case (x: IntVector, n: Int) => x.setSafe(i, n)
-    case (x: BigIntVector, n: Long) => x.setSafe(i, n)
-    case (x: SmallIntVector, n: Short) => x.setSafe(i, n)
-    case (x: TinyIntVector, n: Byte) => x.setSafe(i, n)
-    case (x: Float8Vector, n: Double) => x.setSafe(i, n)
-    case (x: Float4Vector, n: Float) => x.setSafe(i, n)
-    case (x: BitVector, b: Boolean) => x.setSafe(i, if (b) 1 else 0)
-    case (x: TimeStampMicroTZVector, t: java.sql.Timestamp) =>
-      x.setSafe(i, Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-    case (x: DateDayVector, d: java.sql.Date) =>
-      x.setSafe(i, d.toLocalDate.toEpochDay.toInt)
-    case (x: VarBinaryVector, b: Array[Byte]) => x.setSafe(i, b)
-    case (x: DecimalVector, d: java.math.BigDecimal) =>
-      x.setSafe(i, d.setScale(x.getScale))
-    case (x: VarCharVector, s) =>
-      val str = s match {
-        case st: String => st
+    case x: IntVector => (r, o, i) => x.setSafe(i, r.getInt(o))
+    case x: BigIntVector => (r, o, i) => x.setSafe(i, r.getLong(o))
+    case x: SmallIntVector => (r, o, i) => x.setSafe(i, r.getShort(o))
+    case x: TinyIntVector => (r, o, i) => x.setSafe(i, r.getByte(o))
+    case x: Float8Vector => (r, o, i) => x.setSafe(i, r.getDouble(o))
+    case x: Float4Vector => (r, o, i) => x.setSafe(i, r.getFloat(o))
+    case x: BitVector => (r, o, i) => x.setSafe(i, if (r.getBoolean(o)) 1 else 0)
+    case x: TimeStampMicroTZVector => (r, o, i) => x.setSafe(i, r.getLong(o))
+    case x: TimeStampMicroVector => (r, o, i) => x.setSafe(i, r.getLong(o))
+    case x: DateDayVector => (r, o, i) => x.setSafe(i, r.getInt(o))
+    case x: VarBinaryVector => (r, o, i) => x.setSafe(i, r.getBinary(o))
+    case x: DecimalVector =>
+      val d = dt.asInstanceOf[DecimalType]
+      (r, o, i) => x.setSafe(i, r.getDecimal(o, d.precision, d.scale).toJavaBigDecimal.setScale(x.getScale))
+    case x: VarCharVector => dt match {
+      case _: StringType => (r, o, i) => setUtf8(x, i, r.getUTF8String(o))
+      case NullType => (r, o, i) => x.setNull(i)
+      case _ =>
         // nested fallback: JSON stringification, not Scala toString
-        case seq: scala.collection.Seq[_] => RowEncoders.jsonFallback(seq)
-        case m: scala.collection.Map[_, _] => RowEncoders.jsonFallback(m)
-        case r: Row => RowEncoders.jsonFallback(r)
-        case other => String.valueOf(other)
-      }
-      x.setSafe(i, str.getBytes("UTF-8"))
-    case _ => vec.setNull(i)
+        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        (r, o, i) => {
+          val str = toScala(r.get(o, dt)) match {
+            case v @ (_: scala.collection.Seq[_] | _: scala.collection.Map[_, _] | _: Row) =>
+              RowEncoders.jsonFallback(v)
+            case other => String.valueOf(other)
+          }
+          x.setSafe(i, str.getBytes(UTF_8))
+        }
+    }
   }
 
-  def write(schema: StructType, rows: Iterator[Row], out: OutputStream): Unit = {
+  private def setUtf8(x: VarCharVector, i: Int, s: UTF8String): Unit = s.getBaseObject match {
+    case a: Array[Byte] => x.setSafe(i, a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+    case _ => x.setSafe(i, s.getBytes)
+  }
+
+  /** Streams `rows` (Spark's internal rows of `schema`) in batches of at
+    * most 1024 rows. */
+  def writeInternal(schema: StructType, rows: Iterator[InternalRow], out: OutputStream): Unit = {
     val allocator = new RootAllocator(Long.MaxValue)
     try {
       val arrowSchema = new ArrowSchema(schema.fields.map(arrowField).toSeq.asJava)
       val root = VectorSchemaRoot.create(arrowSchema, allocator)
       try {
+        val vecs = schema.fields.indices.map(root.getVector).toArray
+        val setters = schema.fields.indices.map(c => setter(vecs(c), schema(c).dataType)).toArray
         val writer = new ArrowStreamWriter(root, null, out)
         writer.start()
         while (rows.hasNext) {
@@ -120,10 +149,10 @@ object ArrowIpcEncoder {
           var n = 0
           while (rows.hasNext && n < BatchRows) {
             val row = rows.next()
-            schema.fields.zipWithIndex.foreach { case (f, c) =>
-              val vec = root.getVector(c)
-              val v = row.get(c)
-              if (v == null) vec.setNull(n) else setValue(vec, n, v, f.dataType)
+            var c = 0
+            while (c < setters.length) {
+              if (row.isNullAt(c)) vecs(c).setNull(n) else setters(c)(row, c, n)
+              c += 1
             }
             n += 1
           }
@@ -134,4 +163,7 @@ object ArrowIpcEncoder {
       } finally root.close()
     } finally allocator.close()
   }
+
+  def write(schema: StructType, rows: Iterator[Row], out: OutputStream): Unit =
+    writeInternal(schema, rows.map(RowEncoders.internalRow(schema)), out)
 }

@@ -13,8 +13,9 @@ import graft.server.QueryServer
   *
   * The reference guarantees server memory independent of result size
   * via a 1 MiB duplex (uquery-rs src/web/routers.rs:108); our
-  * equivalent is the toLocalIterator pull (one partition resident at a
-  * time) feeding each streaming encoder (ArrowIpcEncoder additionally
+  * equivalent is the partition-at-a-time pull of internal rows from the
+  * executed plan (one partition resident at a time) feeding each
+  * streaming encoder (ArrowIpcEncoder additionally
   * caps batches at 1024 rows). This spec makes the property FALSIFIABLE
   * instead of asserted: it first pins heap ballast so the JVM's free
   * slack is ~600 MiB, then streams a ~1.5 GiB result through each of
@@ -55,6 +56,7 @@ class MemoryBoundSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val Query =
     s"SELECT id, repeat('x', 1000) AS payload FROM range($Rows)"
   private val MinBytes = Rows * 1000L // payload alone, any encoding
+  private val BallastBlock = 256 * 1024
 
   override def beforeAll(): Unit = {
     srv = new QueryServer(spark, 0, poolSize = 2, queryTimeoutMillis = 120000)
@@ -64,13 +66,17 @@ class MemoryBoundSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (srv != null) srv.stop()
 
-  /** Fill the heap with 64 MiB ballast blocks until free slack drops to
-    * ~1.2 GiB. Returns the ballast (hold it; release = drop the ref). */
+  /** Fill the heap with ballast blocks until free slack drops to
+    * SlackMiB. Returns the ballast (hold it; release = drop the ref).
+    * The blocks stay below half of G1's smallest region (1 MiB), so none
+    * is a humongous allocation: a humongous block needs contiguous free
+    * regions and can fail with OOM while far more heap is free in
+    * pieces. */
   private def pinBallast(): java.util.ArrayList[Array[Byte]] = {
     val rt = Runtime.getRuntime
     System.gc()
     val ballast = new java.util.ArrayList[Array[Byte]]()
-    val block = 64 * 1024 * 1024
+    val block = BallastBlock
     val targetSlack = SlackMiB * 1024 * 1024
     var free = rt.maxMemory - (rt.totalMemory - rt.freeMemory)
     while (free - block > targetSlack) {
@@ -107,7 +113,7 @@ class MemoryBoundSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rt = Runtime.getRuntime
     val slackBytes =
       rt.maxMemory - (rt.totalMemory - rt.freeMemory)
-    info(s"ballast pinned: ${ballast.size()} x 64 MiB, free slack ~${slackBytes / (1024 * 1024)} MiB")
+    info(s"ballast pinned: ${ballast.size()} x ${BallastBlock / 1024} KiB, free slack ~${slackBytes / (1024 * 1024)} MiB")
     // partial-proof floor: more bytes than a fully-buffering server
     // could have held in the pinned free heap
     val proofBytes = slackBytes * 5 / 4

@@ -148,6 +148,79 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally { reader.close(); alloc.close() }
   }
 
+  test("TIMESTAMP_NTZ renders as DuckDB's naive TIMESTAMP in all four formats") {
+    import org.apache.arrow.memory.RootAllocator
+    import org.apache.arrow.vector.ipc.ArrowStreamReader
+    import org.apache.arrow.vector.types.pojo.ArrowType
+    // parquet timestamps written without UTC adjustment read as NTZ
+    assert(spark.table("orders").schema("o_orderdate").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    val cases = Seq(
+      ("SELECT o_orderdate AS ts FROM orders WHERE o_orderkey = 0",
+        "1997-01-15 00:00:00", java.time.LocalDateTime.of(1997, 1, 15, 0, 0)),
+      ("SELECT CAST('2024-01-02 03:04:05.12' AS TIMESTAMP_NTZ) AS ts",
+        "2024-01-02 03:04:05.12", java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5, 120000000)))
+    cases.foreach { case (sql, text, ldt) =>
+      def body(accept: String): String = {
+        val r = post(sql, accept = accept)
+        assert(r.statusCode() == 200, s"$accept: ${new String(r.body(), "UTF-8")}")
+        new String(r.body(), "UTF-8")
+      }
+      assert(body("text/csv") == s"ts\n$text\n")
+      assert(body("application/json") == s"""[{"ts":"$text"}]""")
+      assert(body("application/jsonl") == s"""{"ts":"$text"}\n""")
+      val r = post(sql, accept = "application/vnd.apache.arrow.stream")
+      val alloc = new RootAllocator(Long.MaxValue)
+      val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(r.body()), alloc)
+      try {
+        assert(reader.loadNextBatch())
+        val root = reader.getVectorSchemaRoot
+        val t = root.getSchema.findField("ts").getType.asInstanceOf[ArrowType.Timestamp]
+        assert(t.getUnit == org.apache.arrow.vector.types.TimeUnit.MICROSECOND && t.getTimezone == null)
+        assert(root.getVector("ts").getObject(0) == ldt) // naive vectors surface LocalDateTime
+      } finally { reader.close(); alloc.close() }
+    }
+  }
+
+  test("every job of a request, before and after the first row, runs under that request's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    // one job under a marker group: once the listener has seen it, it
+    // has seen every job started before it (the bus delivers in order)
+    def mark(name: String): Unit = {
+      spark.sparkContext.setJobGroup(name, name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(name), s"listener never saw marker $name")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      mark("mark-0")
+      assert(post("SELECT * FROM range(0, 200000, 1, 4)", accept = "text/csv").statusCode() == 200)
+      mark("mark-1")
+      assert(post("SELECT 1").statusCode() == 200)
+      mark("mark-2")
+      val seen = groups.asScala.toVector
+      def between(a: String, b: String) = seen.slice(seen.indexOf(a) + 1, seen.indexOf(b))
+      val first = between("mark-0", "mark-1")
+      val second = between("mark-1", "mark-2")
+      // one job per partition: the first runs on the request's future,
+      // the rest while the handler thread streams
+      assert(first.size >= 4, s"expected a job per partition: $first")
+      assert(first.distinct.size == 1 && first.head.startsWith("graft-query-"), first)
+      assert(second.nonEmpty && second.distinct.size == 1, second)
+      assert(second.head.startsWith("graft-query-") && second.head != first.head, second)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("content negotiation: first match wins, */* is JSON, unknown is 406") {
     assert(post(TestQuery, accept = "application/xml,application/vnd.apache.arrow.stream")
       .headers().firstValue("Content-Type").get() == "application/vnd.apache.arrow.stream")
