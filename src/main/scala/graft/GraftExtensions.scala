@@ -1913,7 +1913,7 @@ object GraftExtensions {
   /** Round-8 probe6 batch: list ordering/selection sugar, top-n
     * aggregate forms, temporal series/arithmetic dispatch, and the
     * reversed strftime argument order. Semantics pinned against DuckDB
-    * (see DialectProbe6 / DialectSpec "probe6 batch").
+    * (see DialectSpec "probe6 batch").
     */
   private[graft] val registrations6: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = {
     import org.apache.spark.sql.catalyst.expressions.{Add, Cast, CaseWhen, Expression => Expr, GreaterThanOrEqual, LambdaFunction, Literal, Not, Size, SortArray, Subtract, UnresolvedNamedLambdaVariable}
@@ -2160,8 +2160,8 @@ object GraftExtensions {
 
   /** Round-8 probe7 batch: binary/encoding helpers, bitstring bit
     * access, histogram, map_extract, regex flag forms, LIKE escapes,
-    * and misc sugar. Semantics pinned against DuckDB (DialectProbe7 /
-    * DialectSpec "probe7 batch").
+    * and misc sugar. Semantics pinned against DuckDB (DialectSpec
+    * "probe7 batch").
     */
   private[graft] val registrations7: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = {
     import org.apache.spark.sql.catalyst.expressions.{Add, Cast, CreateArray, CreateNamedStruct, Expression => Expr, If, ILike, LambdaFunction, Like, Literal, Size, Substring, UnresolvedNamedLambdaVariable}

@@ -117,59 +117,12 @@ object AudioDecode {
     out.toByteArray
   }
 
-  val synthWavUdf = udf(synthWav _)
-
-  /** Partition-batched REAL decode + feature extraction: parse the
-    * RIFF container via `AudioSystem`, pull the PCM frames, reduce to
-    * sample-accurate features. One pass per partition, constant memory
-    * per task, fixed output schema — the `mapInPandas`-equivalent batch
-    * shape in Scala. Input columns: (doc_id, payload: binary).
-    */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (docId, payload) =>
-          val ais = readWav(payload)
-          val fmt = ais.getFormat
-          require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
-            !fmt.isBigEndian && fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED,
-            s"unsupported WAV layout: $fmt")
-          val bytes = ais.readAllBytes()
-          ais.close()
-          val n = bytes.length / 2
-          var sumAbs = 0L; var sumSq = 0L; var peak = 0L
-          var i = 0
-          while (i < n) {
-            val v = ((bytes(2 * i + 1).toInt << 8) | (bytes(2 * i) & 0xff))
-            val a = math.abs(v.toLong)
-            sumAbs += a
-            sumSq += v.toLong * v
-            if (a > peak) peak = a
-            i += 1
-          }
-          def r6(x: Double): Double = math.round(x * 1e6) / 1e6
-          AudioFeatures(docId, n, fmt.getSampleRate.toInt,
-            r6(n * 1000.0 / fmt.getSampleRate.toDouble),
-            r6(sumAbs.toDouble / n),
-            r6(math.sqrt(sumSq.toDouble / n)),
-            peak)
-        }
-      }
-      .toDF()
-      .orderBy(col("doc_id").asc_nulls_last)
-  }
-
   /** r15 fused path for m_audio_features: synthesize AND decode inside
     * ONE mapPartitions over bare doc_ids — the WAV bytes never cross a
     * row boundary, removing two UnsafeRow encode/decode copies of every
     * payload (the UDF output and the Dataset re-read) that measured as
     * ~1.4 s of the operator's 2.1 s at sf0.1 while the REAL codec work
-    * (AudioSystem RIFF parse + PCM reduce, identical code path to
-    * [[extractFeatures]]) is 0.35–0.7 s. Same decode, same features,
-    * same output schema.
+    * (AudioSystem RIFF parse + PCM reduce) is 0.35–0.7 s.
     */
   def synthAndExtract(ids: DataFrame): DataFrame = {
     val spark = ids.sparkSession

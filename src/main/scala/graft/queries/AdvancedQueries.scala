@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 /** SURVEY.md §7 step 5 — advanced operators: AS-OF join, positional
   * join, event-time windowing and sessionization over the `events`
   * table (batch semantics — the reference has no streaming plane,
-  * SURVEY §2.2 J; the Structured Streaming realization of the same
-  * windows lives in graft.streaming and is spec-tested).
+  * SURVEY §2.2 J).
   *
   * Timestamp discipline: events.ts is ns in parquet; both engines are
   * driven through an explicit ns→µs truncation, and all time

@@ -22,12 +22,11 @@ import org.apache.spark.sql.types.DecimalType
   *   - n_kmv_distinct (bottom-k / Theta-sketch cardinality with the
   *     exact-when-not-full rule, planned as TakeOrderedAndProject);
   *   - n_time_decay_agg (half-life counters with the rescaling merge
-  *     law the DecayedCounter Aggregator carries to streams).
+  *     law, spec-proved on split halves).
   *
   * TEXT / SIMILARITY OPERATORS:
   *   - n_winnowing (MOSS fingerprints; the w+k-1 guarantee is
-  *     spec-proved, and winnowFpArray is the row-local fused form the
-  *     streaming screen evaluates per arrival);
+  *     spec-proved);
   *   - n_sorted_neighborhood (merge/purge blocking, O(n log n + nw));
   *   - n_tfidf_cosine (two-phase sparse cosine: >= 2-of-top-5-term
   *     candidate agreement, then an exact decimal rerank);
@@ -59,31 +58,11 @@ object Round10Queries extends QueryModule {
   private def h52(salt: String, key: Column): Column =
     conv(substring(md5(concat(lit(salt), key)), 1, 13), 16, 10).cast("bigint")
 
-  /** The n_kmv_distinct key hash — shared with the streaming face
-    * (EventStreams.kmvShards) so stream and batch sketch identical
-    * values.
-    */
-  private[graft] def kmvHash(userId: Column): Column =
+  /** The n_kmv_distinct key hash (md5 prefix, so DuckDB hashes
+    * identically). */
+  private def kmvHash(userId: Column): Column =
     conv(substring(md5(concat(lit("graft-kmv:"), userId.cast("string"))), 1, 13),
       16, 10).cast("bigint")
-
-  /** Row-local winnowing fingerprint ARRAY for a token-array column —
-    * the same distinct window minima as [[winnowFingerprints]] but as
-    * one fused expression (no explode, no window shuffle): the shape a
-    * STREAM can evaluate per arrival row. StreamingSpec proves it
-    * equals the windowed batch relation doc for doc.
-    */
-  private[graft] def winnowFpArray(w: Column): Column = {
-    val ghs = transform(sequence(lit(1), size(w) - 3), p =>
-      conv(substring(md5(concat(lit("graft-win:"),
-        concat_ws(" ", element_at(w, p), element_at(w, p + 1),
-          element_at(w, p + 2), element_at(w, p + 3)))), 1, 13), 16, 10)
-        .cast("bigint"))
-    when(size(w) >= 7,
-      array_distinct(transform(sequence(lit(1), size(w) - 6), s =>
-        array_min(slice(ghs, s, lit(4))))))
-      .otherwise(array().cast("array<bigint>"))
-  }
 
   /** The winnowing fingerprint relation (doc_id, fph): distinct window
     * minima of 52-bit 4-gram hashes, w=4. Shared with Round10Spec,
@@ -848,7 +827,7 @@ object Round10Queries extends QueryModule {
         FROM m ORDER BY source ASC NULLS LAST, n ASC NULLS LAST""")),
 
     Q("n_trending",
-      "Trending ranking — half-life-decayed activity per key, top-10 (the composition every trending/leaderboard system runs: the n_time_decay_agg counter per user, 1-day half-life, ranked): decay factors are the same portable rounded-pow construction, per-user sums are exact decimals, and the ranking ships as TakeOrderedAndProject. The fixture shows why decay matters: the top user's 81 recent events outrank another's 85 staler ones. Scale shape: one partial-combined key-keyed aggregate + a k-row merge; as a stream this is DecayedCounter per key + TopKByScore — both already spec-proved mergeable.",
+      "Trending ranking — half-life-decayed activity per key, top-10 (the composition every trending/leaderboard system runs: the n_time_decay_agg counter per user, 1-day half-life, ranked): decay factors are the same portable rounded-pow construction, per-user sums are exact decimals, and the ranking ships as TakeOrderedAndProject. The fixture shows why decay matters: the top user's 81 recent events outrank another's 85 staler ones. Scale shape: one partial-combined key-keyed aggregate + a k-row merge.",
       (s, dir) => {
         val mx = T(s, dir, "events").agg(max(col("ts")).as("tmax"))
         T(s, dir, "events").crossJoin(broadcast(mx))

@@ -63,18 +63,6 @@ object Round11Queries extends QueryModule {
   private def h52(salt: String, key: Column): Column =
     conv(substring(md5(concat(lit(salt), key)), 1, 13), 16, 10).cast("bigint")
 
-  /** The n_hll_distinct hash — shared with the streaming HLL shard
-    * face so stream and batch hash identically.
-    */
-  private[graft] def hllHash(userId: Column): Column =
-    h52("graft-hll:", userId.cast("string"))
-
-  /** The n_quantile_sketch hash — shared with the streaming sample
-    * shard face so stream and batch select the identical bottom-k.
-    */
-  private[graft] def qskHash(eventId: Column): Column =
-    h52("graft-qsk:", eventId.cast("string"))
-
   /** Whitespace tokens with empties dropped, as (doc_id, w). */
   // r15: spread the single-split doc scan so the token explode
   // parallelizes (guide §2.5)
@@ -86,7 +74,7 @@ object Round11Queries extends QueryModule {
   override val queries: Seq[Q] = Seq(
 
     Q("n_hll_distinct",
-      "HyperLogLog cardinality (Flajolet-Fuchs-Gandouet-Meunier, m=64 registers): every event hashes to a portable md5-52-bit value, the low 6 bits pick a register, and the register keeps the MAX leading-zero rank of the remaining 46 bits — so the sketch is 64 bytes of state however many events stream through, merges across shards/streams by elementwise MAX (the law the KMV/CMS tier already property-tests), and the harmonic-mean estimate carries the standard small-range linear-counting correction (est <= 2.5m with empty registers -> m*ln(m/V)). Scale shape: one partial-combined 64-group aggregate; nothing but 64 (register, rank) pairs ever crosses the wire.",
+      "HyperLogLog cardinality (Flajolet-Fuchs-Gandouet-Meunier, m=64 registers): every event hashes to a portable md5-52-bit value, the low 6 bits pick a register, and the register keeps the MAX leading-zero rank of the remaining 46 bits — so the sketch is 64 bytes of state however many events stream through, merges across shards/streams by elementwise MAX, and the harmonic-mean estimate carries the standard small-range linear-counting correction (est <= 2.5m with empty registers -> m*ln(m/V)). Scale shape: one partial-combined 64-group aggregate; nothing but 64 (register, rank) pairs ever crosses the wire.",
       (s, dir) => {
         val rr = T(s, dir, "events")
           .select(h52("graft-hll:", col("user_id").cast("string")).as("hv"))

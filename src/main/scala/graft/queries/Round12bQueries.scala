@@ -173,8 +173,7 @@ object Round12bQueries extends QueryModule {
         // (source, token) counts (distinct w across sources) — replaces
         // a second full corpus token explode with an aggregate over the
         // cache
-        val vocab = broadcast(
-          cnt.agg(countDistinct(col("w")).cast("double").as("v")))
+        val vocab = cnt.agg(countDistinct(col("w")).cast("double").as("v"))
         val inner = cnt
           .select(col("source").as("train_source"), col("w"), col("c").as("ca"))
           .join(cnt.select(col("source").as("eval_source"), col("w"),

@@ -93,10 +93,9 @@ object Round8Queries extends QueryModule {
   /** Seeded priority w/u for priority sampling: u's mantissa is the
     * first 13 hex digits of md5("graft-ps-42:"+doc_id) — 52 bits,
     * exactly double-representable, so any engine computes the same two
-    * IEEE ops on the same operands. Shared by n_priority_sample and the
-    * streaming shard variant so stream ≡ batch bit-for-bit.
+    * IEEE ops on the same operands (n_priority_sample).
     */
-  def priorityExpr: org.apache.spark.sql.Column =
+  private def priorityExpr: org.apache.spark.sql.Column =
     round(col("n_chars").cast("double") * lit(4503599627370496.0)
       / (conv(substring(md5(concat(lit("graft-ps-42:"), col("doc_id").cast("string"))), 1, 13),
           16, 10).cast("long") + lit(1)).cast("double"), 4)

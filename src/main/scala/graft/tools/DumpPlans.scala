@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 import graft.{GraftSession, SparkEntry}
 
 /** Dev tool: dumps `explain(formatted)` for the flagship queries to
-  * PLANS.md — the committed evidence that filters push down, dims
-  * broadcast, and hot paths stay in whole-stage codegen.
+  * PLANS.md (generated on demand, not committed) — the evidence that
+  * filters push down, dims broadcast, and hot paths stay in
+  * whole-stage codegen.
   * `sbt 'runMain graft.tools.DumpPlans /root/testdata/sf0.01'`
   */
 object DumpPlans {

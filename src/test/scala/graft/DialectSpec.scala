@@ -4,6 +4,7 @@ import graft.server.{Dialect, QueryServer}
 import org.apache.spark.sql.functions.col
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.util.control.NonFatal
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -2462,5 +2463,32 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
       "regexp_replace('12.5','\\d+','\\2\\1','g') AS b, " +
       "regexp_replace('  pad  hello world', '[a-z]+', '\\2\\1') AS c",
       """[{"a":"xab","b":"12.5","c":"  pad  hello world"}]""")
+  }
+
+  test("DuckDB spelling table: each runs, rejected ones stay loud, pinned values match") {
+    T.views(spark, sf, "region", "orders", "lineitem")
+    def served(sql: String) = Dialect.sqlServed(spark, Dialect.rewrite(spark, sql)).collect()
+    def error(sql: String, e: Throwable) =
+      s"$sql\n  -> ${String.valueOf(e.getMessage).linesIterator.take(1).mkString}"
+    def firstRow(rows: Array[org.apache.spark.sql.Row]) = rows(0).toSeq.map {
+      case null => "null"
+      case xs: scala.collection.Seq[_] => xs.mkString("[", ",", "]")
+      case x => x.toString
+    }.mkString(", ")
+    val csv = Seq(s"SELECT * FROM read_csv_auto('$csvPath')",
+      s"SELECT * FROM read_csv('$csvPath', header = true)")
+    val failed = (DialectSpellings.run ++ csv).flatMap { sql =>
+      try { served(sql); None } catch { case NonFatal(e) => Some(error(sql, e)) }
+    } ++ DialectSpellings.loud.flatMap { sql =>
+      try { served(sql); Some(s"$sql\n  -> ran, but must raise an error") }
+      catch { case NonFatal(_) => None }
+    } ++ DialectSpellings.values.flatMap { case (sql, want) =>
+      try {
+        val rows = served(sql)
+        val got = if (want.endsWith("rows")) s"${rows.length}rows" else firstRow(rows)
+        if (got == want) None else Some(s"$sql\n  -> $got, want $want")
+      } catch { case NonFatal(e) => Some(error(sql, e)) }
+    }
+    assert(failed.isEmpty, s"${failed.size} spellings failed:\n${failed.mkString("\n")}")
   }
 }

@@ -365,23 +365,4 @@ class Round10Spec extends AnyFunSuite {
       assert(r.getDouble(2) > 0.0 && r.getDouble(2) <= r.getLong(1))
     }
   }
-
-  test("KmvSketch: merge law — sharded/permuted feeds reproduce the single-pass sketch") {
-    val kmv = graft.operators.KmvSketch(8)
-    val xs = Seq(923L, 14L, 77L, 14L, 500L, 3L, 77L, 81L, 402L, 7L, 900L, 3L,
-      650L, 12L, 88L, 41L)
-    val single = xs.foldLeft(kmv.zero)(kmv.reduce)
-    // dedup'd, sorted, capped
-    assert(single == xs.distinct.sorted.take(8))
-    // any sharding merges back to the same sketch
-    for (nShards <- 2 to 4) {
-      val shards = xs.zipWithIndex.groupBy(_._2 % nShards).values
-        .map(_.map(_._1).foldLeft(kmv.zero)(kmv.reduce))
-      assert(shards.foldLeft(kmv.zero)(kmv.merge) == single)
-    }
-    // permutation invariance
-    assert(xs.reverse.foldLeft(kmv.zero)(kmv.reduce) == single)
-    // estimate: non-full is exact
-    assert(graft.operators.KmvSketch.estimate(Seq(1L, 2L, 3L), 8) == 3.0)
-  }
 }
