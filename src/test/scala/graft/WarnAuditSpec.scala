@@ -1,170 +1,42 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
-
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.LoggerContext
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.LogEvent
-import org.apache.spark.sql.Row
-import org.scalatest.concurrent.{Signaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.SpanSugar._
 
 /** Round-5 brief #2: the bench tail must contain ZERO
   * `WindowExec: No Partition Defined` warns, so that any future warn
-  * is a regression signal instead of known noise. This spec runs the
-  * FULL query inventory with a log4j appender attached and fails on
-  * the first unpartitioned window, naming the query that planned it.
+  * is a regression signal instead of known noise. This spec audits the
+  * WARNs logged while InventorySweep ran the FULL query inventory and
+  * fails on the first unpartitioned window, naming the query that
+  * planned it.
   *
   * Round-8 verdict #2 extended the invariant: the inventory re-invokes
   * GraftExtensions.injectInto on one session (every SQL-declared query
   * calls it), which used to re-register the full dialect surface and
   * emit `replaced a previously registered function` WARNs in the bench
   * tail. Registration is now once-per-session and drop-before-register,
-  * so this audit also fails on ANY function-replacement warn.
-  *
-  * This is also the suite's one full-inventory sweep: every query must
-  * run at sf0.001 (each failure is collected and named), the flagship
-  * queries must return rows, and the seeded sample must reproduce
-  * itself. Each query runs under a time limit, so a hang names its
-  * query instead of stalling the run.
+  * so this audit also fails on ANY function-replacement warn, and on
+  * any HintErrorLogger warn, codegen fallback or task binary beyond the
+  * bloom-filter budget.
   */
-class WarnAuditSpec extends AnyFunSuite with TimeLimits {
-  import TestSpark._
-
-  /** Over 10× the slowest query of the sweep at sf0.001 (under 3 s on
-    * 4 cores). */
-  private val QueryLimit = 60.seconds
-
-  /** On timeout, cancel the query's jobs and interrupt the sweep. */
-  private implicit val signaler: Signaler = Signaler { t =>
-    spark.sparkContext.cancelAllJobs()
-    t.interrupt()
-  }
-
-  private val MustBeNonEmpty = Seq("q1_pricing_summary", "c_join_inner_5way",
-    "n_dedup_exact", "n_cosine_topk_bruteforce", "n_text_stats",
-    "j_sessionization", "c_join_asof", "m_binary_metadata")
-  private val SeededSample = "i_sample_seeded"
+class WarnAuditSpec extends AnyFunSuite {
+  import InventorySweep.result
 
   test("no query plans an unpartitioned (single-task) window, no function-replacement warns") {
-    // force session creation FIRST: Spark's Logging.initializeLogging
-    // replaces a default log4j2 configuration with its own on first
-    // use, which would silently drop an appender attached earlier
-    spark.range(1).collect()
-    val hits = ArrayBuffer[String]()
-    // (query, MiB) for every large-task-binary warn — bounded against
-    // the per-query runtime-bloom-filter budget after the sweep
-    val binHits = ArrayBuffer[(String, Double)]()
-    val bloomCounts = scala.collection.mutable.Map[String, Int]()
-    val failures = ArrayBuffer[String]()
-    val kept = scala.collection.mutable.Map[String, Seq[Row]]()
-    @volatile var current = "<init>"
-    val appender: AbstractAppender =
-      new AbstractAppender("graft-warn-audit", null, null, true,
-          Array.empty[org.apache.logging.log4j.core.config.Property]) {
-        override def append(e: LogEvent): Unit =
-          if (e.getLevel.isMoreSpecificThan(Level.WARN)) {
-            val msg = e.getMessage.getFormattedMessage
-            if (msg.contains("No Partition Defined"))
-              hits.synchronized { hits += current }
-            else if (msg.contains("replaced a previously registered function"))
-              hits.synchronized { hits += s"$current[fn-replace]" }
-            else if (e.getLoggerName.endsWith(".HintErrorLogger"))
-              // round-12 verdict #1: HintErrorLogger silently drops
-              // hints it cannot apply (unsupported, or not on a join
-              // relation) — the intended plan is NOT what runs. Any
-              // drop is a regression.
-              hits.synchronized { hits += s"$current[hint-drop]" }
-            else if (msg.contains("falling back to interpreter mode") ||
-                     msg.contains("Expr codegen error"))
-              // round-14 verdict #1: a custom Expression whose doGenCode
-              // emits Java that Janino cannot compile silently drops the
-              // WHOLE projection to interpreted execution (values stay
-              // correct, the plan degrades). Third silent-degradation
-              // class after hint drops and task binaries — any fallback
-              // is a regression, naming the query that triggered it.
-              hits.synchronized { hits += s"$current[codegen-fallback]" }
-            else if (msg.contains("Broadcasting large task binary")) {
-              // round-13 verdict #2 / round-14 attribution: the 2–3 MiB
-              // task binaries in the bench tail are Spark's RUNTIME
-              // BLOOM FILTERS (InjectRuntimeFilter): each injected
-              // filter embeds its 8388608-bit ≈ 1 MiB bitmap in the
-              // stage that applies it (measured: 2 filters → 2.1 MiB,
-              // 3 → 3.1 MiB on the ANN-tier joins) — the filter is
-              // data-independent (conf-bounded) and prunes the probe
-              // scan, the right trade at scale. The audit therefore
-              // bounds each query's binaries at 2 MiB of NON-bloom
-              // payload plus 1.1 MiB per might_contain in its
-              // optimized plan; anything beyond that is new closure/
-              // codegen bloat and fails, naming the query.
-              val mib = """([0-9.]+)\s*(KiB|MiB)""".r.findFirstMatchIn(msg).map {
-                m =>
-                  val v = m.group(1).toDouble
-                  if (m.group(2) == "KiB") v / 1024.0 else v
-              }.getOrElse(0.0)
-              if (mib > 2.0)
-                binHits.synchronized { binHits += (current -> mib) }
-            }
-          }
-      }
-    appender.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val cfg = ctx.getConfiguration
-    cfg.getRootLogger.addAppender(appender, Level.WARN, null)
-    ctx.updateLoggers()
-    try {
-      // explicit double-injection probe: both calls must be silent
-      // (first is drop-before-register, second is a per-session no-op)
-      current = "injectInto-twice"
-      GraftExtensions.injectInto(spark)
-      GraftExtensions.injectInto(spark)
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        current = name
-        withClue(s"$name: ") {
-          failAfter(QueryLimit) {
-            try {
-              val df = fn(spark, sf)
-              // bloom allowance must be counted on the plan AS EXECUTED in
-              // this sweep — a re-derived plan sees materialized caches and
-              // loses the injected filters
-              bloomCounts(name) = "might_contain".r
-                .findAllIn(df.queryExecution.optimizedPlan.toString).size
-              val rows = df.collect().toSeq
-              if (name == SeededSample || MustBeNonEmpty.contains(name)) kept(name) = rows
-            } catch {
-              case NonFatal(e) =>
-                failures += s"$name: ${String.valueOf(e.getMessage).linesIterator.take(1).mkString}"
-            }
-          }
-        }
-      }
-    } finally {
-      cfg.getRootLogger.removeAppender("graft-warn-audit")
-      ctx.updateLoggers()
-      appender.stop()
-    }
-    assert(failures.isEmpty, failures.mkString("\n"))
-    val byQuery = hits.synchronized { hits.toSeq }.groupBy(identity)
+    val byQuery = result.hits.groupBy(identity)
       .view.mapValues(_.size).toSeq.sortBy(-_._2)
     assert(byQuery.isEmpty,
       s"WARN audit hits (query[kind], count): ${byQuery.mkString(", ")}")
     // task-binary budget check: worst observed size per query vs its
     // runtime-bloom-filter allowance (2 MiB base + 1.1 MiB per
     // might_contain in the optimized plan)
-    val worst = binHits.synchronized { binHits.toSeq }
+    val worst = result.binHits
       .groupBy(_._1).view.mapValues(_.map(_._2).max).toSeq.sortBy(-_._2)
     val over = worst.flatMap { case (q, mib) =>
-      val nBloom = bloomCounts.getOrElse(q, 0)
+      val nBloom = result.bloomCounts.getOrElse(q, 0)
       val allowed = 2.0 + 1.1 * nBloom
       if (mib > allowed) Some(f"$q: $mib%.1f MiB > allowed $allowed%.1f ($nBloom bloom filters)")
       else None
     }
     assert(over.isEmpty, s"task binaries beyond the bloom-filter budget: ${over.mkString("; ")}")
-    MustBeNonEmpty.foreach(name => assert(kept(name).nonEmpty, s"$name is empty"))
-    assert(kept(SeededSample) == SparkEntry.queries(SeededSample)(spark, sf).collect().toSeq,
-      s"$SeededSample differs between runs")
   }
 }
