@@ -70,7 +70,7 @@ object Bench {
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.queries.DedupQueries.release(spark)
+      Retained.release(spark)
       dt
     }
     // Load context (round-8 verdict #1): BENCH_r08 ran 40% over the
@@ -107,7 +107,6 @@ object Bench {
         best = math.min(best, once(n, f))
       n -> best
     }
-    graft.queries.DedupQueries.release(spark)
     val loadEnd = loadavg
 
     def fmt(v: Double): String = f"$v%.3f"

@@ -32,6 +32,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures += name -> String.valueOf(e.getMessage).take(500)
       }
+      // free the query's persisted intermediates before the next one
+      Retained.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.Retained
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components by min-label propagation — the
   * production dedup step AFTER near-dup pair verification: pairs form
@@ -18,39 +18,18 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  // returned label frames stay persisted for their consumers; track
-  // them per session so release() can free the blocks after a bench/
-  // verify pass (same lifecycle discipline as DedupQueries.release)
-  private val retained =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, Unit]()
-
-  /** Unpersist every label frame handed out by [[labels]]. */
-  def release(): Unit = {
-    val it = retained.keySet().iterator()
-    while (it.hasNext) {
-      try it.next().unpersist(blocking = false)
-      catch { case _: Throwable => }
-      it.remove()
-    }
-  }
-
   /** @param edgesIn (u, v) pairs, one row per undirected edge.
-    * @return (id, label): label = min id of the component.
+    * @return (id, label): label = min id of the component. Every frame
+    *         the iteration persists is registered with [[graft.Retained]]
+    *         under the edges' session: the intermediates are freed as
+    *         soon as the fixpoint no longer reads them, and the returned
+    *         label frame stays persisted until that session's release.
     */
-  /** Persist unless this exact plan is already in the cache (a repeat
-    * call — e.g. a bench re-run — would otherwise trip the
-    * CacheManager's "already cached" WARN and double-book the blocks).
-    * Returns the frame plus whether WE own the persist.
-    */
-  private def cacheOnce(df: DataFrame): (DataFrame, Boolean) =
-    if (df.storageLevel != StorageLevel.NONE) (df, false)
-    else (df.persist(StorageLevel.MEMORY_AND_DISK), true)
-
   def labels(edgesIn: DataFrame): DataFrame = {
     // materialize the input ONCE before fanning out: the 4-way union
     // below would otherwise re-run the (possibly expensive) upstream
     // pair pipeline once per branch
-    val (halfRaw, ownHalfRaw) = cacheOnce(edgesIn.select(col("u"), col("v")))
+    val halfRaw = Retained(edgesIn.select(col("u"), col("v")))
     val nEdges = halfRaw.count()
     // size-adaptive parallelism (the same runtime re-plan AQE applies
     // to single queries, done here for the iteration): each superstep
@@ -61,24 +40,23 @@ object ConnectedComponents {
     val spark = edgesIn.sparkSession
     val parts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, nEdges / 100000L + 1L)).toInt
-    val (half, ownHalf) = cacheOnce(halfRaw.repartition(parts))
+    val half = Retained(halfRaw.repartition(parts))
     half.count()
-    if (ownHalfRaw) halfRaw.unpersist(blocking = false)
+    Retained.free(halfRaw)
     if (nEdges == 0L) {
       // no edges → no clusters; short-circuit (the Σlabel witness
       // below would read a NULL aggregate off an empty frame)
-      if (ownHalf) half.unpersist(blocking = false)
+      Retained.free(half)
       return half.select(col("u").as("id"), col("u").as("label"))
     }
     // both directions PLUS self-loops: one join+min per superstep then
     // covers "own label vs neighbors' labels" without a second join
-    val (edges, ownEdges) = cacheOnce(half
+    val edges = Retained(half
       .union(half.select(col("v").as("u"), col("u").as("v")))
       .union(half.select(col("u"), col("u").as("v")))
       .union(half.select(col("v").as("u"), col("v")))
       .distinct())
-    var (lab, ownLab) = cacheOnce(
-      edges.select(col("u").as("id"), col("u").as("label")).distinct())
+    var lab = Retained(edges.select(col("u").as("id"), col("u").as("label")).distinct())
     // labels only ever DECREASE, so Σlabel is a fixpoint witness: it
     // strictly drops until convergence — one cheap aggregate per
     // superstep instead of a compare join
@@ -98,19 +76,18 @@ object ConnectedComponents {
       // GraphFrames CC checkpoints periodically). The label frame is
       // tiny (one row per graph node), so the checkpoint job is the
       // same work the convergence aggregate was already forcing.
-      val next = edges.join(lab.withColumnRenamed("id", "v"), "v")
+      val next = Retained(edges.join(lab.withColumnRenamed("id", "v"), "v")
         .groupBy(col("u").as("id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
+        .localCheckpoint(true))
       val s = sumLabels(next)
       converged = s == prevSum
       prevSum = s
-      if (ownLab) lab.unpersist(blocking = false)
+      Retained.free(lab)
       lab = next
-      ownLab = true // checkpointed frames carry their own storage
       iter += 1
     }
-    if (ownEdges) edges.unpersist(blocking = false)
-    if (ownHalf) half.unpersist(blocking = false)
+    Retained.free(edges)
+    Retained.free(half)
     // a silent partial merge would be wrong-but-plausible output; the
     // cap exists only to bound pathological inputs, so overrunning it
     // must fail loudly (project rule: an error beats silently-different)
@@ -118,7 +95,6 @@ object ConnectedComponents {
       s"connected components did not converge within $MaxSupersteps supersteps " +
         "(component diameter exceeds the cap) — raise MaxSupersteps or " +
         "pre-contract the graph")
-    if (ownLab) retained.put(lab, ())
     lab
   }
 }

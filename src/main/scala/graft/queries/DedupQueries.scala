@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,72 +13,18 @@ import org.apache.spark.sql.functions._
   * near-dup pipelines never build the O(n²) pair space: candidate
   * pairs come from an equi-join on shingles (bounded bucket sizes) or
   * LSH band buckets, and only candidates are exactly verified.
+  *
+  * Lifecycle: the shared relations (capped shingles, the pair
+  * intersections, the cluster labels) are persisted and memoized per
+  * (session, dir) through [[graft.Retained]], so every query of the
+  * family reads one materialization. They live until the session's
+  * `Retained.release`, which the inventory loops call after each query.
   */
 object DedupQueries extends QueryModule {
 
-  /** Distinct DF-capped 3-gram word shingles per doc: (doc_id, shingle).
-    * Persisted and memoized per (session, dir): every consumer
-    * self-joins or multi-references this relation, and recomputing the
-    * split+explode shuffle (and the DF-cap window) per reference
-    * dominated the bench. Caching the CAPPED relation also makes the
-    * cap a one-time cost instead of one window per reference, and it
-    * guarantees every dedup pipeline — jaccard pairs, MinHash
-    * signatures, the LSH exact-verify — computes Jaccard over the SAME
-    * shingle set (round-4 advice: verify on uncapped shingles while
-    * pairing on capped ones silently mixes two Jaccard definitions).
-    * The memo means exactly one persist call (no "already cached" WARN
-    * from the CacheManager); callers that finish with dedup work
-    * release the blocks explicitly via [[release]] instead of waiting
-    * for the ContextCleaner.
-    */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  // ad-hoc persisted relations from dedup-family queries (e.g. the
-  // decontamination gram table), freed together with the shingles
-  private val retained =
-    new java.util.concurrent.ConcurrentHashMap[DataFrame, Unit]()
-
-  /** Persist a dedup-family intermediate and register it for release.
-    * Idempotent on the PLAN: a repeat invocation of the same query
-    * (bench min-of-2) reuses the cached blocks instead of tripping the
-    * CacheManager's "already cached" WARN.
-    */
-  def retain(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      retained.put(p, ())
-      p
-    }
-
-  /** Explicitly unpersist the shared shingle relation(s) of a session
-    * plus downstream retained relations (cluster label frames,
-    * decontamination gram tables).
-    */
-  def release(s: SparkSession): Unit = {
-    graft.operators.ConnectedComponents.release()
-    val pit = pairsCache.keySet().iterator()
-    while (pit.hasNext) { if (pit.next()._1 eq s) pit.remove() }
-    val lit2 = labelsCache.keySet().iterator()
-    while (lit2.hasNext) { if (lit2.next()._1 eq s) lit2.remove() }
-    val rit = retained.keySet().iterator()
-    while (rit.hasNext) {
-      try rit.next().unpersist(blocking = false)
-      catch { case _: Throwable => }
-      rit.remove()
-    }
-    val it = shingleCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try e.getValue.unpersist(blocking = false)
-        catch { case _: Throwable => }
-        it.remove()
-      }
-    }
-  }
-
+  /** `Retained.release(s)`, kept for callers compiled against it
+    * (the perfbench harness). */
+  def release(s: SparkSession): Unit = Retained.release(s)
 
   /** Hot-bucket ceiling for the candidate-pair self-joins, read per
     * query from `spark.graft.dedup.<knob>` (default 1000). A self-join
@@ -122,14 +68,19 @@ object DedupQueries extends QueryModule {
     df.join(over, keys, "left_anti")
   }
 
-  /** Shingles with stop-shingles (document frequency > cap) removed —
-    * the relation every candidate self-join AND every exact-verify
-    * must run on, so all dedup queries share one Jaccard definition.
+  /** Distinct 3-gram word shingles per doc, (doc_id, sh), with
+    * stop-shingles (document frequency > cap) removed — the relation
+    * every candidate self-join AND every exact-verify must run on, so
+    * all dedup queries share one Jaccard definition (round-4 advice:
+    * verifying on uncapped shingles while pairing on capped ones
+    * silently mixes two Jaccard definitions). Retained and memoized per
+    * (session, dir): every consumer self-joins or multi-references this
+    * relation, and recomputing the split+explode shuffle and the cap
+    * per reference dominated the bench.
     */
   def cappedShingles(s: SparkSession, dir: String): DataFrame =
-    shingleCache.computeIfAbsent((s, dir), _ =>
-      capBuckets(buildShingles(s, dir), maxBucket(s, "maxShingleDf"), "sh")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Retained.memo(s, ("dedup.shingles", dir))(Retained(
+      capBuckets(buildShingles(s, dir), maxBucket(s, "maxShingleDf"), "sh")))
 
   /** (doc_id, h0): each distinct capped shingle hashed once to 8
     * bytes — the shared input of the MinHash signature and the exact
@@ -150,7 +101,7 @@ object DedupQueries extends QueryModule {
   def gramPositions(s: SparkSession, dir: String): DataFrame =
     // r15: spread the single-split doc scan so the gram explode
     // parallelizes (guide §2.5, same as buildShingles below)
-    retain(T.par(s, dir, "documents")
+    Retained(T.par(s, dir, "documents")
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
       .select(col("doc_id"),
@@ -192,7 +143,7 @@ object DedupQueries extends QueryModule {
     // signature aggregation runs once per side (measured: 2.2 s of
     // the 3.4 s candidate phase at sf0.1 was the duplicated
     // signature pass; the cache collapses it to one)
-    val banded = retain(capBuckets(
+    val banded = Retained(capBuckets(
       sig.select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, 7), b -> xxhash64(slice(sig, b * 4 + 1, 4)))"))
         .as(Seq("band", "bandhash"))),
@@ -219,7 +170,7 @@ object DedupQueries extends QueryModule {
     // band by 4×16-bit chunks: Hamming ≤ 3 guarantees one equal chunk
     // retained for the same both-sides-of-the-self-join reason as the
     // LSH banded relation (4 rows/doc)
-    val chunks = retain(capBuckets(
+    val chunks = Retained(capBuckets(
       sim.select(col("doc_id"), col("simhash"),
         posexplode(expr(
           "transform(sequence(0, 3), c -> (simhash >> (c * 16)) & 65535)"))
@@ -234,18 +185,6 @@ object DedupQueries extends QueryModule {
       .distinct()
   }
 
-  /** Exact 3-gram-Jaccard ≥ 0.5 near-dup pairs (id_a < id_b): the
-    * verified edge set shared by the pair query, the cluster
-    * (connected-components) query, and quality-aware survivorship.
-    * Memoized per (session, dir) with the same lifecycle as the
-    * shingle relation: a production pipeline materializes the verified
-    * pair graph ONCE and feeds every downstream consumer from it —
-    * recomputing the candidate self-join per consumer would multiply
-    * the most expensive shuffle in the whole dedup family.
-    */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** (id_a, id_b, inter, na, nb) for every candidate pair sharing at
     * least one capped shingle — the SINGLE most expensive shuffle in
     * the dedup family, memoized because symmetric Jaccard (≥ 0.5),
@@ -253,8 +192,12 @@ object DedupQueries extends QueryModule {
     * them are just different ratio filters over this one relation.
     */
   def pairIntersections(s: SparkSession, dir: String): DataFrame =
-    pairsCache.computeIfAbsent((s, dir), _ => retain(pairIntersectionsUncached(s, dir)))
+    Retained.memo(s, ("dedup.pairs", dir))(Retained(pairIntersectionsUncached(s, dir)))
 
+  /** Exact 3-gram-Jaccard ≥ 0.5 near-dup pairs (id_a < id_b): the
+    * verified edge set shared by the pair query, the cluster
+    * (connected-components) query, and quality-aware survivorship.
+    */
   def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     pairIntersections(s, dir)
       // filter on the RAW ratio exactly like the oracle does — filtering
@@ -269,10 +212,8 @@ object DedupQueries extends QueryModule {
     * and both the cluster report and keep-best survivorship consume
     * the SAME label frame.
     */
-  private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    labelsCache.computeIfAbsent((s, dir), _ =>
+    Retained.memo(s, ("dedup.labels", dir))(
       graft.operators.ConnectedComponents.labels(
         jaccardPairs(s, dir).select(col("id_a").as("u"), col("id_b").as("v"))))
 

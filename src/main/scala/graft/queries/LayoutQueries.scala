@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.functions._
 
 /** Storage-layout and ingestion-maintenance operators a 100 TB
@@ -124,7 +124,7 @@ object LayoutQueries extends QueryModule {
         // r15: retained — the rank probe and the order-statistic targets
         // both read the ~105-row band relation; uncached its scan+agg
         // chain re-ran per consumer
-        val offs = DedupQueries.retain(
+        val offs = Retained(
           banded.groupBy(col("band")).agg(count(lit(1)).as("bn"))
             .withColumn("boff",
               coalesce(sum(col("bn")).over(

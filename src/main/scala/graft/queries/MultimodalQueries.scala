@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -137,7 +137,7 @@ object MultimodalQueries extends QueryModule {
         // r15: retain the tiny (doc_id, h1, h2) hash relation — both
         // sides of the all-pairs join otherwise recompute the full PNG
         // synth+decode chain (the query's dominant CPU) once each
-        val dh = DedupQueries.retain(graft.operators.MediaDecode.dHash(media))
+        val dh = Retained(graft.operators.MediaDecode.dHash(media))
         dh.as("a").join(dh.as("b"), col("a.doc_id") < col("b.doc_id"))
           .withColumn("hamming",
             expr("bit_count(a.h1 ^ b.h1) + bit_count(a.h2 ^ b.h2)"))
@@ -194,7 +194,7 @@ object MultimodalQueries extends QueryModule {
           .unionAll(T.spread(ids, cpuDense = true).select((col("doc_id") + 100000).as("doc_id"),
             graft.operators.MediaDecode.synthPngTextured32x2Udf(col("doc_id")).as("payload")))
         // r15: retain — see m_image_dhash_dedup (2x decode otherwise)
-        val ph = DedupQueries.retain(graft.operators.MediaDecode.whtHash(media))
+        val ph = Retained(graft.operators.MediaDecode.whtHash(media))
         ph.as("a").join(ph.as("b"), col("a.doc_id") < col("b.doc_id"))
           .withColumn("hamming", expr("bit_count(a.hw ^ b.hw)"))
           .filter(col("hamming") <= 4)
@@ -238,7 +238,7 @@ object MultimodalQueries extends QueryModule {
           .unionAll(T.spread(ids, cpuDense = true).select((col("doc_id") + 100000).as("doc_id"),
             graft.operators.AudioDecode.synthTexturedWav2xUdf(col("doc_id")).as("payload")))
         // r15: retain — see m_image_dhash_dedup (2x decode otherwise)
-        val fp = DedupQueries.retain(graft.operators.AudioDecode.fingerprint(media))
+        val fp = Retained(graft.operators.AudioDecode.fingerprint(media))
         fp.as("a").join(fp.as("b"), col("a.doc_id") < col("b.doc_id"))
           .withColumn("hamming", expr("bit_count(a.fp ^ b.fp)"))
           .filter(col("hamming") <= 2)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,7 +77,7 @@ object PipelineQueries extends QueryModule {
         // retained: the frequency count AND the survivor join both
         // read the chunk relation — uncached the explode+md5 pass
         // runs once per consumer (same fix as the dedup self-joins)
-        val ch = DedupQueries.retain(d.select(col("doc_id"), posexplode(expr(
+        val ch = Retained(d.select(col("doc_id"), posexplode(expr(
             "transform(sequence(0, cast(ceil(size(ws) / 3.0) as int) - 1), c -> array_join(slice(ws, c * 3 + 1, 3), ' '))")))
           .toDF("doc_id", "cidx", "chunk")
           .withColumn("dg", md5(col("chunk"))))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -110,7 +110,7 @@ object Round10Queries extends QueryModule {
     // n_tfidf_cosine's norm aggregate and top-5 window then need NO
     // re-exchange (guide §2.4: two operations keyed the same way share
     // one exchange).
-    val tf = DedupQueries.retain(t
+    val tf = Retained(t
       .select(col("doc_id"), col("w"),
         explode(sequence(lit(1), size(col("w")) - 1)).as("i"))
       .select(col("doc_id"),
@@ -190,7 +190,7 @@ object Round10Queries extends QueryModule {
         // and retain the token-count relation — pos's two consumers
         // (sketch build, heavy-hitter probe) plus the top-20 rank
         // otherwise re-run the explode+aggregate chain three times
-        val tc = DedupQueries.retain(T.par(s, dir, "documents")
+        val tc = Retained(T.par(s, dir, "documents")
           .select(explode(filter(split(col("text"), " "),
             w => length(w) > 0)).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("cnt")))
@@ -263,7 +263,7 @@ object Round10Queries extends QueryModule {
       (s, dir) => {
         // retained: the pair self-join reads the fingerprint relation
         // on both sides and the size aggregate a third time
-        val fp = DedupQueries.retain(winnowFingerprints(s, dir))
+        val fp = Retained(winnowFingerprints(s, dir))
         val nfp = fp.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
         val a = fp.as("a"); val b = fp.as("b")
         a.join(b, col("a.fph") === col("b.fph")
@@ -348,7 +348,7 @@ object Round10Queries extends QueryModule {
         // retained: norms, the top-5 posting relation and BOTH sides of
         // the exact-rerank join read this weight relation — unretained,
         // the bigram scoring chain runs four times
-        val w8 = DedupQueries.retain(tfidfWeights(s, dir))
+        val w8 = Retained(tfidfWeights(s, dir))
         val nrm = w8.groupBy(col("doc_id"))
           .agg(round(sqrt(sum(round(col("wt") * col("wt"), 8)
             .cast(DecimalType(30, 8))).cast("double")), 8).as("nrm"))
@@ -489,7 +489,7 @@ object Round10Queries extends QueryModule {
         // retained: the four single-band joins read this 4-column
         // signature relation on both sides — eight signature
         // aggregations without the cache
-        val sigs = DedupQueries.retain(hs.groupBy(col("doc_id")).agg(
+        val sigs = Retained(hs.groupBy(col("doc_id")).agg(
           min((col("h") * perms.head._1 + perms.head._2) % 2147483647L).as("s0"),
           perms.tail.zipWithIndex.map { case ((a, b), i) =>
             min((col("h") * a + b) % 2147483647L).as(s"s${i + 1}")
@@ -661,7 +661,7 @@ object Round10Queries extends QueryModule {
         // retained: the cutoff aggregate, the total aggregate and the
         // bucketed main pass all read this doc-level relation — without
         // the cache the whole scoring chain runs three times
-        val perDoc = DedupQueries.retain(
+        val perDoc = Retained(
           big.join(bc, Seq("w1", "w2")).join(uc, Seq("w1"))
             .crossJoin(vocab)
             .withColumn("nll", round(-log(
@@ -799,7 +799,7 @@ object Round10Queries extends QueryModule {
       (s, dir) => {
         // r15: spread the single-split doc scan before the gram explodes;
         // retain — grams(1..3) otherwise re-run the tokenize pass 3x
-        val t = DedupQueries.retain(T.par(s, dir, "documents")
+        val t = Retained(T.par(s, dir, "documents")
           .select(col("source"), col("doc_id"),
             filter(split(col("text"), " "), w => length(w) > 0).as("w")))
         def grams(n: Int): DataFrame = t

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -122,7 +122,7 @@ object Round11Queries extends QueryModule {
         val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
         // retained: the filter build, the probe side, the exact truth
         // set and the n_build aggregate all read this digest relation
-        val sh = DedupQueries.retain(T.par(s, dir, "documents")
+        val sh = Retained(T.par(s, dir, "documents")
           .select(col("doc_id"), posexplode(filter(split(col("text"), " "),
             x => length(x) > 0)).as(Seq("pos", "w")))
           .withColumn("w1", lead(col("w"), 1).over(w))
@@ -238,7 +238,7 @@ object Round11Queries extends QueryModule {
               x => length(x) > 0))).cast("double")
               / size(filter(split(col("text"), " "),
                 x => length(x) > 0)), 6).as("q"))
-        val perSrc = DedupQueries.retain(perDoc
+        val perSrc = Retained(perDoc
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"),
             round(sum(col("q").cast(DecimalType(20, 6))).cast("double")
@@ -284,7 +284,7 @@ object Round11Queries extends QueryModule {
         // v = word-type row count — algebraically identical), replacing
         // a second full corpus token explode with a 1-row aggregate
         // over the cached vocabulary relation
-        val tc = DedupQueries.retain(
+        val tc = Retained(
           tokens(s, dir).groupBy(col("w")).agg(count(lit(1)).as("cw")))
         val nv = broadcast(tc
           .agg(sum(col("cw")).as("nt"), count(lit(1)).as("v")))
@@ -418,7 +418,7 @@ object Round11Queries extends QueryModule {
         // are all algebraically derivable from them (sum(cs) per source
         // / per token / overall), so retain tcs once instead of running
         // the corpus token explode four times
-        val tcs = DedupQueries.retain(
+        val tcs = Retained(
           tokS.groupBy(col("source"), col("w")).agg(count(lit(1)).as("cs")))
         val ns = tcs.groupBy(col("source")).agg(sum(col("cs")).as("ns"))
         val tc = tcs.groupBy(col("w")).agg(sum(col("cs")).as("c"))
@@ -464,7 +464,7 @@ object Round11Queries extends QueryModule {
         // r15: retained — the fan-out (n1f), continuation (n1p) and
         // type-total (nbt) relations plus the scoring join all read the
         // bigram-count aggregate; uncached it re-ran four times
-        val bc = DedupQueries.retain(
+        val bc = Retained(
           big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")))
         val uc = big.groupBy(col("w1")).agg(count(lit(1)).as("cu"))
         val n1f = bc.groupBy(col("w1")).agg(count(lit(1)).as("n1f"))
@@ -632,12 +632,12 @@ object Round11Queries extends QueryModule {
         val big = Round9bQueries.bigramStream(s, dir)
           .filter(col("w1") =!= col("w2"))
         // undirected weighted edges, then out-degree per node
-        val edges = DedupQueries.retain(
+        val edges = Retained(
           big.select(col("w1").as("u"), col("w2").as("v"))
             .unionAll(big.select(col("w2").as("u"), col("w1").as("v")))
             .groupBy(col("u"), col("v")).agg(count(lit(1)).as("wt")))
         val deg = edges.groupBy(col("u")).agg(sum(col("wt")).as("deg"))
-        val contrib = DedupQueries.retain(edges.join(deg, Seq("u"))
+        val contrib = Retained(edges.join(deg, Seq("u"))
           .select(col("u"), col("v"), (col("wt") / col("deg")).as("frac")))
         // iteration 1 from s = 1.0: s1(v) = 0.15 + 0.85 * sum(frac)
         val s1 = contrib
@@ -690,7 +690,7 @@ object Round11Queries extends QueryModule {
           .withColumn("simr", round(SimilarityQueries.cosine("pq", "pv"), 6))
         val w = Window.partitionBy(col("qid"), col("k"))
           .orderBy(col("simr").desc, col("nid").asc)
-        val t5 = DedupQueries.retain(scored
+        val t5 = Retained(scored
           .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
           .select(col("qid"), col("k"), col("nid"), col("rn")))
         val f5 = t5.filter(col("k") === 64)
@@ -748,7 +748,7 @@ object Round11Queries extends QueryModule {
     Q("n_dataset_card",
       "Per-language dataset card (the datasheet block a corpus release ships: Datasheets for Datasets, Gebru et al.): doc/token counts, exact-decimal mean tokens, the DISCRETE median doc length computed from the per-language value-count ECDF relation (median = the value whose cumulative interval covers rank floor((n-1)/2) — a lang-partitioned window over the vocabulary-sized value relation, never a row-level sort; DuckDB's quantile_disc pins the same rule), the exact-duplicate rate from text digests, and the mean lexical-quality score. One linear pass per statistic family, all rollups keyed by language.",
       (s, dir) => {
-        val d = DedupQueries.retain(T(s, dir, "documents")
+        val d = Retained(T(s, dir, "documents")
           .select(col("lang"), col("doc_id"), md5(col("text")).as("dg"),
             size(filter(split(col("text"), " "), x => length(x) > 0))
               .cast("long").as("nt"),
@@ -813,7 +813,7 @@ object Round11Queries extends QueryModule {
         // constant-folds away and WindowExec then plans an unpartitioned
         // window — the exact warn WarnAuditSpec guards against
         val wS = Window.partitionBy(pmod(col("hv"), lit(1))).orderBy(col("value"))
-        val ranked = DedupQueries.retain(sample
+        val ranked = Retained(sample
           .withColumn("r", row_number().over(wS).cast("long") - 1)
           .select(col("r"), col("value")))
         val want = broadcast(ranked.agg(count(lit(1)).as("n"))
@@ -905,7 +905,7 @@ object Round11Queries extends QueryModule {
         // guide §2.5 + §4.1); sig cast keeps the original LONG type.
         val df = T.par(s, dir, "embeddings").select(col("label"), col("embedding"))
         // the contingency relation: everything below aggregates this
-        val ct = DedupQueries.retain(df.withColumn("sig",
+        val ct = Retained(df.withColumn("sig",
             graft.functions.PlaneSignature(col("embedding"),
               Round2Queries.lshPlanes).cast("long"))
           .groupBy(col("label"), col("sig")).agg(count(lit(1)).as("nij")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -91,13 +91,9 @@ object Round11bQueries extends QueryModule {
     * Round9Queries.trainLoop recipe on a filtered vocab, memoized per
     * (session, dir, parity) like the full-corpus rule.
     */
-  private val halfMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int),
-      Seq[(Int, String, String, Long)]]()
   private def trainHalf(s: SparkSession, dir: String, parity: Int)
-      : Seq[(Int, String, String, Long)] = {
-    halfMergeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    halfMergeCache.computeIfAbsent((s, dir, parity), _ => {
+      : Seq[(Int, String, String, Long)] =
+    Retained.memo(s, ("bpe.halfMerges", dir, parity)) {
       var cur = T(s, dir, "documents")
         .filter(col("doc_id") % 2 === parity)
         .select(explode(split(col("text"), " ")).as("w"))
@@ -120,8 +116,7 @@ object Round11bQueries extends QueryModule {
         cur = cur.withColumn("spaced", Round9Queries.applyMerge(col("spaced"), l, r))
       }
       merges.toSeq
-    })
-  }
+    }
 
   /** One unrolled 3-step BPE training chain as DuckDB CTEs, prefixed
     * so two parities can coexist in one WITH clause (the
@@ -654,7 +649,7 @@ object Round11bQueries extends QueryModule {
             """aggregate(sequence(0, 31), 0L, (acc, b) -> acc +
                  IF(aggregate(ss, 0L, (a, h) -> a + IF(((h >> b) & 1) = 1, 1L, -1L)) >= 0,
                     shiftleft(1L, b), 0L))"""))
-        val withSigs = DedupQueries.retain(
+        val withSigs = Retained(
           perms.zipWithIndex.foldLeft(base) { case (df, ((a, b), i)) =>
             df.withColumn(s"m$i", expr(s"array_min(transform(ss, h -> ($a * h + $b) % 2147483647))"))
           }.select(col("doc_id"), col("ss"), col("sig32"),
@@ -741,7 +736,7 @@ object Round11bQueries extends QueryModule {
         // parallelize (guide §2.5); retained — stats, the probe-term
         // extraction and the tf stream all read the tokenized relation
         // (three full tokenize passes uncached)
-        val docs = DedupQueries.retain(T.par(s, dir, "documents")
+        val docs = Retained(T.par(s, dir, "documents")
           .select(col("doc_id"),
             filter(split(col("text"), " "), w => length(w) > 0).as("words"))
           .withColumn("dl", size(col("words"))))
@@ -761,7 +756,7 @@ object Round11bQueries extends QueryModule {
         // r15: retained — dfreq AND the bm25 scorer both read this
         // aggregate; uncached the tokenize+explode+semi-join+groupBy
         // chain runs once per consumer
-        val tf = DedupQueries.retain(docs
+        val tf = Retained(docs
           .select(col("doc_id"), col("dl"), explode(col("words")).as("w"))
           .join(broadcast(qvocab), "w")
           .groupBy(col("doc_id"), col("dl"), col("w"))

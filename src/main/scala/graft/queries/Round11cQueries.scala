@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,7 +66,7 @@ object Round11cQueries extends QueryModule {
           .select(col("vec_id").as("yid"), col("embedding").as("yv"))
         // retained: the margin join, both top-4 normalizers and both
         // best-of windows all read the scored relation
-        val scored = DedupQueries.retain(
+        val scored = Retained(
           xs.crossJoin(broadcast(ys))
             .withColumn("sim",
               round(SimilarityQueries.cosine("xv", "yv"), 6))
@@ -82,7 +82,7 @@ object Round11cQueries extends QueryModule {
               .cast("double") / 4, 6).as(s"avg_$side"))
         }
         // retained too: both best-of windows read the margin relation
-        val m = DedupQueries.retain(scored
+        val m = Retained(scored
           .join(top4("xid", "yid"), "xid").join(top4("yid", "xid"), "yid")
           .withColumn("margin", round(
             col("sim") / (lit(0.5) * (col("avg_xid") + col("avg_yid"))), 6)))
@@ -127,7 +127,7 @@ object Round11cQueries extends QueryModule {
         val e = T(s, dir, "embeddings")
         val bench = e.filter(col("vec_id") % 97 === 0)
           .select(col("vec_id").as("bid"), col("embedding").as("bv"))
-        val scored = DedupQueries.retain(
+        val scored = Retained(
           e.filter(col("vec_id") % 97 =!= 0)
             .join(broadcast(bench), col("vec_id") =!= col("bid"))
             .withColumn("sim",
@@ -174,7 +174,7 @@ object Round11cQueries extends QueryModule {
             lit(0).as("in_a"), lit(1).as("in_b"))
         // retained: the bottom-k sketch and the exact answer both read
         // the merged membership relation
-        val u = DedupQueries.retain(
+        val u = Retained(
           ha.union(hb).groupBy(col("hv"))
             .agg(max(col("in_a")).as("in_a"), max(col("in_b")).as("in_b")))
         val sk = u.orderBy(col("hv").asc_nulls_last).limit(128)
@@ -231,7 +231,7 @@ object Round11cQueries extends QueryModule {
         // partition key spelled column-based (pmod(user_id, 1) = 0) so
         // it survives constant folding and WindowExec stays keyed — the
         // n_zipf_fit convention WarnAuditSpec enforces
-        val ranked = DedupQueries.retain(cnts.withColumn("r",
+        val ranked = Retained(cnts.withColumn("r",
           row_number().over(Window.partitionBy(pmod(col("user_id"), lit(1)))
             .orderBy(col("c").asc_nulls_last,
               col("user_id").asc_nulls_last))))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -197,7 +197,7 @@ object Round11dQueries extends QueryModule {
       "Per-domain reputation gate (the C4/RefinedWeb source-level curation step): each source rolls up to doc count, exact-dup rate (1 - distinct text digests / docs), short-doc fraction and a length score, combines to a 0-1 reputation, maps to a keep / downsample / drop verdict, and the verdict is APPLIED back to the corpus — downsampled domains keep the deterministic half of their docs by keep-hash, dropped domains keep none — reporting kept counts and the realized retention per domain. Scale shape: the rollup is one partial-combined aggregate to a domains-cardinality relation (sources << docs), the verdict relation broadcasts back for the apply pass, and only digests ever shuffle — document bodies stay put.",
       (s, dir) => {
         val d = T(s, dir, "documents")
-        val rep = DedupQueries.retain(
+        val rep = Retained(
           d.groupBy(col("source")).agg(
             count(lit(1)).as("n_docs"),
             countDistinct(md5(col("text"))).as("n_distinct"),
@@ -318,7 +318,7 @@ object Round11dQueries extends QueryModule {
         val cnt = T(s, dir, "documents")
           .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
         val tot = cnt.agg(sum(col("n_docs")).cast("bigint").as("total"))
-        val p = DedupQueries.retain(
+        val p = Retained(
           cnt.crossJoin(broadcast(tot))
             .withColumn("p", round(col("n_docs").cast("double") / col("total"), 6))
             .withColumn("q_raw", round(pow(col("p"), 0.3), 6)))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -129,7 +129,7 @@ object Round11eQueries extends QueryModule {
         val model = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
         // per-token log2(cnt) rounded to 6 then decimal-summed: the
         // accumulation is order-independent on both engines
-        val dom = DedupQueries.retain(
+        val dom = Retained(
           toks.join(model, Seq("w"))
             .groupBy(col("source"))
             .agg(count(lit(1)).cast("bigint").as("n_tokens"),
@@ -138,7 +138,7 @@ object Round11eQueries extends QueryModule {
         val tot = dom.agg(
           sum(col("n_tokens")).cast("bigint").as("total"),
           sum(col("sumlog")).as("sumlog_all"))
-        val scored = DedupQueries.retain(dom.crossJoin(broadcast(tot))
+        val scored = Retained(dom.crossJoin(broadcast(tot))
           .withColumn("p", round(col("n_tokens").cast("double") / col("total"), 6))
           .withColumn("bpt", round(log2(col("total"))
             - col("sumlog").cast("double") / col("n_tokens"), 6))

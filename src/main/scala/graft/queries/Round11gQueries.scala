@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -34,10 +34,10 @@ object Round11gQueries extends QueryModule {
         val dt = T.par(s, dir, "documents")
           .select(col("source"), explode(split(lower(col("text")), " ")).as("w"))
           .filter(length(col("w")) > 0)
-        val domTok = DedupQueries.retain(
+        val domTok = Retained(
           dt.groupBy(col("source"), col("w")).agg(count(lit(1)).as("c_dw")))
         val model = domTok.groupBy(col("w")).agg(sum(col("c_dw")).as("c_w"))
-        val domTot = DedupQueries.retain(
+        val domTot = Retained(
           domTok.groupBy(col("source"))
             .agg(sum(col("c_dw")).cast("bigint").as("t_d")))
         val glob = domTot.agg(sum(col("t_d")).cast("bigint").as("t"))
@@ -104,7 +104,7 @@ object Round11gQueries extends QueryModule {
     Q("n_quality_kendall",
       "Kendall tau-b rank agreement between two quality scorers (the check a pipeline runs before trusting a cheap filter as a proxy for an expensive one): scorer A = mean word length, scorer B = type-token ratio, both row-local over the doc_id < 300 evaluation slice; every unordered doc pair classifies as concordant / discordant / tied-in-A / tied-in-B from exact 6-rounded scores, and tau_b = (C - D) / sqrt((C + D + Tx) * (C + D + Ty)). Scale shape: scoring is one row-local pass; the pair relation carries only (id, s1, s2) scalars over the bounded evaluation slice (at corpus scale the slice is a fixed-size sample — pair count is slice-quadratic by definition of the statistic, never corpus-quadratic).",
       (s, dir) => {
-        val scored = DedupQueries.retain(
+        val scored = Retained(
           T(s, dir, "documents").filter(col("doc_id") < 300)
             .select(col("doc_id"),
               filter(split(col("text"), " "), w => length(w) > 0).as("ws"))
@@ -172,7 +172,7 @@ object Round11gQueries extends QueryModule {
               .cast("bigint").as("n"))
           .groupBy(col("source")).agg(sum(col("n")).cast("bigint").as("tokens"))
         val tot = tok.agg(sum(col("tokens")).cast("bigint").as("total"))
-        val p = DedupQueries.retain(
+        val p = Retained(
           tok.crossJoin(broadcast(tot))
             .withColumn("p", round(col("tokens").cast("double") / col("total"), 6))
             .withColumn("q_raw", round(pow(col("p"), 0.3), 6)))

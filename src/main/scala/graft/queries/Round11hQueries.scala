@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,13 +55,13 @@ object Round11hQueries extends QueryModule {
       "Weighted label propagation communities (Raghavan et al. 2007; the near-dup community detector that resists single-bridge chaining): edges are shingle-digest co-occurrence counts (weight = |A∩B|, kept at >= 2) over the doc_id < 300 slice, labels start as doc ids, and TWO synchronous rounds of weighted-majority voting run with fully deterministic tie-breaks (highest incident weight, then smallest label; isolated or tied-out nodes keep their label). Output: every connected doc with its round-2 community and the community's member count. Scale shape: edges come from a digest equi-join (never all-pairs), each round is one (node, label) weight aggregate + one keyed rank — two shuffles per round on the node key, state is one label per node.",
       (s, dir) => {
         val sh = shingleDigests(s, dir)
-        val pw = DedupQueries.retain(
+        val pw = Retained(
           sh.as("x").join(sh.as("y"),
               col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
             .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
             .agg(count(lit(1)).as("w"))
             .filter(col("w") >= 2))
-        val edges = DedupQueries.retain(
+        val edges = Retained(
           pw.select(col("a").as("n"), col("b").as("m"), col("w"))
             .union(pw.select(col("b").as("n"), col("a").as("m"), col("w"))))
         val nodes = edges.select(col("n")).distinct()
@@ -194,7 +194,7 @@ object Round11hQueries extends QueryModule {
           .groupBy(col("source"), col("h")).agg(count(lit(1)).as("c"))
         val win = Window.partitionBy(col("source"))
           .orderBy(col("c").desc_nulls_last, col("h").asc_nulls_last)
-        val top = DedupQueries.retain(
+        val top = Retained(
           counts.withColumn("rk", row_number().over(win))
             .filter(col("rk") <= 200).select(col("source"), col("h")))
         val sz = top.groupBy(col("source")).agg(count(lit(1)).as("k"))

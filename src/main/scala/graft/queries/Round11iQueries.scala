@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,7 +44,7 @@ object Round11iQueries extends QueryModule {
             when(col("value") > col("prev_value"), col("prev_type"))
               .otherwise(col("event_type")).as("loser"))
         // unordered-pair majority direction: lo/hi + net wins for lo
-        val maj = DedupQueries.retain(comps
+        val maj = Retained(comps
           .select(least(col("winner"), col("loser")).as("lo"),
             greatest(col("winner"), col("loser")).as("hi"),
             when(col("winner") < col("loser"), 1).otherwise(-1).as("d"))
@@ -118,7 +118,7 @@ object Round11iQueries extends QueryModule {
         val d = T(s, dir, "documents").select(col("lang"), col("n_chars"))
         val win = Window.partitionBy(col("lang"))
           .orderBy(col("n_chars").asc_nulls_last)
-        val ranked = DedupQueries.retain(
+        val ranked = Retained(
           d.withColumn("rk", row_number().over(win))
             .withColumn("n", count(lit(1)).over(Window.partitionBy(col("lang")))))
         val trimmed = ranked

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,7 +115,7 @@ object Round12Queries extends QueryModule {
         val e = T(s, dir, "embeddings")
         // one signature pass over both sides, retained: xs/ys/scoring
         // all read it
-        val both = DedupQueries.retain(withSig(
+        val both = Retained(withSig(
           e.filter(col("vec_id") % 50 === 0 || col("vec_id") % 50 === 25)
             .select(col("vec_id"), col("embedding")), "embedding"))
         val xs = both.filter(col("vec_id") % 50 === 0)
@@ -130,7 +130,7 @@ object Round12Queries extends QueryModule {
           .join(ys.select(col("yid"), col("ysig")),
             col("psig") === col("ysig"))
           .select(col("xid"), col("yid")).distinct()
-        val scored = DedupQueries.retain(
+        val scored = Retained(
           cand.join(xs.select(col("xid"), col("xv")), "xid")
             .join(ys.select(col("yid"), col("yv")), "yid")
             .withColumn("sim",
@@ -144,7 +144,7 @@ object Round12Queries extends QueryModule {
             .agg(round(sum(col("sim").cast(DecimalType(18, 6)))
               .cast("double") / 4, 6).as(s"avg_$side"))
         }
-        val m = DedupQueries.retain(scored
+        val m = Retained(scored
           .join(top4("xid", "yid"), "xid").join(top4("yid", "xid"), "yid")
           .withColumn("margin", round(
             col("sim") / (lit(0.5) * (col("avg_xid") + col("avg_yid"))), 6)))
@@ -196,14 +196,14 @@ object Round12Queries extends QueryModule {
       "The n_decontam_semantic screen over the executable candidate tier: benchmark items (vec_id%97=0) probe the 37 Hamming<=2 signatures against single-signature corpus buckets, exact cosine reranks only cohabitants, >= 0.3 flags contamination; per-benchmark hit counts + max candidate similarity + the corpus-wide distinct flagged count (one-row aggregate broadcast back in-DAG). A SCREEN with measured recall, not an exactness claim: the brute-force n_decontam_semantic stays the audit baseline, this is the shape that runs when the corpus is 10^11 rows — corpus vectors store one bucket entry, probes amplify 137x, the join shuffles on signature only. Benchmarks with zero candidates surface with n_candidates=0 (a left join from the benchmark relation), never silently vanish.",
       (s, dir) => {
         val e = T(s, dir, "embeddings")
-        val all = DedupQueries.retain(withSig(
+        val all = Retained(withSig(
           e.select(col("vec_id"), col("embedding")), "embedding"))
         val bench = all.filter(col("vec_id") % 97 === 0)
           .select(col("vec_id").as("bid"), col("embedding").as("bv"),
             col("sig").as("bsig"))
         val corpus = all.filter(col("vec_id") % 97 =!= 0)
           .select(col("vec_id"), col("embedding"), col("sig"))
-        val scored = DedupQueries.retain(
+        val scored = Retained(
           bench.select(col("bid"), col("bsig"))
             .withColumn("m", explode(typedLit(probeMasks)))
             .select(col("bid"), col("bsig").bitwiseXOR(col("m")).as("psig"))
@@ -264,7 +264,7 @@ object Round12Queries extends QueryModule {
     Q("n_label_noise_ann",
       "The n_label_noise k-NN majority vote with the candidate tier executable (the third miner named in the round-11 verdict): probes (vec_id%50=0) explode into the 37 Hamming<=2 probe signatures and meet the single-signature corpus in an equi-join, the vote runs over each probe's top-5 HIGHEST-cosine candidates (a probe pair matches at most one mask, so the join emits no duplicate pairs), majority label by count desc / label asc, disagreement flags. Probes with zero cohabitants surface with n_agree=0 and NULL majority (left join from the probe relation) - at corpus scale that IS the signal to widen the signature or probe radius, never a silent drop. Oracle-checked cross-engine on the same candidate algorithm.",
       (s, dir) => {
-        val all = DedupQueries.retain(withSig(
+        val all = Retained(withSig(
           T(s, dir, "embeddings")
             .select(col("vec_id"), col("label"), col("embedding")), "embedding"))
         val probes = all.filter(col("vec_id") % 50 === 0)

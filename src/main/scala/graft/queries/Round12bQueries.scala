@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -63,7 +63,7 @@ object Round12bQueries extends QueryModule {
       "Heaps'-law vocabulary-growth fit V(N) = K*N^beta over doubling ingestion checkpoints (the capacity read before sizing a tokenizer vocab or estimating how much NEW vocabulary the next 10x of crawl brings): the vocabulary unit is the word 3-gram — the same chunk unit n_novelty_curve tracks — because the synthetic corpus's whole-word vocabulary saturates at 31 tokens in the first 25 docs (a degenerate flat curve; 3-gram types keep growing 1.4k -> 16k across sf0.01). Checkpoints double from 25 docs to the corpus max (O(log n) of them, derived from an in-DAG one-row max — never a driver-side count), cumulative vocabulary at each checkpoint counts 3-gram types by FIRST-occurrence doc (one gram-keyed min aggregate — the type-sized relation, not the corpus), cumulative volume by per-doc gram counts, and the log-log OLS fit runs on exact-decimal sums of 8-rounded operands so both engines reduce identical rationals; beta/ln_k get a +0.0 normalization so a degenerate zero slope cannot render -0.0 on one engine. Scale shape: two linear aggregates + an O(log n)-row broadcast inequality join; the fit reduces the checkpoint relation, never the corpus.",
       (s, dir) => {
         // r15: spread the single-split doc scan (guide §2.5)
-        val tok = DedupQueries.retain(
+        val tok = Retained(
           T.par(s, dir, "documents")
             .select(col("doc_id"),
               filter(split(col("text"), " "), w => length(w) > 0).as("ws"))
@@ -166,7 +166,7 @@ object Round12bQueries extends QueryModule {
     Q("n_lm_transfer_matrix",
       "Cross-source language-model transfer matrix (the full pairwise structure behind DSIR/DoReMi mixture design, which weight only ONE target): per source an add-1-smoothed unigram LM over the shared corpus vocabulary, H(eval|train) = ln(N_train + V) - sum_w c_eval(w)*ln(c_train(w)+1) / N_eval — the OOV terms vanish algebraically (ln(0+1)=0), so the whole matrix reduces over the INNER token join; transfer_gap = H(eval|train) - H(eval|eval) is the price of training on the wrong source. Scale shape: one (source, token) count relation reused three ways, a token-keyed self-join whose amplification is #sources (k=20 here, never corpus-quadratic), and a broadcast k*k skeleton so source pairs sharing no vocabulary still surface.",
       (s, dir) => {
-        val cnt = DedupQueries.retain(tokens(s, dir)
+        val cnt = Retained(tokens(s, dir)
           .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c")))
         val totals = cnt.groupBy(col("source")).agg(sum(col("c")).as("nt"))
         // r15: the shared vocabulary size is derivable from the retained
@@ -254,7 +254,7 @@ object Round12bQueries extends QueryModule {
         val probes = emb.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("label").as("qlabel"),
             col("embedding").as("qv"))
-        val graded = DedupQueries.retain(
+        val graded = Retained(
           emb.join(broadcast(probes), col("vec_id") =!= col("qid"))
             .withColumn("rel", when(col("label") === col("qlabel"), 2)
               .when(abs(col("label") - col("qlabel")) === 1, 1).otherwise(0)))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -48,7 +48,7 @@ object Round12cQueries extends QueryModule {
     Q("n_conformal_quality_gate",
       "Split-conformal quality gate (distribution-free, finite-sample coverage guarantee): the doc_id<200 calibration slice ranks by the uniqueness quality score, the threshold is the exact k-th LARGEST calibration score with k = ceil((n_cal+1)*(1-alpha)) at alpha=0.1 computed in INTEGER arithmetic ((9*(n+1)+9) DIV 10 — never a double ceil that can straddle an exact multiple), and every apply-slice doc flags iff its score falls below the threshold; under exchangeability the flag rate concentrates near alpha, which the output reports next to the guarantee inputs. Scale shape: the calibration slice is bounded by contract (at corpus scale a fixed-size sample — the n_quality_kendall convention), the threshold relation is ONE row broadcast against the linear apply scan.",
       (s, dir) => {
-        val sc = DedupQueries.retain(scored(s, dir))
+        val sc = Retained(scored(s, dir))
         val cal = sc.filter(col("doc_id") < 200)
         val kRel = cal.agg(count(lit(1)).as("n_cal"))
           .withColumn("k", expr("CAST((9 * (n_cal + 1) + 9) DIV 10 AS BIGINT)"))
@@ -102,7 +102,7 @@ object Round12cQueries extends QueryModule {
           .groupBy(col("g")).agg(count(lit(1)).as("f"))
         val wRank = Window.partitionBy(pmod(length(col("g")), lit(1)))
           .orderBy(col("f").desc_nulls_last, col("g").asc_nulls_last)
-        val ranked = DedupQueries.retain(
+        val ranked = Retained(
           freq.withColumn("r", row_number().over(wRank)).filter(col("r") <= 41)
             .select(col("r"), col("f"),
               round(log(col("f").cast("double")), 8).as("lnf")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -193,9 +193,9 @@ object Round3Queries extends QueryModule {
       "Benchmark decontamination: corpus docs sharing any 5-gram with the eval set (source='src0') are flagged; per-lang contaminated counts + worst overlap. The join shuffles 16-byte md5 digests of the grams, not gram text — at 100 TB that is the difference between shuffling digests and shuffling prose.",
       (s, dir) => {
         val docs = T.par(s, dir, "documents")
-        // persisted via retain(): the bench and corpus branches below
+        // retained: the bench and corpus branches below
         // would otherwise re-run the split+gram+md5+explode pass twice
-        val grams = DedupQueries.retain(docs
+        val grams = Retained(docs
           .select(col("doc_id"), col("source"), col("lang"),
             split(col("text"), " ").as("w"))
           .select(col("doc_id"), col("source"), col("lang"), expr(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
@@ -182,7 +182,7 @@ object Round8Queries extends QueryModule {
         // small (docs-with-cuts × spans) relation, read by three
         // consumers below — retained so the window pipeline above runs
         // once; released with the dedup-family relations
-        val cut = DedupQueries.retain(
+        val cut = Retained(
           spans.join(owners, spans("g_first") === owners("g"))
             .filter(col("owner") =!= col("doc_id"))
             .select(col("doc_id"), col("s"), col("e")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -82,7 +82,7 @@ object Round9bQueries extends QueryModule {
           (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
         // the posting relation IS the inverted index — retained per
         // session like the dedup fixtures: build once, query many
-        val tf = DedupQueries.retain(docs
+        val tf = Retained(docs
           .select(col("doc_id"), col("dl"), explode(col("words")).as("w"))
           .groupBy(col("doc_id"), col("dl"), col("w"))
           .agg(count(lit(1)).as("tf")))
@@ -197,7 +197,7 @@ object Round9bQueries extends QueryModule {
         // = (dist asc, code asc) argmin, no window needed. The code
         // relation IS the PQ index — retained per session like the
         // dedup fixtures: build once, probe many.
-        val codes = DedupQueries.retain(subs.join(broadcast(cb), "ss")
+        val codes = Retained(subs.join(broadcast(cb), "ss")
           .withColumn("dist", round(l2sq("sub", "cvec"), 6))
           .groupBy(col("vec_id"), col("ss"))
           .agg(min(struct(col("dist"), col("code"))).as("m"))
@@ -551,7 +551,7 @@ object Round9bQueries extends QueryModule {
         // r15: retain — the self-join broadcasts one side (no exchange
         // reuse), so unretained BOTH sides re-run the 25x-per-name
         // deletion explode + md5 + distinct
-        val vars = DedupQueries.retain(
+        val vars = Retained(
           c.select(col("id"), col("name"), explode(expr(
             """array_union(array(name),
               transform(sequence(1, length(name)),
@@ -588,7 +588,7 @@ object Round9bQueries extends QueryModule {
       (s, dir) => {
         val d = T(s, dir, "documents")
           .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_toks"))
-        val a = DedupQueries.retain(d
+        val a = Retained(d
           .withColumn("epoch", explode(expr("array(1, 2, 3)")))
           .withColumn("shard", pmod(expr(
             "CAST(conv(substr(md5(concat(epoch, '_', doc_id)), 1, 8), 16, 10) AS BIGINT)"),
@@ -652,7 +652,7 @@ object Round9bQueries extends QueryModule {
         // 64-dim vector re-joins AFTER the top-20 cut, so the window
         // sort moves ~30-byte rows instead of carrying the embedding
         // through the shuffle (the other 100×-fence spill amplifier)
-        val cand = DedupQueries.retain(
+        val cand = Retained(
           e.join(broadcast(probes), col("vec_id") =!= col("qid"))
             .select(col("qid"), col("vec_id"),
               round(SimilarityQueries.cosine("qv", "v"), 6).as("simq"))
@@ -860,7 +860,7 @@ object Round9bQueries extends QueryModule {
   // r15: spread the single-split doc scan so the bigram explode
   // parallelizes (guide §2.5)
   private[queries] def bigramStream(s: SparkSession, dir: String): DataFrame =
-    DedupQueries.retain(
+    Retained(
       T.par(s, dir, "documents")
         .select(col("doc_id"),
           filter(split(col("text"), " "), w => length(w) > 0).as("ws"))

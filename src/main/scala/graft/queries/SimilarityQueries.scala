@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryModule, T}
+import graft.{Q, QueryModule, Retained, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -165,7 +165,7 @@ object SimilarityQueries extends QueryModule {
           .orderBy(col("simr").desc, col("cell").asc)
         // persisted: the a-side, b-side and per-cell count all read it —
         // without the cache the broadcast-assign stage runs three times
-        val assigned = DedupQueries.retain(e.crossJoin(broadcast(cents))
+        val assigned = Retained(e.crossJoin(broadcast(cents))
           .withColumn("simr", round(cosine("embedding", "cvec"), 6))
           .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("cell"), col("vec_id"), col("embedding")))

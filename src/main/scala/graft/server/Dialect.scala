@@ -1185,10 +1185,12 @@ object Dialect {
       if (close < 0) return s
       val content = s.substring(open + 1, close)
       val ob = firstTopLevel(content, "ORDER BY")
-      if (ob < 0) { from = m.end }
-      else aggOrderReplacement(m.group(1).toLowerCase(java.util.Locale.ROOT),
-          content.substring(0, ob).trim,
-          content.substring(ob + "ORDER BY".length).trim) match {
+      val fn = m.group(1).toLowerCase(java.util.Locale.ROOT)
+      val replacement =
+        if (ob < 0) distinctList(fn, content, s.substring(close + 1))
+        else aggOrderReplacement(fn, content.substring(0, ob).trim,
+          content.substring(ob + "ORDER BY".length).trim)
+      replacement match {
         case Some(repl) =>
           s = s.substring(0, m.start) + repl + s.substring(close + 1)
           from = m.start
@@ -1244,6 +1246,19 @@ object Dialect {
     val fields = keys.zipWithIndex.map { case ((k, _, _), i) => s"'k$i', $k" }
     val struct = s"named_struct(${fields.mkString(", ")}, 'v', $x)"
     s"transform(array_sort(array_agg($struct), (__l, __r) -> ${sortComparator(keys)}), __o -> __o.v)"
+  }
+
+  /** `array_agg(DISTINCT x)` / `list(DISTINCT x)` without ORDER BY:
+    * the registered list aggregate is an expression over collect_list
+    * and cannot take DISTINCT, so dedupe its result. Window and FILTER
+    * forms stay loud. */
+  private def distinctList(fn: String, content: String, rest: String): Option[String] = {
+    val x = content.trim
+    val tail = rest.trim.toUpperCase(java.util.Locale.ROOT)
+    if ((fn == "array_agg" || fn == "list") && x.toUpperCase.startsWith("DISTINCT ") &&
+        !tail.startsWith("OVER") && !tail.startsWith("FILTER"))
+      Some(s"array_distinct($fn(${x.substring(9).trim}))")
+    else None
   }
 
   private def aggOrderReplacement(fn: String, argsPart: String, spec: String): Option[String] = {
@@ -1309,16 +1324,18 @@ object Dialect {
       val x = argsPart.trim
       val distinct = x.toUpperCase.startsWith("DISTINCT ")
       val bare = if (distinct) x.substring(9).trim else x
-      if (splitTopLevel(bare, ',').length != 1) return None
-      if (distinct) {
-        // DISTINCT + sort key only when the key IS the value (DuckDB's
-        // own restriction for a well-defined result)
-        if (oneKeyPlain && bare == keys.head._1)
-          Some(s"sort_array(array_agg($x), ${keys.head._2})")
-        else None
-      } else if (oneKeyPlain && bare == keys.head._1)
-        Some(s"sort_array(array_agg($x), ${keys.head._2})")
-      else Some(sortedValueArray(bare, keys))
+      val keyIsValue = keys.length == 1 && bare == keys.head._1
+      // DISTINCT + sort key only when the key IS the value (DuckDB's
+      // own restriction for a well-defined result)
+      if (splitTopLevel(bare, ',').length != 1 || (distinct && !keyIsValue)) return None
+      // NULLS LAST both ways, like DuckDB: array_sort puts NULLs last
+      // ascending, sort_array descending
+      val sorted =
+        if (!oneKeyPlain || !keyIsValue) sortedValueArray(bare, keys)
+        else if (keys.head._2) s"array_sort(array_agg($bare))"
+        else s"sort_array(array_agg($bare), false)"
+      // array_distinct keeps the sorted order and one NULL, like DuckDB
+      Some(if (distinct) s"array_distinct($sorted)" else sorted)
     }
   }
 
@@ -2938,12 +2955,8 @@ object Dialect {
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, org.apache.spark.rdd.RDD[_]]]())
 
-  private def materializedFor(spark: SparkSession): scala.collection.concurrent.TrieMap[String, org.apache.spark.rdd.RDD[_]] =
-    materializedRdds.synchronized {
-      var m = materializedRdds.get(spark)
-      if (m == null) { m = scala.collection.concurrent.TrieMap.empty; materializedRdds.put(spark, m) }
-      m
-    }
+  private def materializedFor(spark: SparkSession) =
+    materializedRdds.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty)
 
   private def releaseMaterialized(spark: SparkSession, name: String): Unit =
     materializedFor(spark).remove(name.toLowerCase)
@@ -2967,10 +2980,8 @@ object Dialect {
   private def materializeAs(spark: SparkSession, name: String,
       df: org.apache.spark.sql.DataFrame): Long = {
     val mat = df.localCheckpoint(true)
-    val rdd = mat.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None // unexpected plan shape: fall back to GC-driven cleanup
-    }
+    // the RDD, not the frame: a frame would pin its session in the weak map
+    val rdd = graft.Retained.checkpointed(mat)
     mat.createOrReplaceTempView(name)
     releaseMaterialized(spark, name) // free the REPLACED blocks, if any
     rdd.foreach(r => materializedFor(spark).put(name.toLowerCase, r))

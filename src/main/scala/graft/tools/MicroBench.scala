@@ -41,13 +41,12 @@ object MicroBench {
             val dt = (System.nanoTime() - t0) / 1e9
             // r16 (verdict r15 #2): iterations 2+ must not read
             // iteration 1's retained cache — min-of-k is cold-cache
-            graft.queries.DedupQueries.release(spark)
+            graft.Retained.release(spark)
             dt
           }
           println(f"[micro] $n%-34s min=${times.min}%8.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}")
         case None => System.err.println(s"[micro] unknown query: $n")
       }
-      graft.queries.DedupQueries.release(spark)
     }
     spark.stop()
   }

@@ -253,7 +253,7 @@ object ScaleBench {
         System.err.println(f"[scale] $name @ $dir -> $v%.2f s")
         name -> v
       }.toMap
-      graft.queries.DedupQueries.release(spark)
+      graft.Retained.release(spark)
       out
     }
     // interleave A,B,A,B and keep the per-dir min: both dirs see the

@@ -109,7 +109,7 @@ class DedupSkewSpec extends AnyFunSuite {
     // rebuild a new frame with identical content (lifecycle safety:
     // release can never leave a consumer reading a stale/unpersisted
     // memoized plan)
-    DedupQueries.release(s)
+    Retained.release(s)
     val p3 = DedupQueries.pairIntersections(s, dir)
     assert(!(p1 eq p3))
     val after = DedupQueries.jaccardPairs(s, dir)

@@ -150,6 +150,8 @@ object InventorySweep extends TimeLimits {
             Thread.interrupted()
             failures += s"$name: timed out after $QueryLimit"
         }
+        // like Bench: no query's persisted state outlives it
+        Retained.release(spark)
       }
     } finally {
       cfg.getRootLogger.removeAppender("graft-warn-audit")

@@ -167,6 +167,7 @@ class OperatorSpec extends AnyFunSuite {
     val none = graft.operators.ConnectedComponents.labels(
       Seq.empty[(Long, Long)].toDF("u", "v"))
     assert(none.count() == 0)
+    Retained.release(spark)
   }
 
   test("media resize: 4x4 area thumbnail means stay within channel range") {

@@ -43,7 +43,7 @@ class Round6Spec extends AnyFunSuite {
     val junk = rows(40L)
     assert(prose < junk,
       s"common prose ($prose bits/token) must score below unique gibberish ($junk)")
-    graft.queries.DedupQueries.release(s)
+    Retained.release(s)
   }
 
   test("DSIR importance is positive for target-domain docs, negative for the rest") {
@@ -57,7 +57,7 @@ class Round6Spec extends AnyFunSuite {
     assert(rows(0L)._1 && rows(0L)._2 > 0, s"target doc should be positive: ${rows(0L)}")
     assert(!rows(10L)._1 && rows(10L)._2 == rows(0L)._2)
     assert(rows(40L)._2 < 0, s"raw-only gibberish must be negative: ${rows(40L)}")
-    graft.queries.DedupQueries.release(s)
+    Retained.release(s)
   }
 
   test("keep-best survivorship keeps the longest cluster member, not the min id") {
@@ -68,7 +68,7 @@ class Round6Spec extends AnyFunSuite {
     // kept_doc = 51 (longest), NOT 50 (min id); 3 members
     assert(cluster.get.getLong(1) == 51L, s"kept ${cluster.get}")
     assert(cluster.get.getLong(3) == 3L)
-    graft.queries.DedupQueries.release(s)
+    Retained.release(s)
   }
 
   test("e2e prep funnel conserves documents across stages") {
@@ -84,6 +84,6 @@ class Round6Spec extends AnyFunSuite {
     assert(unique == 1L && dropped == 19L, s"unique $unique dropped $dropped")
     // dedup conserves: unique survivors + dropped copies = quality-passing docs
     assert(unique + dropped == quality)
-    graft.queries.DedupQueries.release(s)
+    Retained.release(s)
   }
 }
