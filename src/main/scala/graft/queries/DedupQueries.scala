@@ -208,9 +208,10 @@ object DedupQueries extends QueryModule {
       .select(col("id_a"), col("id_b"), round(col("raw"), 6).as("jaccard"))
 
   /** Min-label cluster assignment over [[jaccardPairs]] — memoized for
-    * the same reason: the CC fixpoint is a multi-superstep iteration,
-    * and both the cluster report and keep-best survivorship consume
-    * the SAME label frame.
+    * the same reason: labelling runs eager jobs (one bounded collect, or
+    * the multi-superstep fixpoint above the driver budget), and the
+    * cluster report, keep-best survivorship, cohesion and soft-dedup
+    * weights all consume the SAME label frame.
     */
   def clusterLabels(s: SparkSession, dir: String): DataFrame =
     Retained.memo(s, ("dedup.labels", dir))(

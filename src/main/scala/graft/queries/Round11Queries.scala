@@ -504,7 +504,7 @@ object Round11Queries extends QueryModule {
         GROUP BY doc_id ORDER BY doc_id ASC NULLS LAST""")),
 
     Q("n_softdedup_weights",
-      "Soft deduplication (down-WEIGHT duplicate clusters instead of dropping them — the SoftDeDup move that keeps rare-but-duplicated content at reduced sampling mass): near-dup cluster labels come from the SAME connected-components operator n_dedup_clusters uses, every member of an n-doc cluster carries weight 1/n (fixed-scale decimal so effective counts sum exactly), and the per-language rollup reports raw vs effective docs/tokens — the numbers that show how much sampling mass dedup-aware training actually removes. Scale shape: the cluster relation is the CC fixpoint (checkpoint-bounded supersteps), everything after is one broadcast-joined linear pass.",
+      "Soft deduplication (down-WEIGHT duplicate clusters instead of dropping them — the SoftDeDup move that keeps rare-but-duplicated content at reduced sampling mass): near-dup cluster labels come from the SAME connected-components operator n_dedup_clusters uses, every member of an n-doc cluster carries weight 1/n (fixed-scale decimal so effective counts sum exactly), and the per-language rollup reports raw vs effective docs/tokens — the numbers that show how much sampling mass dedup-aware training actually removes. Scale shape: the cluster relation is connected components (a driver union-find over at most 2^18 edges, one bounded collect; checkpoint-bounded min-label supersteps above that), everything after is one broadcast-joined linear pass.",
       (s, dir) => {
         val labels = DedupQueries.clusterLabels(s, dir)
           .withColumnRenamed("id", "doc_id")

@@ -240,7 +240,7 @@ object Round3Queries extends QueryModule {
         ORDER BY d.lang ASC NULLS LAST""")),
 
     Q("n_dedup_clusters",
-      "Near-dup CLUSTERS: connected components (min-label propagation to fixpoint) over the verified Jaccard≥0.5 pair graph — each component's canonical survivor is its min doc_id. The production dedup step after pair verification; oracle = transitive closure via recursive CTE.",
+      "Near-dup CLUSTERS: connected components over the verified Jaccard≥0.5 pair graph (a union-find on the driver for at most 2^18 edges, one bounded collect; min-label propagation to fixpoint above that) — each component's canonical survivor is its min doc_id. The production dedup step after pair verification; oracle = transitive closure via recursive CTE.",
       (s, dir) => {
         DedupQueries.clusterLabels(s, dir)
           .groupBy(col("label").as("cluster_id"))

@@ -12,7 +12,7 @@ object Round6Queries extends QueryModule {
 
   override val queries: Seq[Q] = Seq(
     Q("n_dedup_keep_best",
-      "Quality-aware near-dup survivorship: connected components over the verified Jaccard>=0.5 pair graph, then each cluster keeps its HIGHEST-QUALITY member (longest doc; ties break to min doc_id) instead of the arbitrary min-id — the policy real training pipelines use, since near-dup groups usually contain one full document and several truncated copies. Scale shape: the pair graph and CC fixpoint are the existing linear machinery; the survivor pick adds two label-keyed partial aggregates and one co-partitioned self-join — nothing quadratic, nothing collected.",
+      "Quality-aware near-dup survivorship: connected components over the verified Jaccard>=0.5 pair graph, then each cluster keeps its HIGHEST-QUALITY member (longest doc; ties break to min doc_id) instead of the arbitrary min-id — the policy real training pipelines use, since near-dup groups usually contain one full document and several truncated copies. Scale shape: the pair graph is the existing linear machinery, and connected components labels a graph of at most 2^18 verified edges on the driver (one bounded collect, 4 MB at the cap, and a union-find), a larger one by the distributed min-label fixpoint; the survivor pick adds two label-keyed partial aggregates and one co-partitioned self-join — nothing quadratic, and no collect beyond the bounded edge list.",
       (s, dir) => {
         val labels = DedupQueries.clusterLabels(s, dir)
         val docs = T(s, dir, "documents").select(col("doc_id"), col("n_chars"))

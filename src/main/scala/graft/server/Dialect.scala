@@ -2626,9 +2626,96 @@ object Dialect {
     val l = spark.sql(s"SELECT * FROM $leftRel")
     val r = spark.sql(s"SELECT * FROM $rightRel")
     val v = s"__graft_posjoin_${posJoinViewN.incrementAndGet()}"
+    // the view replaces both operands, so a name qualified by either
+    // operand's alias is requalified by the view, within the query
+    // scope (the enclosing parens) that holds this FROM
+    val head = sql.substring(0, fromEnd)
+    val hs = scopeEdge(head, forward = false)
+    val te = scopeEdge(tail, forward = true)
+    val sides = Seq(leftRel -> l.columns.toSeq, rightRel -> r.columns.toSeq)
+    def requalify(t: String) = requalifyPosJoin(t, sides, v)
+    val out = head.substring(0, hs) + requalify(head.substring(hs)) + s" $v " +
+      requalify(tail.substring(0, te)) + tail.substring(te)
     graft.operators.PositionalJoin(l, r).orderBy("pos").drop("pos")
       .createOrReplaceTempView(v)
-    rewritePositionalJoin(spark, sql.substring(0, fromEnd) + s" $v $tail")
+    rewritePositionalJoin(spark, out)
+  }
+
+  /** Where the paren scope around `t`'s edge ends: the index after the
+    * first unmatched `(` scanning back from the end, or of the first
+    * unmatched `)` scanning forward from the start; `t`'s far edge if
+    * there is none.
+    */
+  private def scopeEdge(t: String, forward: Boolean): Int = {
+    val mask = quoteMask(t)
+    val (open, close) = if (forward) ('(', ')') else (')', '(')
+    var k = if (forward) 0 else t.length - 1
+    var d = 0
+    while (k >= 0 && k < t.length) {
+      if (!mask(k)) {
+        val c = t.charAt(k)
+        if (c == open) d += 1
+        else if (c == close) { d -= 1; if (d < 0) return if (forward) k else k + 1 }
+      }
+      k += (if (forward) 1 else -1)
+    }
+    if (forward) t.length else 0
+  }
+
+  /** The alias a FROM operand binds: the trailing `[AS] name[(cols)]`,
+    * or a bare table name's last part; None for an unaliased subquery
+    * or table function.
+    */
+  private def relAlias(rel: String): Option[String] = {
+    val bare = """[A-Za-z_][\w.]*""".r
+    val aliased = """(?is).*?[\s)](?:AS\s+)?([A-Za-z_]\w*)\s*(?:\([^()]*\))?""".r
+    rel match {
+      case bare() => Some(rel.substring(rel.lastIndexOf('.') + 1))
+      case aliased(a) => Some(a)
+      case _ => None
+    }
+  }
+
+  /** Rewrites `alias.col` and `alias.*` of a POSITIONAL JOIN operand
+    * (`sides`: operand text → its columns) to names of the view that
+    * replaced the join. A name the view cannot resolve to exactly one
+    * of that operand's columns fails here, naming the alias. Nested
+    * subqueries keep their own scope and are left as written, so a
+    * correlated reference to an operand stays unresolved (loud).
+    */
+  private def requalifyPosJoin(text: String, sides: Seq[(String, Seq[String])],
+      view: String): String = {
+    val named = sides.flatMap { case (rel, cols) => relAlias(rel).map(_ -> cols) }
+    if (named.isEmpty) return text
+    val all = sides.flatMap(_._2)
+    val mask = quoteMask(text)
+    val sub = """(?i)\(\s*(SELECT|WITH|FROM|VALUES)\b""".r
+    for (o <- sub.findAllMatchIn(text) if !mask(o.start)) {
+      var k = o.start + 1; var d = 1
+      while (k < text.length && d > 0) {
+        if (!mask(k)) text.charAt(k) match { case '(' => d += 1; case ')' => d -= 1; case _ => () }
+        mask(k) = true; k += 1
+      }
+    }
+    val ref = """(?<![\w.`])([A-Za-z_]\w*)\s*\.\s*(\*|[A-Za-z_]\w*|`[^`]+`)""".r
+    ref.replaceAllIn(text, m => {
+      val mine = named.filter(_._1.equalsIgnoreCase(m.group(1)))
+      if (mask(m.start) || mine.isEmpty) java.util.regex.Matcher.quoteReplacement(m.matched)
+      else {
+        def fail(why: String): Nothing = throw new IllegalArgumentException(
+          s"POSITIONAL JOIN: cannot resolve ${m.matched}: $why")
+        if (mine.size > 1) fail(s"both joined relations are named ${m.group(1)}")
+        val cols = mine.head._2
+        val wanted = if (m.group(2) == "*") cols else Seq(m.group(2).stripPrefix("`").stripSuffix("`"))
+        val refs = wanted.map { c =>
+          if (!cols.exists(_.equalsIgnoreCase(c))) fail(s"${m.group(1)} has no column $c")
+          if (all.count(_.equalsIgnoreCase(c)) > 1)
+            fail(s"column $c is in both joined relations; alias it apart in a subquery")
+          if (c.matches("""[A-Za-z_]\w*""")) s"$view.$c" else s"$view.`$c`"
+        }
+        java.util.regex.Matcher.quoteReplacement(refs.mkString(", "))
+      }
+    })
   }
 
   private def rewritePragma(sql: String): String = {

@@ -714,6 +714,23 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
     one("SELECT * FROM (VALUES (1), (2)) t(x) POSITIONAL JOIN (VALUES (10), (20)) s(y) " +
       "POSITIONAL JOIN (VALUES (100), (200)) u(z) WHERE x > 1",
       """[{"x":2,"y":20,"z":200}]""")
+    // names qualified by an operand's alias resolve through the chain;
+    // a subquery's own alias of the same name keeps its scope
+    one("SELECT t.x, s.y FROM (VALUES (1), (2)) t(x) POSITIONAL JOIN (VALUES (10), (20)) s(y) " +
+      "POSITIONAL JOIN (VALUES (100), (200)) u(z) WHERE u.z > 100",
+      """[{"x":2,"y":20}]""")
+    one("SELECT (SELECT max(t.x) FROM (VALUES (5)) t(x)) AS m, t.x " +
+      "FROM (VALUES (1)) t(x) POSITIONAL JOIN (VALUES (2)) s(y)",
+      """[{"m":5,"x":1}]""")
+    // a name the zipped view cannot resolve fails naming the alias
+    for ((sql, why) <- Seq(
+        "SELECT t.zz FROM (VALUES (1)) t(x) POSITIONAL JOIN (VALUES (2)) s(y)" -> "t has no column zz",
+        "SELECT t.x FROM (VALUES (1)) t(x) POSITIONAL JOIN (VALUES (2)) s(x)" ->
+          "column x is in both joined relations")) {
+      val r = post(sql)
+      assert(r.statusCode() >= 400 && r.body().contains(why) &&
+        !r.body().contains("__graft_posjoin"), s"$sql -> ${r.body()}")
+    }
   }
 
   test("round-6 probe5 batch returns DuckDB-verified values") {

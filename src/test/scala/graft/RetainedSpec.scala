@@ -63,8 +63,9 @@ class RetainedSpec extends AnyFunSuite {
     // created by the query below
     val before = sc.emptyRDD[Int].id
     val rows = SparkEntry.queries("n_dedup_keep_best")(s, TestSpark.sf).collect()
-    // clusters exist, so connected components ran supersteps and
-    // localCheckpointed its label frames
+    // clusters exist; at this size connected components labels them on
+    // the driver (ConnectedComponentsSpec frees the distributed path's
+    // checkpoints)
     assert(rows.nonEmpty)
     Retained.release(s)
     val left = sc.getPersistentRDDs.filter(_._1 > before)
