@@ -15,7 +15,8 @@ import graft.functions.{CharEntropy, CosineSimilarity, SimHash64}
   *
   * This is preference tier (b) of the custom-operator ladder (builder
   * brief): a Catalyst `Expression` with `doGenCode`, reachable from
-  * both the Column API and SQL.
+  * both the Column API and SQL. A session built with this class also
+  * gets the `ParamLiterals` physical rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -27,6 +28,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     lastWins.foreach { case (name, (info, builder)) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    // a planner rule: only a session built with it has it (injectInto
+    // runs on a built session and cannot add one)
+    ParamLiterals.inject(ext)
   }
 }
 

@@ -8,7 +8,7 @@ import java.util.zip.GZIPOutputStream
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{CommandResultExec, SQLExecution}
 import Protocol._
 
 /** The reference's serving plane on Spark: `POST /` SQL → negotiated
@@ -24,11 +24,15 @@ import Protocol._
   *     response runs to completion (routers.rs:32-58,151-164)
   *   - gzip when Accept-Encoding requests it
   *   - bounded memory: Spark's internal rows stream from the executed
-  *     plan one partition per job, as `toLocalIterator` pulls them (the
-  *     1 MiB duplex pipe's role is played by partition-at-a-time pull),
-  *     straight into the compiled encoders
+  *     plan straight into the compiled encoders, pulled by one job per
+  *     window of partitions whose tasks each buffer at most
+  *     `WindowedPull.TaskBudget` compressed bytes (the 1 MiB duplex
+  *     pipe's role is played by that per-window bound)
   *   - every job of a request, before and after the first row, runs
-  *     under that request's job group
+  *     under that request's job group, and a client that disconnects
+  *     mid-stream cancels it
+  *   - a `Server-Timing` header on every 200: admission wait, dialect
+  *     rewrite, planning and the wait for the first row
   */
 final class QueryServer(
     spark: SparkSession,
@@ -108,7 +112,7 @@ final class QueryServer(
     """(?is)^\s*COPY\s+(\(.+\)|[A-Za-z_][A-Za-z0-9_.]*)\s+TO\s+'([^']+)'\s*(?:\(\s*(.*?)\s*\))?\s*;?\s*$""".r
 
   private def handleCopy(src: String, outPath: String, optStr: String)
-      : Either[Problem, (DataFrame, Iterator[InternalRow])] = {
+      : Either[Problem, DataFrame] = {
     if (allowedDirs.nonEmpty && !pathAllowed(outPath))
       return Left(Problem(400, "SQL Error",
         s"file access outside allowed directories: $outPath"))
@@ -221,12 +225,11 @@ final class QueryServer(
           } catch { case NonFatal(_) => () }
         }
       }
-      val out = spark.createDataFrame(
+      Right(spark.createDataFrame(
         java.util.Collections.singletonList(org.apache.spark.sql.Row(n)),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("Count",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      Right((out, internalRows(out)))
+            org.apache.spark.sql.types.LongType, nullable = false)))))
     } catch {
       case NonFatal(e) =>
         Left(Problem(400, "SQL Error", s"COPY failed: ${String.valueOf(e.getMessage)}"))
@@ -272,16 +275,35 @@ final class QueryServer(
     x.close()
   }
 
-  /** Spark's internal rows of `df`, pulled one partition per job: what
-    * `Dataset.toLocalIterator` runs, without its conversion of every row
-    * to an external `Row`.
+  /** Spark's internal rows of `df`, pulled in windows of partitions
+    * (`WindowedPull`); the first window's job starts before this
+    * returns. A command's rows are already on the driver.
     */
   private def internalRows(df: DataFrame): Iterator[InternalRow] = {
     val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("toLocalIterator")) {
+    SQLExecution.withNewExecutionId(qe, Some("serve")) {
       qe.executedPlan.resetMetrics()
-      qe.executedPlan.executeToIterator()
+      qe.executedPlan match {
+        case c: CommandResultExec => c.executeToIterator()
+        case plan => WindowedPull(spark.sparkContext, plan.execute(), plan.output.length)
+      }
     }
+  }
+
+  /** Durations of the phases before the first row, in order, for the
+    * `Server-Timing` header. Written by the request's future and read
+    * after it completes.
+    */
+  private final class Phases {
+    private var last = System.nanoTime()
+    private val durs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def end(phase: String): Unit = {
+      val now = System.nanoTime()
+      durs(phase) = now - last
+      last = now
+    }
+    def header: String =
+      durs.map { case (p, ns) => f"$p;dur=${ns / 1e6}%.1f" }.mkString(", ")
   }
 
   private def readBody(x: HttpExchange): Either[Problem, Array[Byte]] = {
@@ -340,7 +362,9 @@ final class QueryServer(
     * for its part and clears it after.
     */
   private def runQuery(x: HttpExchange, rawSql: String, format: Format): Unit = {
+    val phases = new Phases
     pool.acquire()
+    phases.end("admit")
     try {
       // EVERYTHING that can run Spark jobs happens inside this future,
       // under the job group and the first-row timeout: the dialect
@@ -354,11 +378,15 @@ final class QueryServer(
       val fut = exec.submit(new java.util.concurrent.Callable[Either[Problem, (DataFrame, Iterator[InternalRow])]] {
         def call(): Either[Problem, (DataFrame, Iterator[InternalRow])] = {
           joinGroup()
-          try firstRow()
-          finally spark.sparkContext.clearJobGroup()
+          try plan().map { df =>
+            val rows = internalRows(df)
+            rows.hasNext // the first row, under the timeout
+            phases.end("first_row")
+            (df, rows)
+          } finally spark.sparkContext.clearJobGroup()
         }
 
-        private def firstRow(): Either[Problem, (DataFrame, Iterator[InternalRow])] = {
+        private def plan(): Either[Problem, DataFrame] = {
           // DuckDB-dialect sugar → Spark SQL (reference clients switch
           // without editing their queries); file sources are
           // sandbox-checked BEFORE the rewrite reads any schema
@@ -367,7 +395,10 @@ final class QueryServer(
           // check (handleCopy returns the DuckDB-shaped Count result)
           rawSql match {
             case CopyRe(src, outPath, opts) =>
-              return handleCopy(src, outPath, Option(opts).getOrElse(""))
+              phases.end("rewrite")
+              val copied = handleCopy(src, outPath, Option(opts).getOrElse(""))
+              phases.end("plan")
+              return copied
             case _ => ()
           }
           val sql =
@@ -380,6 +411,7 @@ final class QueryServer(
               case NonFatal(e) =>
                 return Left(Problem(400, "SQL Error", String.valueOf(e.getMessage)))
             }
+          phases.end("rewrite")
           // sandbox pre-check BEFORE spark.sql: commands (CTAS, INSERT,
           // SET, ...) execute eagerly inside spark.sql, so under a sandbox
           // only pure queries are admitted — matching the reference's
@@ -418,10 +450,9 @@ final class QueryServer(
           if (outside.nonEmpty)
             return Left(Problem(400, "SQL Error",
               s"file access outside allowed directories: ${outside.mkString(", ")}"))
-
-          val rows = internalRows(df)
-          rows.hasNext // force plan + first partition under the timeout
-          Right((df, rows))
+          df.queryExecution.executedPlan
+          phases.end("plan")
+          Right(df)
         }
       })
       val (df, rows) =
@@ -452,6 +483,7 @@ final class QueryServer(
       val gzip = header(x, "Accept-Encoding").exists(_.toLowerCase.contains("gzip"))
       x.getResponseHeaders.set("Content-Type", format.contentType)
       if (gzip) x.getResponseHeaders.set("Content-Encoding", "gzip")
+      x.getResponseHeaders.set("Server-Timing", phases.header)
       x.sendResponseHeaders(200, 0L) // chunked
       val raw = x.getResponseBody
       val out: OutputStream = if (gzip) new GZIPOutputStream(raw) else raw
@@ -464,6 +496,13 @@ final class QueryServer(
           case Csv => RowEncoders.writeCsv(schema, rows, out)
           case Arrow => ArrowIpcEncoder.writeInternal(schema, rows, out)
         }
+      } catch {
+        case NonFatal(e) =>
+          // the client is gone (or encoding failed): stop the window job
+          // in flight rather than let it run to its end unread
+          try spark.sparkContext.cancelJobGroup(jobGroup)
+          catch { case NonFatal(_) => () }
+          throw e
       } finally {
         spark.sparkContext.clearJobGroup()
         out.flush()
@@ -484,6 +523,10 @@ object ServerMain {
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.GraftSession.tune(
       SparkSession.builder()
+        // the planner rule only: injectInto below registers the
+        // functions, and GraftExtensions' builtin overrides would log a
+        // replacement WARN each at session build
+        .withExtensions(graft.ParamLiterals.inject)
         .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
         .appName("graft-server")
         .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))

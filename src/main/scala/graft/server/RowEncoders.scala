@@ -12,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Streaming row encoders for the three text formats (uquery-rs
   * src/web/routers.rs:137-148 delegates these to arrow-csv/arrow-json;
   * here they are hand-rolled over Spark's internal rows, preserving the
-  * bounded-memory streaming property — rows flow driver→socket one
-  * partition at a time without materializing the result).
+  * bounded-memory streaming property — rows flow driver→socket as
+  * `WindowedPull` hands each partition over, one budget-bounded window
+  * of partitions resident at a time, without materializing the result).
   *
   * Each format compiles once per schema into per-column writers over
   * `SpecializedGetters` that append UTF-8 bytes to one reused buffer:

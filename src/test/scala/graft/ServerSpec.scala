@@ -33,8 +33,8 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def post(body: String, accept: String = "application/json",
       contentType: String = "text/plain",
-      encoding: Option[String] = None): HttpResponse[Array[Byte]] = {
-    val b = HttpRequest.newBuilder(URI.create(s"$base/"))
+      encoding: Option[String] = None, to: String = base): HttpResponse[Array[Byte]] = {
+    val b = HttpRequest.newBuilder(URI.create(s"$to/"))
       .header("Accept", accept).header("Content-Type", contentType)
       .POST(HttpRequest.BodyPublishers.ofString(body))
     encoding.foreach(e => b.header("Accept-Encoding", e))
@@ -182,7 +182,14 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("every job of a request, before and after the first row, runs under that request's job group") {
+  private val markers = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** The job group of every job that started while `body` ran, in start
+    * order. A marker job under its own group runs before and after: once
+    * the listener has seen a marker, it has seen every job started
+    * before it (the bus delivers in order).
+    */
+  private def jobsDuring(body: => Unit): Vector[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -191,34 +198,140 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .getOrElse("<none>"))
     }
-    // one job under a marker group: once the listener has seen it, it
-    // has seen every job started before it (the bus delivers in order)
-    def mark(name: String): Unit = {
+    def mark(): String = {
+      val name = s"mark-${markers.incrementAndGet()}"
       spark.sparkContext.setJobGroup(name, name)
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.clearJobGroup()
       val deadline = System.nanoTime() + 30000000000L
       while (!groups.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
       assert(groups.contains(name), s"listener never saw marker $name")
+      name
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      mark("mark-0")
-      assert(post("SELECT * FROM range(0, 200000, 1, 4)", accept = "text/csv").statusCode() == 200)
-      mark("mark-1")
-      assert(post("SELECT 1").statusCode() == 200)
-      mark("mark-2")
+      val a = mark()
+      body
+      val b = mark()
       val seen = groups.asScala.toVector
-      def between(a: String, b: String) = seen.slice(seen.indexOf(a) + 1, seen.indexOf(b))
-      val first = between("mark-0", "mark-1")
-      val second = between("mark-1", "mark-2")
-      // one job per partition: the first runs on the request's future,
-      // the rest while the handler thread streams
-      assert(first.size >= 4, s"expected a job per partition: $first")
-      assert(first.distinct.size == 1 && first.head.startsWith("graft-query-"), first)
-      assert(second.nonEmpty && second.distinct.size == 1, second)
-      assert(second.head.startsWith("graft-query-") && second.head != first.head, second)
+      seen.slice(seen.indexOf(a) + 1, seen.indexOf(b))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("every job of a request, before and after the first row, runs under that request's job group") {
+    val first = jobsDuring(assert(
+      post("SELECT * FROM range(0, 200000, 1, 16)", accept = "text/csv").statusCode() == 200))
+    val second = jobsDuring(assert(post("SELECT 1").statusCode() == 200))
+    // a window per job over 16 partitions on 4 cores: 4, then 8, then
+    // the last 4; the first runs on the request's future, the rest
+    // while the handler thread streams
+    assert(first.size == 3, s"expected a job per window of 4, 8 and 4 partitions: $first")
+    assert(first.distinct.size == 1 && first.head.startsWith("graft-query-"), first)
+    assert(second.nonEmpty && second.distinct.size == 1, second)
+    assert(second.head.startsWith("graft-query-") && second.head != first.head, second)
+  }
+
+  test("rows come back in partition order, with fewer jobs than partitions") {
+    var body = ""
+    val jobs = jobsDuring {
+      val r = post("SELECT * FROM range(0, 200000, 1, 16)", accept = "text/csv")
+      assert(r.statusCode() == 200)
+      body = new String(r.body(), "UTF-8")
+    }
+    val ids = body.split('\n').toVector
+    assert(ids.head == "id" && ids.size == 200001)
+    assert(ids.tail.iterator.zipWithIndex.forall { case (v, i) => v == i.toString },
+      "rows out of order")
+    assert(jobs.nonEmpty && jobs.size < 16, jobs)
+  }
+
+  test("a one-row-group file cut into several splits serves all its rows in one job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_one_group")
+    val path = dir.resolve("t").toString
+    spark.range(0, 20000, 1, 1).selectExpr("id", "sha2(CAST(id AS STRING), 256) AS h")
+      .write.parquet(path)
+    val child = spark.newSession()
+    val file = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet")).head
+    // three byte-range splits; the row group's midpoint lies in one of them
+    child.conf.set("spark.sql.files.maxPartitionBytes", (file.length / 3 + 1).toString)
+    val df = child.read.parquet(path)
+    assert(df.rdd.getNumPartitions >= 3)
+    df.createOrReplaceTempView("one_group")
+    val srv1 = new QueryServer(child, 0)
+    srv1.start()
+    try {
+      var lines = 0
+      val jobs = jobsDuring {
+        val r = post("SELECT id FROM one_group", accept = "text/csv", to = s"http://localhost:${srv1.boundPort}")
+        assert(r.statusCode() == 200)
+        lines = new String(r.body(), "UTF-8").count(_ == '\n')
+      }
+      assert(lines == 20001)
+      assert(jobs.size == 1, jobs)
+    } finally {
+      srv1.stop()
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { java.nio.file.Files.delete(p); () })
+    }
+  }
+
+  test("partitions past the per-task budget still stream in order") {
+    // two ~25 MB partitions of random text: both tasks of the window
+    // overflow, then each partition is pulled whole by a job of its own
+    var body = ""
+    val jobs = jobsDuring {
+      val r = post("SELECT id, randstr(1000) AS s FROM range(0, 50000, 1, 2)", accept = "text/csv")
+      assert(r.statusCode() == 200)
+      body = new String(r.body(), "UTF-8")
+    }
+    val ids = body.split('\n').iterator.drop(1).map(l => l.substring(0, l.indexOf(','))).toVector
+    assert(ids.size == 50000)
+    assert(ids.iterator.zipWithIndex.forall { case (v, i) => v == i.toString }, "rows out of order")
+    assert(jobs.size == 3, s"expected the window and one job per overflowed partition: $jobs")
+  }
+
+  test("a client that disconnects mid-stream stops its request's jobs") {
+    val one = new QueryServer(spark, 0, poolSize = 1)
+    one.start()
+    try {
+      val sql = "SELECT * FROM range(0, 100000000, 1, 64)"
+      val streamed = jobsDuring {
+        val sock = new java.net.Socket("localhost", one.boundPort)
+        try {
+          sock.getOutputStream.write((s"POST / HTTP/1.1\r\nHost: localhost\r\nAccept: text/csv\r\n" +
+            s"Content-Type: text/plain\r\nContent-Length: ${sql.length}\r\n\r\n$sql").getBytes("UTF-8"))
+          sock.getOutputStream.flush()
+          val in = sock.getInputStream
+          val buf = new Array[Byte](8192)
+          var got = 0
+          while (got < (64 << 10)) {
+            val n = in.read(buf)
+            assert(n > 0, "stream ended early")
+            got += n
+          }
+        } finally {
+          sock.setSoLinger(true, 0) // reset, not a graceful close
+          sock.close()
+        }
+        // the one admission slot frees only once that handler is done
+        assert(post("SELECT 1", to = s"http://localhost:${one.boundPort}").statusCode() == 200)
+      }
+      val group = streamed.head
+      assert(group.startsWith("graft-query-"))
+      // a full read would take 9 windows (4, 8, 8, …) of the 64 partitions
+      assert(streamed.count(_ == group) < 9, streamed)
+      val later = jobsDuring(Thread.sleep(500))
+      assert(!later.contains(group), s"a job of the closed request started afterwards: $later")
+    } finally one.stop()
+  }
+
+  test("every 200 carries Server-Timing with the phases before the first row") {
+    val r = post(TestQuery)
+    assert(r.statusCode() == 200)
+    val timing = r.headers().firstValue("Server-Timing").get()
+    val phases = timing.split(", ").toSeq.map(_.split(";dur="))
+    assert(phases.map(_.head) == Seq("admit", "rewrite", "plan", "first_row"), timing)
+    assert(phases.forall(p => p(1).toDouble >= 0), timing)
   }
 
   test("content negotiation: first match wins, */* is JSON, unknown is 406") {

@@ -4,6 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,6 +54,9 @@ class SoakSpec extends AnyFunSuite with BeforeAndAfterAll {
     val done = new CountDownLatch(clients)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val completed = new AtomicInteger(0)
+    // server-side time to first row of each request: the sum of its
+    // Server-Timing phases (admission, rewrite, plan, first row)
+    val firstRowMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
     (0 until clients).foreach { c =>
       pool.submit(new Runnable {
         override def run(): Unit = {
@@ -77,7 +81,11 @@ class SoakSpec extends AnyFunSuite with BeforeAndAfterAll {
                 failures.add(s"client $c req $i: ${r.statusCode()} ${r.body().take(120)}")
               else if (!r.body().contains(s""""t":$tag"""))
                 failures.add(s"client $c req $i: cross-wired body ${r.body().take(120)}")
-              else completed.incrementAndGet()
+              else {
+                completed.incrementAndGet()
+                firstRowMs.add(r.headers().firstValue("Server-Timing").get()
+                  .split(", ").map(_.split(";dur=")(1).toDouble).sum)
+              }
             }
           } catch {
             case e: Throwable => failures.add(s"client $c: ${e.getMessage}")
@@ -91,6 +99,9 @@ class SoakSpec extends AnyFunSuite with BeforeAndAfterAll {
     pool.shutdown()
     assert(failures.isEmpty, s"soak failures: ${failures.toArray.take(5).mkString("; ")}")
     assert(completed.get() == clients * perClient)
+    val sorted = firstRowMs.asScala.toVector.map(_.doubleValue).sorted
+    def pct(p: Double) = sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
+    info(f"time to first row over ${sorted.length} requests: p50 ${pct(0.5)}%.1f ms, p99 ${pct(0.99)}%.1f ms")
   }
 
   test("408 fires only where intended, and the slot is reclaimed afterwards") {
