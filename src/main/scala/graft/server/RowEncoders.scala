@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * src/web/routers.rs:137-148 delegates these to arrow-csv/arrow-json;
   * here they are hand-rolled over Spark's internal rows, preserving the
   * bounded-memory streaming property — rows flow driver→socket as
-  * `WindowedPull` hands each partition over, one budget-bounded window
+  * `WindowedPull` hands each partition over, one budget-bounded wave
   * of partitions resident at a time, without materializing the result).
   *
   * Each format compiles once per schema into per-column writers over

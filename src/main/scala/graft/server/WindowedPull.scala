@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.ExecutionContext
 import scala.jdk.CollectionConverters._
 import scala.util.Failure
-import org.apache.spark.{SparkContext, SparkEnv}
+import org.apache.spark.{InterruptibleIterator, SparkContext, SparkEnv, TaskContext}
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -14,25 +14,24 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 /** The rows of an executed plan's RDD, pulled to the driver in partition
   * order by one job per window of partitions.
   *
-  * The first window is one wave (`min(partitions, defaultParallelism)`);
-  * each later one doubles, up to `MaxWindow` partitions. A task encodes
-  * its partition as LZ4-compressed UnsafeRow bytes in 64 KiB chunks, and
-  * gives up with `Overflow` once it holds more than `TaskBudget` bytes,
-  * so a window holds at most its size times `TaskBudget` (plus one row
-  * per task) on the driver. Each partition is handed over as soon as it
-  * and every earlier one have arrived. After the first overflow, the
-  * window's later results are dropped and every remaining partition is
-  * pulled whole by a job of its own, as `toLocalIterator` does.
+  * A window is one wave: `min(partitions left, defaultParallelism)`
+  * partitions. A task encodes its partition as LZ4-compressed UnsafeRow
+  * bytes in 64 KiB chunks, and gives up with `Overflow` once it holds
+  * more than `TaskBudget` bytes, so a window holds at most
+  * `defaultParallelism` × `TaskBudget` (plus one row per task) on the
+  * driver: 64 MiB on 4 cores. Each partition is handed over as soon as it
+  * and every earlier one have arrived. The first overflow cancels the
+  * window's job; the window's partitions that had already arrived are
+  * kept, and every other remaining partition is pulled whole by a job of
+  * its own, as `toLocalIterator` does.
   */
-private[server] object WindowedPull {
+private[graft] object WindowedPull {
 
   /** Compressed bytes a task may buffer before it overflows. A
     * `serve_stream` data partition (75k lineitem rows, 4.9 MB of CSV)
     * compresses to 3.1 MiB.
     */
   val TaskBudget: Long = 16L << 20
-  /** Partitions of a grown window: at most 8 × `TaskBudget` = 128 MiB. */
-  private val MaxWindow = 8
   private val ChunkBytes = 64 << 10 // below G1's humongous threshold
 
   sealed trait Part extends Serializable
@@ -47,9 +46,9 @@ private[server] object WindowedPull {
     val n = rdd.getNumPartitions
     val budgeted = rdd.mapPartitions(encode(TaskBudget))
     val whole = rdd.mapPartitions(encode(Long.MaxValue))
+    def window(p: Int) = new Window(sc, budgeted, p, math.min(n - p, sc.defaultParallelism))
     new Iterator[InternalRow] {
-      private var window: Window =
-        if (n == 0) null else new Window(sc, budgeted, 0, math.min(n, sc.defaultParallelism))
+      private var win: Window = if (n == 0) null else window(0)
       private var overflowed = false
       private var nextPart = 0
       private var cur: Iterator[InternalRow] = Iterator.empty
@@ -66,41 +65,37 @@ private[server] object WindowedPull {
         if (hasNext) cur.next() else throw new NoSuchElementException("end of result")
 
       private def pull(p: Int): Array[Array[Byte]] = {
-        if (!overflowed) {
-          if (p >= window.end) {
-            val size = math.max(window.size, math.min(2 * window.size, MaxWindow))
-            window = new Window(sc, budgeted, p, math.min(n - p, size))
-          }
-          window.take(p) match {
-            case Rows(chunks) => return chunks
-            case Overflow =>
-              overflowed = true
-              window.abandon()
-              window = null
-          }
+        if (win != null && p >= win.end) win = if (overflowed) null else window(p)
+        (if (win == null) null else win.take(p)) match {
+          case Rows(chunks) => chunks
+          case _ => // Overflow, or not arrived before the window was cancelled
+            if (!overflowed) win.cancel()
+            overflowed = true
+            sc.runJob(whole, (it: Iterator[Part]) => it.next(), Seq(p)).head
+              .asInstanceOf[Rows].chunks
         }
-        val part = sc.runJob(whole, (it: Iterator[Part]) => it.next(), Seq(p)).head
-        part.asInstanceOf[Rows].chunks
       }
     }
   }
 
-  /** One job over partitions [start, start + size) of `rdd`. */
-  private final class Window(sc: SparkContext, rdd: RDD[Part], val start: Int, val size: Int) {
+  /** One job over partitions [start, end) of `rdd`. */
+  private final class Window(sc: SparkContext, rdd: RDD[Part], start: Int, size: Int) {
     val end: Int = start + size
     private val slots = new Array[Part](size)
-    private var abandoned = false
+    private var cancelled = false
     private val job = sc.submitJob(rdd, (it: Iterator[Part]) => it.next(), start until end,
       (i: Int, part: Part) => synchronized {
-        if (!abandoned) slots(i) = part
+        slots(i) = part
         notifyAll()
       }, ())
     job.onComplete(_ => synchronized(notifyAll()))(ExecutionContext.parasitic)
 
-    /** Partition `p`'s result, once it has arrived; the job's failure, if it failed. */
+    /** Partition `p`'s result, once it has arrived; the job's failure, if
+      * it failed; null if the window was cancelled before it arrived.
+      */
     def take(p: Int): Part = synchronized {
       val i = p - start
-      while (slots(i) == null) job.value match {
+      while (slots(i) == null && !cancelled) job.value match {
         case Some(Failure(e)) => throw e
         case _ => wait()
       }
@@ -109,15 +104,16 @@ private[server] object WindowedPull {
       part
     }
 
-    /** Drop every result not yet taken, and any that still arrives. */
-    def abandon(): Unit = synchronized {
-      abandoned = true
-      java.util.Arrays.fill(slots.asInstanceOf[Array[AnyRef]], null)
+    /** Kill the job's tasks still running. Results already here stay. */
+    def cancel(): Unit = synchronized {
+      cancelled = true
+      if (!job.isCompleted) job.cancel()
     }
   }
 
-  private def encode(budget: Long)(rows: Iterator[InternalRow]): Iterator[Part] = {
+  private def encode(budget: Long)(input: Iterator[InternalRow]): Iterator[Part] = {
     val sink = new Chunks
+    val rows = new InterruptibleIterator(TaskContext.get(), input) // stops once cancelled
     val out = new DataOutputStream(
       new LZ4CompressionCodec(SparkEnv.get.conf).compressedOutputStream(sink))
     val buf = new Array[Byte](4096)

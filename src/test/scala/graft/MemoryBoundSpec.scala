@@ -14,9 +14,10 @@ import graft.server.QueryServer
   * The reference guarantees server memory independent of result size
   * via a 1 MiB duplex (uquery-rs src/web/routers.rs:108); our
   * equivalent is the windowed pull of internal rows from the executed
-  * plan (one window of partitions resident, each task's compressed rows
-  * capped by a fixed budget, or a single partition once a task passes
-  * it) feeding each streaming encoder (ArrowIpcEncoder additionally
+  * plan (one wave of partitions resident, each task's compressed rows
+  * capped by a fixed 16 MiB budget, or a single partition once a task
+  * passes it; ServerSpec checks both bounds by task result size)
+  * feeding each streaming encoder (ArrowIpcEncoder additionally
   * caps batches at 1024 rows). This spec makes the property FALSIFIABLE
   * instead of asserted: it first pins heap ballast so the JVM's free
   * slack is ~600 MiB, then streams a ~1.5 GiB result through each of

@@ -19,17 +19,31 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var srv: QueryServer = _
   private var base: String = _
+  // for results whose first row may take longer than `srv`'s 3 s timeout
+  private var patient: QueryServer = _
+  private var patientBase: String = _
   private val client = HttpClient.newHttpClient()
 
   override def beforeAll(): Unit = {
     spark.udf.register("sleep_ms", (ms: Int) => { Thread.sleep(ms.toLong); ms })
+    spark.udf.register("gated", (x: Long) => {
+      // a gate never opened opens itself after 60 s, so the test fails, not hangs
+      if (!ServerSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS)) ServerSpec.gate.countDown()
+      x
+    })
     T.views(spark, sf, T.all: _*)
     srv = new QueryServer(spark, 0, poolSize = 4, queryTimeoutMillis = 3000)
     srv.start()
     base = s"http://localhost:${srv.boundPort}"
+    patient = new QueryServer(spark, 0, poolSize = 1)
+    patient.start()
+    patientBase = s"http://localhost:${patient.boundPort}"
   }
 
-  override def afterAll(): Unit = if (srv != null) srv.stop()
+  override def afterAll(): Unit = {
+    if (srv != null) srv.stop()
+    if (patient != null) patient.stop()
+  }
 
   private def post(body: String, accept: String = "application/json",
       contentType: String = "text/plain",
@@ -184,28 +198,43 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val markers = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** The job group of every job that started while `body` ran, in start
-    * order. A marker job under its own group runs before and after: once
-    * the listener has seen a marker, it has seen every job started
-    * before it (the bus delivers in order).
+  /** What the scheduler reported: a job started under `group`, or a task
+    * of `stage` over `partition` ended, killed or with a result of
+    * `resultBytes`.
     */
-  private def jobsDuring(body: => Unit): Vector[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private sealed trait Ev
+  private final case class JobStart(group: String, stages: Seq[Int]) extends Ev
+  private final case class TaskEnd(stage: Int, partition: Int, resultBytes: Long, killed: Boolean)
+      extends Ev
+
+  /** Every job start and task end reported while `body` ran, in order. A
+    * marker job under its own group runs before and after: once the
+    * listener has seen a marker, it has seen every job started before it
+    * (the bus delivers in order).
+    */
+  private def eventsDuring(body: => Unit): Vector[Ev] = {
+    import org.apache.spark.TaskKilled
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     import scala.jdk.CollectionConverters._
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[Ev]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("<none>"))
+        events.add(JobStart(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"), e.stageIds))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        events.add(TaskEnd(e.stageId, e.taskInfo.partitionId,
+          Option(e.taskMetrics).fold(0L)(_.resultSize), e.reason.isInstanceOf[TaskKilled]))
     }
+    def marks(name: String): Ev => Boolean = { case JobStart(g, _) => g == name; case _ => false }
+    def seen(name: String) = events.asScala.exists(marks(name))
     def mark(): String = {
       val name = s"mark-${markers.incrementAndGet()}"
       spark.sparkContext.setJobGroup(name, name)
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.clearJobGroup()
       val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(name), s"listener never saw marker $name")
+      while (!seen(name) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen(name), s"listener never saw marker $name")
       name
     }
     spark.sparkContext.addSparkListener(listener)
@@ -213,19 +242,44 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       val a = mark()
       body
       val b = mark()
-      val seen = groups.asScala.toVector
-      seen.slice(seen.indexOf(a) + 1, seen.indexOf(b))
+      val all = events.asScala.toVector
+      all.slice(all.indexWhere(marks(a)) + 1, all.indexWhere(marks(b)))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The job group of every job that started while `body` ran, in start order. */
+  private def jobsDuring(body: => Unit): Vector[String] =
+    eventsDuring(body).collect { case JobStart(g, _) => g }
+
+  /** Lines of a CSV response, counted as it streams. */
+  private def csvLines(sql: String): Long = {
+    val r = client.send(
+      HttpRequest.newBuilder(URI.create(s"$patientBase/")).header("Accept", "text/csv")
+        .POST(HttpRequest.BodyPublishers.ofString(sql)).build(),
+      HttpResponse.BodyHandlers.ofInputStream())
+    assert(r.statusCode() == 200)
+    val in = r.body()
+    try {
+      val buf = new Array[Byte](1 << 16)
+      var lines = 0L
+      var n = in.read(buf)
+      while (n >= 0) {
+        var i = 0
+        while (i < n) { if (buf(i) == '\n') lines += 1; i += 1 }
+        n = in.read(buf)
+      }
+      lines
+    } finally in.close()
   }
 
   test("every job of a request, before and after the first row, runs under that request's job group") {
     val first = jobsDuring(assert(
       post("SELECT * FROM range(0, 200000, 1, 16)", accept = "text/csv").statusCode() == 200))
     val second = jobsDuring(assert(post("SELECT 1").statusCode() == 200))
-    // a window per job over 16 partitions on 4 cores: 4, then 8, then
-    // the last 4; the first runs on the request's future, the rest
-    // while the handler thread streams
-    assert(first.size == 3, s"expected a job per window of 4, 8 and 4 partitions: $first")
+    // a job per window of one wave over 16 partitions on 4 cores; the
+    // first runs on the request's future, the rest while the handler
+    // thread streams
+    assert(first.size == 4, s"expected a job per window of 4 partitions: $first")
     assert(first.distinct.size == 1 && first.head.startsWith("graft-query-"), first)
     assert(second.nonEmpty && second.distinct.size == 1, second)
     assert(second.head.startsWith("graft-query-") && second.head != first.head, second)
@@ -275,19 +329,64 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("partitions past the per-task budget still stream in order") {
-    // two ~25 MB partitions of random text: both tasks of the window
-    // overflow, then each partition is pulled whole by a job of its own
+  test("a window holds one wave of partitions, each at most the task budget") {
+    // partitions of random text (incompressible to LZ4), each just under
+    // the budget: a ~1 KiB row is 1,028 bytes of UnsafeRow and prefix
+    val budget = graft.server.WindowedPull.TaskBudget
+    val wave = spark.sparkContext.defaultParallelism
+    val perPart = budget * 9 / 10 / 1028
+    val parts = 2 * wave
+    var lines = 0L
+    val events = eventsDuring {
+      lines = csvLines(s"SELECT id, randstr(1000) AS s FROM range(0, ${perPart * parts}, 1, $parts)")
+    }
+    assert(lines == perPart * parts + 1)
+    val jobs = events.collect { case j: JobStart => j }
+    assert(jobs.size == 2, s"expected a job per wave of $wave partitions: $jobs")
+    for (j <- jobs) {
+      val tasks = events.collect { case t: TaskEnd if j.stages.contains(t.stage) => t }
+      assert(tasks.size == wave, tasks)
+      // the chunks, plus the task's serialized metrics
+      assert(tasks.forall(t => t.resultBytes > budget * 3 / 4 && t.resultBytes <= budget + (256 << 10)),
+        s"a task's result is not just under the $budget-byte budget: ${tasks.map(_.resultBytes)}")
+    }
+  }
+
+  test("an overflowing task cancels its window; the rest still streams in order") {
+    // one window over three partitions of 20,000 ids: p0 is ~20 MB of
+    // random text and passes the budget, p1 is small and arrives at once,
+    // p2 keeps 1,000 rows, which wait at a gate that opens when the
+    // query's second job (p0 pulled whole) starts, then take 1 ms each
+    val sql = "SELECT id, CASE WHEN id < 20000 THEN randstr(1000) WHEN id < 40000 THEN 'x' " +
+      "ELSE CAST(gated(id) + sleep_ms(1) AS STRING) END AS s " +
+      "FROM range(0, 60000, 1, 3) WHERE id < 41000"
+    val opener = new org.apache.spark.scheduler.SparkListener {
+      private var starts = 0
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id", "").startsWith("graft-query-"))) {
+          starts += 1
+          if (starts == 2) ServerSpec.gate.countDown()
+        }
+    }
+    spark.sparkContext.addSparkListener(opener)
     var body = ""
-    val jobs = jobsDuring {
-      val r = post("SELECT id, randstr(1000) AS s FROM range(0, 50000, 1, 2)", accept = "text/csv")
+    val events = try eventsDuring {
+      val r = post(sql, accept = "text/csv", to = patientBase)
       assert(r.statusCode() == 200)
       body = new String(r.body(), "UTF-8")
-    }
+    } finally spark.sparkContext.removeSparkListener(opener)
     val ids = body.split('\n').iterator.drop(1).map(l => l.substring(0, l.indexOf(','))).toVector
-    assert(ids.size == 50000)
-    assert(ids.iterator.zipWithIndex.forall { case (v, i) => v == i.toString }, "rows out of order")
-    assert(jobs.size == 3, s"expected the window and one job per overflowed partition: $jobs")
+    assert(ids == (0 until 41000).map(_.toString), "rows missing or out of order")
+    val jobs = events.collect { case j: JobStart => j }
+    // the window, then p0 and p2 whole; p1's rows had arrived and are kept
+    assert(jobs.size == 3, s"expected the window and a job for each of p0 and p2: $jobs")
+    val window = events.collect { case t: TaskEnd if jobs.head.stages.contains(t.stage) => t }
+    val p0 = window.find(_.partition == 0).get
+    assert(!p0.killed && p0.resultBytes < (1 << 20), s"p0 did not stop at the budget: $p0")
+    // p2 was killed once it read on, and stopped before its re-pull
+    val p2 = window.find(_.partition == 2).get
+    assert(p2.killed, s"the window's p2 task was not cancelled: $p2")
+    assert(events.indexOf(p2) < events.indexOf(jobs(2)), events)
   }
 
   test("a client that disconnects mid-stream stops its request's jobs") {
@@ -318,8 +417,8 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val group = streamed.head
       assert(group.startsWith("graft-query-"))
-      // a full read would take 9 windows (4, 8, 8, …) of the 64 partitions
-      assert(streamed.count(_ == group) < 9, streamed)
+      // a full read would take 16 windows of 4 of the 64 partitions
+      assert(streamed.count(_ == group) < 16, streamed)
       val later = jobsDuring(Thread.sleep(500))
       assert(!later.contains(group), s"a job of the closed request started afterwards: $later")
     } finally one.stop()
@@ -388,4 +487,9 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = post("SELECT count(*) AS n FROM lineitem")
     assert(new String(r.body(), "UTF-8").matches("""\[\{"n":\d+\}\]"""))
   }
+}
+
+object ServerSpec {
+  /** Holds the `gated` UDF's rows until a test opens it. */
+  val gate = new java.util.concurrent.CountDownLatch(1)
 }
