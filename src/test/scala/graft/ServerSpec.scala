@@ -251,27 +251,6 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def jobsDuring(body: => Unit): Vector[String] =
     eventsDuring(body).collect { case JobStart(g, _) => g }
 
-  /** Lines of a CSV response, counted as it streams. */
-  private def csvLines(sql: String): Long = {
-    val r = client.send(
-      HttpRequest.newBuilder(URI.create(s"$patientBase/")).header("Accept", "text/csv")
-        .POST(HttpRequest.BodyPublishers.ofString(sql)).build(),
-      HttpResponse.BodyHandlers.ofInputStream())
-    assert(r.statusCode() == 200)
-    val in = r.body()
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var lines = 0L
-      var n = in.read(buf)
-      while (n >= 0) {
-        var i = 0
-        while (i < n) { if (buf(i) == '\n') lines += 1; i += 1 }
-        n = in.read(buf)
-      }
-      lines
-    } finally in.close()
-  }
-
   test("every job of a request, before and after the first row, runs under that request's job group") {
     val first = jobsDuring(assert(
       post("SELECT * FROM range(0, 200000, 1, 16)", accept = "text/csv").statusCode() == 200))
@@ -338,7 +317,10 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val parts = 2 * wave
     var lines = 0L
     val events = eventsDuring {
-      lines = csvLines(s"SELECT id, randstr(1000) AS s FROM range(0, ${perPart * parts}, 1, $parts)")
+      val r = post(s"SELECT id, randstr(1000) AS s FROM range(0, ${perPart * parts}, 1, $parts)",
+        accept = "text/csv", to = patientBase)
+      assert(r.statusCode() == 200)
+      lines = r.body().count(_ == '\n')
     }
     assert(lines == perPart * parts + 1)
     val jobs = events.collect { case j: JobStart => j }
