@@ -1,43 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CharEntropy, CosineSimilarity, SimHash64}
 
-/** SparkSessionExtensions entry point: registers the library's native
-  * codegen'd kernels in the SQL function registry, so a SQL-only
-  * client (the reference's sole API is SQL text over POST /,
-  * uquery-rs src/web/request.rs) can call them directly:
+/** The library's SQL function surface: registers the native
+  * codegen'd kernels and the DuckDB-dialect functions in a session's
+  * SQL function registry, so a SQL-only client (the reference's sole
+  * API is SQL text over POST /, uquery-rs src/web/request.rs) can call
+  * them directly:
   *
-  *   spark.sql.extensions=graft.GraftExtensions   // or injectInto(spark)
+  *   GraftExtensions.injectInto(spark)
   *   SELECT cosine_sim(embedding, query_vec), simhash64(token_hashes) ...
   *
   * This is preference tier (b) of the custom-operator ladder (builder
   * brief): a Catalyst `Expression` with `doGenCode`, reachable from
-  * both the Column API and SQL. A session built with this class also
-  * gets the `ParamLiterals` physical rule.
+  * both the Column API and SQL. `injectInto` is the one function
+  * entry and `ParamLiterals.inject` the one planner-rule entry.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // Same keep-last dedupe as injectInto: one injected entry per name,
-    // so session construction never logs replacement WARNs either.
-    val lastWins = scala.collection.mutable.LinkedHashMap
-      .empty[String, (ExpressionInfo, Seq[Expression] => Expression)]
-    GraftExtensions.allRegistrations.foreach { case (n, i, b) => lastWins(n) = (i, b) }
-    lastWins.foreach { case (name, (info, builder)) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    // a planner rule: only a session built with it has it (injectInto
-    // runs on a built session and cannot add one)
-    ParamLiterals.inject(ext)
-  }
-}
-
 object GraftExtensions {
 
   private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "", "", "", "", "", "", "built-in")
+    new ExpressionInfo(getClass.getName.stripSuffix("$"), null, name, usage, "", "", "", "", "", "", "built-in")
 
   private[graft] val registrations: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim",
@@ -295,12 +280,6 @@ object GraftExtensions {
     // TRANSLATED at registration (bind) time and unsupported
     // directives fail loudly. Rendering/parsing then runs through the
     // codegen'd builtins (date_format / to_timestamp).
-    ("strftime",
-      info("strftime", "strftime(ts, '%Y-%m-%d') - DuckDB C-style timestamp formatting."),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"strftime expects 2 arguments, got ${args.length}")
-        builtinBuilder("date_format")(Seq(args.head, translatedFormat("strftime", args(1))))
-      }),
     ("strptime",
       info("strptime", "strptime(s, '%Y-%m-%d') - DuckDB C-style timestamp parsing."),
       (args: Seq[Expression]) => {
@@ -327,15 +306,6 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 1, s"list_unique expects 1 argument, got ${args.length}")
         builtinBuilder("cardinality")(Seq(distinctNonNull(args.head)))
-      }),
-    // descending sort with NULLs last, like DuckDB's (sort_array desc
-    // places NULLs last; array_sort covers the ascending alias)
-    ("list_reverse_sort",
-      info("list_reverse_sort", "list_reverse_sort(arr) - descending sort, NULLs last (DuckDB semantics)."),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"list_reverse_sort expects 1 argument, got ${args.length}")
-        builtinBuilder("sort_array")(Seq(args.head,
-          org.apache.spark.sql.catalyst.expressions.Literal(false)))
       }),
     // DuckDB quantile_disc: the element at index ceil(p·n) of the
     // sorted non-NULL values (verified: p=0 → first, p=1 → last, works
@@ -409,13 +379,6 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 1, s"favg expects 1 argument, got ${args.length}")
         builtinBuilder("avg")(Seq(org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.DoubleType)))
-      }),
-    ("sumkahan",
-      info("sumkahan", "sumkahan(x) - sum with DOUBLE accumulation."),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"sumkahan expects 1 argument, got ${args.length}")
-        builtinBuilder("sum")(Seq(org.apache.spark.sql.catalyst.expressions.Cast(
           args.head, org.apache.spark.sql.types.DoubleType)))
       }),
     // DuckDB format() speaks fmt's {}-placeholders, Spark's
@@ -2739,7 +2702,6 @@ object GraftExtensions {
   private[graft] val duckAliases: Seq[(String, String)] = Seq(
     "list_transform" -> "transform",
     "list_filter" -> "filter",
-    "list_sort" -> "array_sort",
     // list_contains/array_contains/array_has/list_has are real
     // registrations now (round-15 grammar-v9 finding: DuckDB returns
     // FALSE for an absent needle in a NULL-carrying list; the plain
@@ -2749,10 +2711,7 @@ object GraftExtensions {
     // array_append/concat return NULL — the silent-divergence class
     // this table's policy forbids
     "list_value" -> "array",
-    "arg_max" -> "max_by",
-    "arg_min" -> "min_by",
     "quantile_cont" -> "percentile",
-    "regexp_matches" -> "rlike",
     // round-5 long-tail batch, each verified same-semantics vs DuckDB
     // 1.5: list_position (1-based, 0 when absent, NULL on NULL list =
     // array_position exactly), array_length/size (NULL-in-NULL-out),
@@ -2774,11 +2733,6 @@ object GraftExtensions {
     "gen_random_uuid" -> "uuid",
     "uuidv4" -> "uuid",
     "unnest" -> "explode",
-    // list/array_agg: superseded by the registrations11 builders
-    // (probe 24 closed the NULL-keeping + NULL-on-empty divergence);
-    // the alias stays as documentation of the resolution chain, the
-    // later registration wins
-    "list" -> "collect_list",
     // round-5 second batch: editdist3 is DuckDB's levenshtein alias;
     // week = ISO week on both engines (verified week(2024-12-30) = 1 =
     // Spark weekofyear); to_hex/from_hex are both uppercase-hex/binary
@@ -3097,9 +3051,6 @@ object GraftExtensions {
     Seq(duckList("list"), duckList("array_agg"))
   }
 
-  // registrations6 AFTER the aliases: its full-arity list_sort /
-  // arg_min / arg_max / min / max builders must override the plain
-  // alias entries (later registration wins in the registry).
   // round-15 optimization: fused kernels emitted by
   // Dialect.rewriteFrameExclude's min/max decomposition (one collected
   // frame + one primitive loop instead of 4 windows / 2 interpreted
@@ -3152,11 +3103,6 @@ object GraftExtensions {
       org.apache.spark.sql.Encoders.DOUBLE
   }
 
-  /** Programmatic registration for an already-built session (the
-    * extensions config only applies at session construction).
-    * `product` is a typed-Aggregator UDAF, so it registers here (the
-    * config-based extensions path carries Expression builders only).
-    */
   // One registration per session (round-8 verdict #2): the SQL-declared
   // inventory queries call injectInto on every invocation, so a bench
   // min-of-2 re-run used to re-register the full dialect surface into
@@ -3190,12 +3136,16 @@ object GraftExtensions {
     }
   }
 
+  /** Registers every function above, plus the typed-Aggregator UDAF
+    * `product` and the scalar UDFs below, in a built session.
+    */
   def injectInto(spark: SparkSession): Unit = {
     if (injectedSessions.put(spark, java.lang.Boolean.TRUE) != null) return
     val reg = spark.sessionState.functionRegistry
-    // Later registration wins (registrations6's full-arity list_sort /
-    // arg_min / min / max override the plain alias entries) — enforce
-    // it by deduping keep-LAST before touching the registry, then drop
+    // Later registration wins (registrations6's generate_series /
+    // range and registrations7's regexp_extract wrap the earlier
+    // builders of the same name) — enforce it by deduping keep-LAST
+    // before touching the registry, then drop
     // any existing entry (an earlier ours, or a shadowed Spark builtin
     // clone) so registerFunction never logs a replacement WARN: the
     // round-5 invariant is a warn-free bench tail, where any warn is

@@ -33,9 +33,9 @@ case class ParamLiteral(value: Any, dataType: DataType) extends LeafExpression {
   * arithmetic become `ParamLiteral`s. Scans are not touched, so their
   * data filters and `PushedFilters` keep the literal values. It runs as
   * a columnar rule, before whole-stage codegen collapses the plan,
-  * including on every AQE stage. `GraftExtensions` injects it; a session
-  * that must keep Spark's builtin functions (the library's, the server's
-  * before `injectInto`) is built with `inject` alone.
+  * including on every AQE stage. A session has it only when built with
+  * `inject`, as `ServerMain`'s is; `GraftExtensions.injectInto` adds
+  * the SQL functions to a session once it is built.
   */
 object ParamLiterals extends Rule[SparkPlan] {
   private val Params: Set[DataType] =

@@ -85,6 +85,36 @@ object T {
     }
   }
 
+  /** Scale-adaptive exchange width (r16, verdict r15 #4). The r15
+    * spreads used flat `defaultParallelism`; the driver's own
+    * 8c-vs-32c record (suite 154.3 s at 8 cores vs 199.9 s at 32,
+    * every headline ratio <= 1) showed 32-way exchanges over the
+    * 0.5–11 MB fixture tables are net task-scheduling overhead, not
+    * parallelism. Derive the width from the plan's estimated bytes:
+    * one partition per `SpreadQuantumBytes` (64 KiB — far below a
+    * cluster target on purpose: these exchanges exist to
+    * spread row-local CPU that is orders of magnitude heavier than the
+    * bytes, so the quantum prices CPU-per-byte, not I/O), capped at
+    * `defaultParallelism`. At production scale the byte estimate is
+    * >> cores, the cap binds, and the splits>=cores trigger already
+    * makes the whole spread a passthrough — so this only changes
+    * behaviour where the input is small relative to the machine.
+    * Sites whose per-row CPU is unbounded relative to input bytes
+    * (media synthesis over a bare id column) opt out via `cpuDense`
+    * and keep the full machine width.
+    */
+  private val SpreadQuantumBytes = 64L * 1024L
+
+  private def spreadWidth(df: DataFrame): Int = {
+    val slots = df.sparkSession.sparkContext.defaultParallelism
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes <= 0 || bytes > BigInt(Long.MaxValue)) slots
+    else {
+      val byBytes = (bytes.toLong + SpreadQuantumBytes - 1L) / SpreadQuantumBytes
+      math.max(1L, math.min(slots.toLong, byBytes)).toInt
+    }
+  }
+
   /** Scale-adaptive parallel scan (round-15, optimization guide §2.5):
     * when the source arrives as fewer splits than the session has cores
     * — the fixture's single-row-group parquet is unsplittable, so every
@@ -97,36 +127,6 @@ object T {
     * the scan dominates; plain column-pruned scans that feed a cheap
     * aggregate don't need (or want) the extra exchange.
     */
-  /** Scale-adaptive exchange width (r16, verdict r15 #4). The r15
-    * spreads used flat `defaultParallelism`; the driver's own
-    * 8c-vs-32c record (suite 154.3 s at 8 cores vs 199.9 s at 32,
-    * every headline ratio <= 1) showed 32-way exchanges over the
-    * 0.5–11 MB fixture tables are net task-scheduling overhead, not
-    * parallelism. Derive the width from the plan's estimated bytes:
-    * one partition per SPARK_GRAFT_SPREAD_QUANTUM_KB (default 64 KiB —
-    * far below a cluster target on purpose: these exchanges exist to
-    * spread row-local CPU that is orders of magnitude heavier than the
-    * bytes, so the quantum prices CPU-per-byte, not I/O), capped at
-    * `defaultParallelism`. At production scale the byte estimate is
-    * >> cores, the cap binds, and the splits>=cores trigger already
-    * makes the whole spread a passthrough — so this only changes
-    * behaviour where the input is small relative to the machine.
-    * Sites whose per-row CPU is unbounded relative to input bytes
-    * (media synthesis over a bare id column) opt out via `cpuDense`
-    * and keep the full machine width.
-    */
-  private def spreadWidth(df: DataFrame): Int = {
-    val slots = df.sparkSession.sparkContext.defaultParallelism
-    val quantum =
-      sys.env.getOrElse("SPARK_GRAFT_SPREAD_QUANTUM_KB", "64").toLong * 1024L
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= 0 || bytes > BigInt(Long.MaxValue)) slots
-    else {
-      val byBytes = (bytes.toLong + quantum - 1L) / quantum
-      math.max(1L, math.min(slots.toLong, byBytes)).toInt
-    }
-  }
-
   def par(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = apply(spark, dir, name)
     val slots = spreadWidth(df)
@@ -184,10 +184,6 @@ object T {
     names.foreach(n => par(spark, dir, n).createOrReplaceTempView(n))
 }
 
-/** Session tuning shared by Verify/Bench/tests. Mirrors what we'd set
-  * on a real cluster: AQE on (runtime re-plan, skew-join splitting,
-  * partition coalescing), CBO on, small-dim broadcast.
-  */
 /** Oracle-parity numeric helpers. */
 object Exact {
   import org.apache.spark.sql.functions._
@@ -219,6 +215,10 @@ object Exact {
   //   round(CAST(sum(CAST(<expr> AS DECIMAL(18+s,s))) AS DOUBLE), d)
 }
 
+/** Session tuning shared by Verify/Bench/tests. Mirrors what we'd set
+  * on a real cluster: AQE on (runtime re-plan, skew-join splitting,
+  * partition coalescing), CBO on, small-dim broadcast.
+  */
 object GraftSession {
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
@@ -234,12 +234,10 @@ object GraftSession {
     // deriving each post-shuffle partition count from observed bytes —
     // the input-adaptive behaviour the optimization guide recommends
     // and the setting Spark's own docs advise for production. The
-    // advisory size is env-tunable; 8m locally (CPU-dense workloads
-    // want narrower partitions than a 64m I/O-bound cluster target).
-    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
+    // advisory size is 8m (CPU-dense workloads want narrower partitions
+    // than a 64m I/O-bound cluster target).
+    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
     c.set("spark.sql.adaptive.skewJoin.enabled", "true")
     c.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
     c.set("spark.sql.parquet.filterPushdown", "true")
@@ -259,11 +257,8 @@ object GraftSession {
     // the build side to fit (canBuildLocalHashMap vs the broadcast
     // threshold × partitions), AQE's 64m local-map bound is a per-task
     // budget independent of cluster size, and skew-split still applies.
-    // Both are env-overridable for cluster tuning without a code change.
-    c.set("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
+    c.set("spark.sql.join.preferSortMergeJoin", "false")
+    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
     spark
   }
 }

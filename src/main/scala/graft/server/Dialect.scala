@@ -33,111 +33,250 @@ object Dialect {
   // __qualify would re-trigger keyword matches
   private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
 
-  /** Positions of characters that sit inside quotes ('…' with '' escape,
-    * "…" identifiers, `…` identifiers) — rewrites must skip these.
+  /** Bracket kinds a top-level query counts: parentheses only, or all
+    * three kinds (list and struct literals nest with `[]` and `{}`).
     */
-  private def quoteMask(sql: String): Array[Boolean] = {
-    val mask = new Array[Boolean](sql.length)
-    var i = 0
-    var q: Char = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (q == 0) {
-        if (c == '\'' || c == '"' || c == '`') { q = c; mask(i) = true }
-      } else {
-        mask(i) = true
-        if (c == q) {
-          // '' escape inside single quotes stays inside the literal
-          if (q == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') { mask(i + 1) = true; i += 1 }
-          else q = 0
-        }
-      }
-      i += 1
-    }
-    mask
-  }
+  private[graft] val Parens = "()"
+  private[graft] val AllBrackets = "()[]{}"
 
-  /** First top-level (paren-depth-0, unquoted) occurrence of a keyword;
-    * -1 if absent.
+  /** The one scanner every pass reads a text through: which positions
+    * sit inside quotes ('…' with the '' escape, "…" identifiers, `…`
+    * identifiers — the quote characters included), which unquoted
+    * (), [] and {} and which CASE … END belong together, and where
+    * keywords and separators stand at bracket depth 0. A pass builds
+    * one per input text; the partner table is built on first use.
+    *
+    * A bracket's partner is the one that depth counting over its own
+    * kind alone would find, in either direction; CASE and END pair as
+    * whole words. Top-level queries count the kinds in their
+    * `brackets` argument (`Parens` or `AllBrackets`), and so does the
+    * depth they report a position at.
     */
-  private def firstTopLevel(sql: String, kw: String): Int = {
-    val mask = quoteMask(sql)
-    val upper = sql.toUpperCase
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      if (!mask(i)) {
-        sql.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-            if (depth == 0 && upper.startsWith(kw, i) &&
-                (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-                (i + kw.length >= sql.length || !isWordChar(sql.charAt(i + kw.length))))
-              return i
+  private[graft] final class Scan(val s: String) {
+    val quoted: Array[Boolean] = {
+      val mask = new Array[Boolean](s.length)
+      var i = 0
+      var q: Char = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (q == 0) {
+          if (c == '\'' || c == '"' || c == '`') { q = c; mask(i) = true }
+        } else {
+          mask(i) = true
+          if (c == q) {
+            // '' escape inside single quotes stays inside the literal
+            if (q == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') { mask(i + 1) = true; i += 1 }
+            else q = 0
+          }
+        }
+        i += 1
+      }
+      mask
+    }
+
+    private lazy val partners: Array[Int] = {
+      val p = Array.fill(s.length)(-1)
+      val open = Array.fill(4)(List.empty[Int]) // '(', '[', '{', CASE
+      def close(kind: Int, i: Int): Unit = open(kind) match {
+        case o :: rest => p(o) = i; p(i) = o; open(kind) = rest
+        case Nil => ()
+      }
+      var i = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (quoted(i)) i += 1
+        else if (isWordChar(c)) {
+          val end = s.indexWhere(!isWordChar(_), i) match { case -1 => s.length; case e => e }
+          if (end - i == 4 && s.regionMatches(true, i, "CASE", 0, 4)) open(3) ::= i
+          else if (end - i == 3 && s.regionMatches(true, i, "END", 0, 3)) close(3, i)
+          i = end
+        } else {
+          if ("([{".indexOf(c) >= 0) open("([{".indexOf(c)) ::= i
+          else if (")]}".indexOf(c) >= 0) close(")]}".indexOf(c), i)
+          i += 1
         }
       }
-      i += 1
+      p
     }
-    -1
+
+    /** The partner of the bracket, CASE or END at `i`; -1 if it has none. */
+    def partner(i: Int): Int = if (i < 0 || i >= s.length) -1 else partners(i)
+
+    /** End (exclusive) of the quoted run that starts at `i`. */
+    def literalEnd(i: Int): Int = {
+      var e = i + 1
+      while (e < s.length && quoted(e)) e += 1
+      e
+    }
+
+    /** Start of the quoted run that ends at `i`. */
+    def literalStart(i: Int): Int = {
+      var b = i
+      while (b >= 0 && quoted(b)) b -= 1
+      b + 1
+    }
+
+    /** An unquoted, word-bounded, case-insensitive `kw` at `i`. */
+    def keywordAt(i: Int, kw: String): Boolean =
+      i >= 0 && i < s.length && !quoted(i) && s.regionMatches(true, i, kw, 0, kw.length) &&
+        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
+        (i + kw.length >= s.length || !isWordChar(s.charAt(i + kw.length)))
+
+    /** Every occurrence of keyword `kw` at any depth. */
+    def find(kw: String): Iterator[Int] = s.indices.iterator.filter(keywordAt(_, kw))
+
+    def has(kw: String): Boolean = find(kw).hasNext
+
+    /** An unquoted occurrence of a raw token (no word-boundary check). */
+    def hasToken(tok: String): Boolean =
+      (0 to s.length - tok.length).exists(i => !quoted(i) && s.startsWith(tok, i))
+
+    /** Unquoted positions at depth 0, bracket characters excluded. */
+    private def tops(brackets: String): Iterator[Int] = {
+      var depth = 0
+      s.indices.iterator.filter { i =>
+        !quoted(i) && {
+          val b = brackets.indexOf(s.charAt(i))
+          if (b >= 0) depth += (if (b % 2 == 0) 1 else -1)
+          b < 0 && depth == 0
+        }
+      }
+    }
+
+    /** Every depth-0 occurrence of keyword `kw`. */
+    def top(kw: String, brackets: String = Parens): Iterator[Int] =
+      tops(brackets).filter(keywordAt(_, kw))
+
+    def first(kw: String, brackets: String = Parens): Int = top(kw, brackets).nextOption().getOrElse(-1)
+
+    def last(kw: String, brackets: String = Parens): Int = top(kw, brackets).foldLeft(-1)((_, i) => i)
+
+    /** The earliest first depth-0 occurrence among `kws`. */
+    def earliest(kws: String*): Option[Int] = kws.map(first(_)).filter(_ >= 0).minOption
+
+    /** The earliest of `kws`' last depth-0 occurrences. */
+    def earliestLast(kws: String*): Option[Int] = kws.map(last(_)).filter(_ >= 0).minOption
+
+    /** Depth-0 positions of any character in `cs`. */
+    def topChars(cs: String, brackets: String = AllBrackets): Iterator[Int] =
+      tops(brackets).filter(i => cs.indexOf(s.charAt(i)) >= 0)
+
+    def firstChar(cs: String, brackets: String = AllBrackets): Int =
+      topChars(cs, brackets).nextOption().getOrElse(-1)
+
+    /** The text split at every depth-0 `sep`. */
+    def split(sep: Char, brackets: String = AllBrackets): Seq[String] = {
+      val cuts = (-1 +: topChars(sep.toString, brackets).toVector) :+ s.length
+      cuts.zip(cuts.tail).map { case (a, b) => s.substring(a + 1, b) }
+    }
+
+    /** The innermost unquoted `(` left of `i` that is still open at `i`; -1 if none. */
+    def enclosing(i: Int): Int =
+      (i - 1 to 0 by -1).find(o => s.charAt(o) == '(' && !quoted(o) &&
+        (partner(o) < 0 || partner(o) >= i)).getOrElse(-1)
+
+    /** Where the paren scope around the text's start ends: the index
+      * after the last unquoted `(` without a partner; 0 if none.
+      */
+    def scopeStart: Int =
+      (s.length - 1 to 0 by -1).find(k => s.charAt(k) == '(' && !quoted(k) && partner(k) < 0)
+        .map(_ + 1).getOrElse(0)
+
+    /** Where the paren scope around the text's end ends: the first
+      * unquoted `)` without a partner; the text's length if none.
+      */
+    def scopeEnd: Int =
+      s.indices.find(k => s.charAt(k) == ')' && !quoted(k) && partner(k) < 0).getOrElse(s.length)
+
+    /** `(content, remainder)` of a parenthesized group that opens the
+      * text after optional whitespace; None when there is none.
+      */
+    def leadingGroup: Option[(String, String)] = {
+      val i = s.indexWhere(!_.isWhitespace)
+      val close = if (i >= 0 && s.charAt(i) == '(') partner(i) else -1
+      if (close < 0) None else Some((s.substring(i + 1, close), s.substring(close + 1)))
+    }
+
+    /** Start of the postfix primary ending at `pEnd`: a dotted chain of
+      * names, `quoted` names, 'string' literals, balanced ()/[] groups
+      * (function calls, prior subscripts) or a CASE … END.
+      */
+    def operandStart(pEnd: Int): Int = {
+      var p = pEnd
+      var done = false
+      while (!done && p >= 0) {
+        s.charAt(p) match {
+          // nothing subscript-able chains before a 'string' literal
+          case '\'' if quoted(p) => return literalStart(p)
+          case ')' | ']' =>
+            p = partner(p) - 1
+            if (p < -1) return pEnd // unbalanced — degenerate, single char
+          case '`' => p = literalStart(p) - 1
+          case c if isWordChar(c) =>
+            val wEnd = p
+            while (p >= 0 && isWordChar(s.charAt(p))) p -= 1
+            // `CASE … END` is a primary (round-13 fuzz: `CASE … END // 3`
+            // used to take the bare word END as the operand); CASE never
+            // chains behind '.' or a call
+            if (s.substring(p + 1, wEnd + 1).equalsIgnoreCase("END"))
+              return if (partner(p + 1) < 0) pEnd else partner(p + 1)
+          case _ => done = true
+        }
+        // continue through '.' chains and name-before-parens
+        if (!done) {
+          if (p >= 0 && s.charAt(p) == '.') p -= 1
+          else if (p >= 0 && isWordChar(s.charAt(p))) () // fn name precedes group
+          else done = true
+        }
+      }
+      p + 1
+    }
+
+    /** End (exclusive) of the postfix primary starting at `from`:
+      * optional unary sign, then a dotted chain of names/numbers,
+      * `quoted` names, balanced () / [] groups or a CASE … END.
+      */
+    def operandEnd(from: Int): Int = {
+      var p = from
+      while (p < s.length && s.charAt(p).isWhitespace) p += 1
+      if (p < s.length && (s.charAt(p) == '-' || s.charAt(p) == '+')) p += 1
+      while (p < s.length && s.charAt(p).isWhitespace) p += 1
+      var done = false
+      while (!done && p < s.length) {
+        s.charAt(p) match {
+          case '(' | '[' =>
+            if (partner(p) < 0) return from
+            p = partner(p) + 1
+          case '`' => p = literalEnd(p)
+          case c if isWordChar(c) =>
+            val wStart = p
+            while (p < s.length && isWordChar(s.charAt(p))) p += 1
+            // a right operand starting with CASE runs to its END
+            if (s.substring(wStart, p).equalsIgnoreCase("CASE"))
+              return if (partner(wStart) < 0) from else partner(wStart) + 3
+          case _ => done = true
+        }
+        if (!done) {
+          if (p < s.length && s.charAt(p) == '.') p += 1 // continue the dotted chain
+          else if (!(p < s.length && (s.charAt(p) == '(' || s.charAt(p) == '['))) done = true
+        }
+      }
+      p
+    }
+
+    /** `re`'s matches replaced by `f`, except those starting inside quotes. */
+    def replaceUnquoted(re: scala.util.matching.Regex)(
+        f: scala.util.matching.Regex.Match => String): String =
+      re.replaceAllIn(s, m => java.util.regex.Matcher.quoteReplacement(
+        if (quoted(m.start)) m.matched else f(m)))
   }
 
   /** Any unquoted occurrence of a raw token (no word-boundary check) —
     * lets callers (and specs) ask "does this SQL use dialect surface
     * outside string literals?".
     */
-  private[graft] def hasUnquoted(sql: String, tok: String): Boolean = {
-    val mask = quoteMask(sql)
-    var i = 0
-    while (i + tok.length <= sql.length) {
-      if (!mask(i) && sql.startsWith(tok, i)) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Any unquoted occurrence of a keyword at ANY paren depth (used to
-    * detect window expressions nested inside a predicate).
-    */
-  private def containsUnquoted(sql: String, kw: String): Boolean = {
-    val mask = quoteMask(sql)
-    val upper = sql.toUpperCase
-    var i = 0
-    while (i < sql.length) {
-      if (!mask(i) && upper.startsWith(kw, i) &&
-          (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-          (i + kw.length >= sql.length || !isWordChar(sql.charAt(i + kw.length))))
-        return true
-      i += 1
-    }
-    false
-  }
-
-  /** Find the last top-level (paren-depth-0, unquoted) occurrence of a
-    * keyword; -1 if absent.
-    */
-  private def lastTopLevel(sql: String, kw: String): Int = {
-    val mask = quoteMask(sql)
-    val upper = sql.toUpperCase
-    var depth = 0
-    var found = -1
-    var i = 0
-    while (i < sql.length) {
-      if (!mask(i)) {
-        sql.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-            if (depth == 0 && upper.startsWith(kw, i) &&
-                (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-                (i + kw.length >= sql.length || !isWordChar(sql.charAt(i + kw.length))))
-              found = i
-        }
-      }
-      i += 1
-    }
-    found
-  }
+  private[graft] def hasUnquoted(sql: String, tok: String): Boolean =
+    new Scan(sql).hasToken(tok)
 
   /** `prefix QUALIFY cond [ORDER BY …] [LIMIT …]` →
     * `SELECT * FROM (prefix) __q WHERE cond [ORDER BY …] [LIMIT …]`.
@@ -146,13 +285,12 @@ object Dialect {
     * applies at authoring time.
     */
   private def rewriteQualify(sql: String): String = {
-    val at = lastTopLevel(sql, "QUALIFY")
+    val at = new Scan(sql).last("QUALIFY")
     if (at < 0) return sql
     val prefix = sql.substring(0, at).trim
     val rest = sql.substring(at + "QUALIFY".length)
     // split the trailing ORDER BY / LIMIT / OFFSET off the predicate
-    val tailAt = Seq("ORDER", "LIMIT", "OFFSET")
-      .map(k => lastTopLevel(rest, k)).filter(_ >= 0).sorted.headOption
+    val tailAt = new Scan(rest).earliestLast("ORDER", "LIMIT", "OFFSET")
     val (cond, tail) = tailAt match {
       case Some(t) => (rest.substring(0, t), rest.substring(t))
       case None => (rest, "")
@@ -169,9 +307,10 @@ object Dialect {
     // there can only see projected columns — same as the alias path).
     // Alias-only predicates keep the plain WHERE rewrite (their window
     // already ran inside `prefix`).
-    if (containsUnquoted(cond, "OVER")) {
-      val fromAt = firstTopLevel(prefix, "FROM")
-      if (fromAt >= 0 && firstTopLevel(prefix, "GROUP") < 0) {
+    if (new Scan(cond).has("OVER")) {
+      val ps = new Scan(prefix)
+      val fromAt = ps.first("FROM")
+      if (fromAt >= 0 && ps.first("GROUP") < 0) {
         val selectList = prefix.substring(0, fromAt).trim
         val fromSeg = prefix.substring(fromAt)
         s"""$selectList FROM (
@@ -188,21 +327,11 @@ object Dialect {
   /** `* EXCLUDE (…)` → `* EXCEPT (…)` — only when the keyword follows a
     * `*` at the same nesting (the star-modifier position).
     */
-  private def rewriteExclude(sql: String): String = {
-    val mask = quoteMask(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (!mask(i) && sql.toUpperCase.startsWith("EXCLUDE", i) &&
-          (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-          (i + 7 >= sql.length || !isWordChar(sql.charAt(i + 7)))) {
-        val before = sql.substring(0, i).reverse.dropWhile(_.isWhitespace)
-        if (before.headOption.contains('*')) { out.append("EXCEPT"); i += 7 }
-        else { out.append(sql.charAt(i)); i += 1 }
-      } else { out.append(sql.charAt(i)); i += 1 }
-    }
-    out.toString
-  }
+  private def rewriteExclude(sql: String): String =
+    new Scan(sql).find("EXCLUDE").filter { i =>
+      val p = sql.lastIndexWhere(!_.isWhitespace, i - 1)
+      p >= 0 && sql.charAt(p) == '*'
+    }.toList.reverse.foldLeft(sql)((out, i) => out.substring(0, i) + "EXCEPT" + out.substring(i + 7))
 
   /** `SELECT DISTINCT ON (keys) list FROM … [ORDER BY ord] [tail]` →
     * row_number window partitioned by the keys, ordered by the query's
@@ -211,42 +340,36 @@ object Dialect {
     * alias there fails analysis and surfaces as a 400 like any bad SQL.
     */
   private def rewriteDistinctOn(sql: String): String = {
-    val upper = sql.toUpperCase
-    val sel = firstTopLevel(sql, "SELECT")
+    val sc = new Scan(sql)
+    val sel = sc.first("SELECT")
     if (sel < 0) return sql
-    val donAt = upper.indexOf("DISTINCT ON", sel)
+    val donAt = sql.toUpperCase.indexOf("DISTINCT ON", sel)
     if (donAt < 0 || sql.substring(sel + 6, donAt).trim.nonEmpty) return sql
     // matching-paren extraction of the key list
     val open = sql.indexOf('(', donAt)
     if (open < 0) return sql
-    val mask = quoteMask(sql)
-    var depth = 0; var i = open; var close = -1
-    while (i < sql.length && close < 0) {
-      if (!mask(i)) {
-        if (sql.charAt(i) == '(') depth += 1
-        else if (sql.charAt(i) == ')') { depth -= 1; if (depth == 0) close = i }
-      }
-      i += 1
-    }
+    val close = sc.partner(open)
     if (close < 0) return sql
     val keys = sql.substring(open + 1, close)
     val remainder = sql.substring(close + 1) // "<select-list> FROM <rest> [ORDER BY …]"
-    val tailAt = Seq("ORDER", "LIMIT", "OFFSET")
-      .map(k => lastTopLevel(remainder, k)).filter(_ >= 0).sorted.headOption
+    val tailAt = new Scan(remainder).earliestLast("ORDER", "LIMIT", "OFFSET")
     val (body, tail) = tailAt match {
       case Some(t) => (remainder.substring(0, t), remainder.substring(t))
       case None => (remainder, "")
     }
-    val ordAt = lastTopLevel(tail, "ORDER")
-    val windowOrder =
-      if (ordAt >= 0) {
+    val ordAt = new Scan(tail).last("ORDER")
+    // the ORDER BY key list and the LIMIT/OFFSET text after it
+    val (orderTxt, limitTxt) =
+      if (ordAt < 0) ("", "")
+      else {
         val afterOrder = tail.substring(ordAt)
-        val cut = Seq("LIMIT", "OFFSET").map(k => lastTopLevel(afterOrder, k))
-          .filter(_ >= 0).sorted.headOption
-        cut.map(c => afterOrder.substring("ORDER BY".length + 1, c))
-          .getOrElse(afterOrder.substring("ORDER BY".length + 1))
-      } else keys
-    val fromAt = firstTopLevel(body, "FROM")
+        new Scan(afterOrder).earliestLast("LIMIT", "OFFSET") match {
+          case Some(c) => (afterOrder.substring("ORDER BY".length + 1, c), afterOrder.substring(c))
+          case None => (afterOrder.substring("ORDER BY".length + 1), "")
+        }
+      }
+    val windowOrder = if (ordAt >= 0) orderTxt else keys
+    val fromAt = new Scan(body).first("FROM")
     if (fromAt < 0) return sql
     val selectList = body.substring(0, fromAt).trim
     val rest = body.substring(fromAt)
@@ -256,7 +379,7 @@ object Dialect {
     // fail UNRESOLVED_COLUMN (grammar-v7 finding). Sort keys that are
     // not output columns are projected as hidden __obN columns inside
     // the subquery and excluded with __rn.
-    val outNames: Set[String] = splitTopLevel(selectList, ',').map(_.trim).map { it =>
+    val outNames: Set[String] = new Scan(selectList).split(',').map(_.trim).map { it =>
       val up = it.toUpperCase(java.util.Locale.ROOT)
       val asAt = up.lastIndexOf(" AS ")
       val nm =
@@ -270,14 +393,7 @@ object Dialect {
     val outerTail =
       if (ordAt < 0) tail.trim
       else {
-        val afterOrder = tail.substring(ordAt)
-        val cut = Seq("LIMIT", "OFFSET").map(k => lastTopLevel(afterOrder, k))
-          .filter(_ >= 0).sorted.headOption
-        val (orderTxt, limitTxt) = cut match {
-          case Some(c) => (afterOrder.substring("ORDER BY".length + 1, c), afterOrder.substring(c))
-          case None => (afterOrder.substring("ORDER BY".length + 1), "")
-        }
-        val items = splitTopLevel(orderTxt, ',').map(_.trim).filter(_.nonEmpty).map { item =>
+        val items = new Scan(orderTxt).split(',').map(_.trim).filter(_.nonEmpty).map { item =>
           val sufRe = """(?i)\s+(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?\s*$|\s+NULLS\s+(FIRST|LAST)\s*$""".r
           val suffix = sufRe.findFirstIn(item).getOrElse("")
           val keyExpr = item.substring(0, item.length - suffix.length).trim
@@ -392,32 +508,6 @@ object Dialect {
     }
   }
 
-  /** First depth-0, unmasked, word-bounded occurrence of keyword `kw`
-    * (case-insensitive), tracking (), [] and {} — the bracket-content
-    * variant of [[firstTopLevel]] (which only tracks parens).
-    */
-  private def topLevelKeyword(content: String, kw: String): Int = {
-    val mask = quoteMask(content)
-    val upper = content.toUpperCase
-    var depth = 0
-    var i = 0
-    while (i < content.length) {
-      if (!mask(i)) {
-        content.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case _ =>
-            if (depth == 0 && upper.startsWith(kw, i) &&
-                (i == 0 || !isWordChar(content.charAt(i - 1))) &&
-                (i + kw.length >= content.length || !isWordChar(content.charAt(i + kw.length))))
-              return i
-        }
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** DuckDB list comprehension `[expr FOR v IN list (IF cond)?]` →
     * `transform(list, v -> expr)`, with the IF clause becoming an
     * inner `filter(list, v -> cond)`. Returns None when the bracket
@@ -425,18 +515,19 @@ object Dialect {
     * Nested comprehensions come out as bracket content of the result
     * and are rewritten by the enclosing loop's re-scan.
     */
-  private def comprehensionToTransform(content: String): Option[String] = {
-    val forAt = topLevelKeyword(content, "FOR")
+  private def comprehensionToTransform(cs: Scan): Option[String] = {
+    val content = cs.s
+    val forAt = cs.first("FOR", AllBrackets)
     if (forAt < 0) return None
     val expr = content.substring(0, forAt).trim
     val rest = content.substring(forAt + 3)
-    val inAt = topLevelKeyword(rest, "IN")
+    val inAt = new Scan(rest).first("IN", AllBrackets)
     if (inAt < 0) return None
     val v = rest.substring(0, inAt).trim
     if (expr.isEmpty || v.isEmpty || !v.forall(isWordChar) || v.charAt(0).isDigit)
       return None
     val tail = rest.substring(inAt + 2)
-    val ifAt = topLevelKeyword(tail, "IF")
+    val ifAt = new Scan(tail).first("IF", AllBrackets)
     val (lst, cond) =
       if (ifAt < 0) (tail.trim, None)
       else (tail.substring(0, ifAt).trim, Some(tail.substring(ifAt + 2).trim))
@@ -470,21 +561,12 @@ object Dialect {
     var guard = 0
     while (guard < 10000) {
       guard += 1
-      val mask = quoteMask(s)
-      var i = from
-      while (i < s.length && (mask(i) || s.charAt(i) != '[')) i += 1
-      if (i >= s.length) return s
-      // matching ']' (nested brackets allowed)
-      var depth = 0; var j = i; var close = -1
-      while (j < s.length && close < 0) {
-        if (!mask(j)) {
-          if (s.charAt(j) == '[') depth += 1
-          else if (s.charAt(j) == ']') { depth -= 1; if (depth == 0) close = j }
-        }
-        j += 1
-      }
+      val sc = new Scan(s)
+      val i = (from until s.length).find(k => !sc.quoted(k) && s.charAt(k) == '[').getOrElse(return s)
+      val close = sc.partner(i)
       if (close < 0) return s // unbalanced — leave untouched
       val content = s.substring(i + 1, close)
+      val cs = new Scan(content)
       var p = i - 1
       while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
       // a string literal is a subscriptable primary too: 'abcdef'[2:4]
@@ -494,13 +576,13 @@ object Dialect {
       // a comprehension-shaped bracket is NEVER a subscript (the
       // postfix heuristic sees `SELECT [x for …]` as "subscript of the
       // word SELECT" because the content has no top-level comma)
-      val comp = comprehensionToTransform(content)
+      val comp = comprehensionToTransform(cs)
       if (!postfix || comp.isDefined) {
         val repl = comp.getOrElse("array(" + content + ")")
         s = s.substring(0, i) + repl + s.substring(close + 1)
         from = i // literal content may itself contain brackets
       } else if (content.trim.isEmpty) {
-        val start0 = operandStart(s, p)
+        val start0 = sc.operandStart(p)
         if (literalAfterKeyword(s.substring(start0, p + 1))) {
           // `SELECT []` / `THEN []` — an EMPTY list literal after a
           // bare keyword (round-13 fuzz; the type-suffix skip below
@@ -509,7 +591,7 @@ object Dialect {
           from = i
         } else from = close + 1 // `INTEGER[]` type suffix, not a subscript
       } else {
-        val start = operandStart(s, p)
+        val start = sc.operandStart(p)
         val operand = s.substring(start, p + 1)
         if (operand.equalsIgnoreCase("ARRAY")) {
           // DuckDB's explicit list-literal keyword form
@@ -520,10 +602,10 @@ object Dialect {
           // keyword is a list literal, not a subscript of the keyword
           s = s.substring(0, i) + "array(" + content + ")" + s.substring(close + 1)
           from = i
-        } else if (topLevelComma(content)) {
+        } else if (cs.firstChar(",") >= 0) {
           from = close + 1 // not a DuckDB subscript shape — leave as-is
         } else {
-          val colon = topLevelColon(content)
+          val colon = cs.firstChar(":")
           val repl =
             if (colon < 0) {
               // graft_at dispatches on operand type (string chars,
@@ -535,7 +617,7 @@ object Dialect {
               // strings and lists; missing bounds are 1 and -1
               val a = content.substring(0, colon).trim
               val rest = content.substring(colon + 1)
-              val colon2 = topLevelColon(rest)
+              val colon2 = new Scan(rest).firstChar(":")
               if (colon2 >= 0) {
                 // step slice a[s:e:st] — DuckDB requires BOTH bounds
                 // with a step (empty-bound step forms are parser
@@ -578,133 +660,6 @@ object Dialect {
   private def literalAfterKeyword(operand: String): Boolean =
     bracketKeywords.contains(operand.toUpperCase(java.util.Locale.ROOT))
 
-  /** Start index of the postfix-primary ending at `pEnd`: a dotted
-    * identifier chain whose segments are names, `quoted` names,
-    * 'string' literals, or balanced ()/[] groups (function calls,
-    * prior subscripts).
-    */
-  private def operandStart(s: String, pEnd: Int): Int = {
-    val mask = quoteMask(s)
-    var p = pEnd
-    var done = false
-    while (!done && p >= 0) {
-      s.charAt(p) match {
-        case '\'' if mask(p) =>
-          // a 'string' literal primary: consume the masked run; nothing
-          // subscript-able chains before a literal
-          while (p >= 0 && mask(p)) p -= 1
-          return p + 1
-        case c @ (')' | ']') =>
-          val open = if (c == ')') '(' else '['
-          var depth = 0
-          var matched = false
-          while (p >= 0 && !matched) {
-            val ch = s.charAt(p)
-            if (!mask(p)) {
-              if (ch == c) depth += 1
-              else if (ch == open) { depth -= 1; if (depth == 0) matched = true }
-            }
-            p -= 1
-          }
-          if (!matched) return pEnd // unbalanced — degenerate, single char
-        case '`' =>
-          p -= 1
-          while (p >= 0 && s.charAt(p) != '`') p -= 1
-          p -= 1
-        case c if isWordChar(c) =>
-          val wEnd = p
-          while (p >= 0 && isWordChar(s.charAt(p))) p -= 1
-          // `CASE … END` is a primary (round-13 fuzz: `CASE … END // 3`
-          // used to take the bare word END as the operand) — scan back
-          // to the matching CASE, counting nested pairs, quote-masked
-          if (s.substring(p + 1, wEnd + 1).equalsIgnoreCase("END")) {
-            var depth = 1
-            while (p >= 0 && depth > 0) {
-              if (!mask(p) && isWordChar(s.charAt(p))) {
-                val we = p
-                while (p >= 0 && isWordChar(s.charAt(p))) p -= 1
-                val w = s.substring(p + 1, we + 1)
-                if (w.equalsIgnoreCase("END")) depth += 1
-                else if (w.equalsIgnoreCase("CASE")) depth -= 1
-              } else p -= 1
-            }
-            if (depth > 0) return pEnd // unbalanced — degenerate
-            return p + 1 // CASE never chains behind '.' or a call
-          }
-        case _ => done = true
-      }
-      // continue through '.' chains and name-before-parens
-      if (!done) {
-        if (p >= 0 && s.charAt(p) == '.') p -= 1
-        else if (p >= 0 && isWordChar(s.charAt(p))) () // fn name precedes group
-        else done = true
-      }
-    }
-    p + 1
-  }
-
-  /** Index of a depth-0 ':' in bracket content; -1 if none. Tracks
-    * (), [] and {} (struct literals use `{'k': v}` colons).
-    */
-  private def topLevelColon(content: String): Int = {
-    val mask = quoteMask(content)
-    var depth = 0
-    var i = 0
-    while (i < content.length) {
-      if (!mask(i)) {
-        content.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case ':' if depth == 0 => return i
-          case _ =>
-        }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def topLevelComma(content: String): Boolean = {
-    val mask = quoteMask(content)
-    var depth = 0
-    var i = 0
-    while (i < content.length) {
-      if (!mask(i)) {
-        content.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case ',' if depth == 0 => return true
-          case _ =>
-        }
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** Split on a separator at depth 0 w.r.t. (), [], {} and quotes. */
-  private def splitTopLevel(content: String, sep: Char): Seq[String] = {
-    val mask = quoteMask(content)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var last = 0
-    var i = 0
-    while (i < content.length) {
-      if (!mask(i)) {
-        content.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case c if c == sep && depth == 0 =>
-            out += content.substring(last, i); last = i + 1
-          case _ =>
-        }
-      }
-      i += 1
-    }
-    out += content.substring(last)
-    out.toSeq
-  }
-
   /** DuckDB struct/map literals, quote-aware:
     *   `{'a': 1, 'b': x}`   → `named_struct('a', 1, 'b', x)`
     *   `MAP {'k': v}`       → `map('k', v)`
@@ -716,26 +671,17 @@ object Dialect {
     var guard = 0
     while (guard < 10000) {
       guard += 1
-      val mask = quoteMask(s)
-      var i = from
-      while (i < s.length && (mask(i) || s.charAt(i) != '{')) i += 1
-      if (i >= s.length) return s
-      var depth = 0; var j = i; var close = -1
-      while (j < s.length && close < 0) {
-        if (!mask(j)) {
-          if (s.charAt(j) == '{') depth += 1
-          else if (s.charAt(j) == '}') { depth -= 1; if (depth == 0) close = j }
-        }
-        j += 1
-      }
+      val sc = new Scan(s)
+      val i = (from until s.length).find(k => !sc.quoted(k) && s.charAt(k) == '{').getOrElse(return s)
+      val close = sc.partner(i)
       if (close < 0) return s
       val content = s.substring(i + 1, close)
       var p = i - 1
       while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
       val mapKw = p >= 2 && s.substring(p - 2, p + 1).equalsIgnoreCase("MAP") &&
         (p - 3 < 0 || !isWordChar(s.charAt(p - 3)))
-      val pairs = splitTopLevel(content, ',').map { part =>
-        val c = topLevelColon(part)
+      val pairs = new Scan(content).split(',').map { part =>
+        val c = new Scan(part).firstChar(":")
         if (c < 0) None
         else {
           val rawKey = part.substring(0, c).trim
@@ -776,34 +722,13 @@ object Dialect {
     var guard = 0
     while (guard < 1000) {
       guard += 1
-      val at = {
-        val mask = quoteMask(s)
-        val upper = s.toUpperCase
-        var i = 0
-        var found = -1
-        while (i < s.length && found < 0) {
-          if (!mask(i) && upper.startsWith(fname, i) &&
-              (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-              (i + fname.length < s.length && !isWordChar(s.charAt(i + fname.length))))
-            found = i
-          i += 1
-        }
-        found
-      }
-      if (at < 0) return s
+      val sc = new Scan(s)
+      val at = sc.find(fname).nextOption().getOrElse(return s)
       val open = s.indexOf('(', at + fname.length)
       if (open < 0 || s.substring(at + fname.length, open).trim.nonEmpty) return s
-      val mask = quoteMask(s)
-      var depth = 0; var j = open; var close = -1
-      while (j < s.length && close < 0) {
-        if (!mask(j)) {
-          if (s.charAt(j) == '(') depth += 1
-          else if (s.charAt(j) == ')') { depth -= 1; if (depth == 0) close = j }
-        }
-        j += 1
-      }
+      val close = sc.partner(open)
       if (close < 0) return s
-      val parts = splitTopLevel(s.substring(open + 1, close), ',')
+      val parts = new Scan(s.substring(open + 1, close)).split(',')
       if (parts.length <= positional) return s
       val args = parts.zipWithIndex.map { case (part, idx) =>
         if (idx < positional) Some(part.trim) // leading positional args pass through
@@ -834,15 +759,10 @@ object Dialect {
     * reference in DuckDB, the same position Spark's TABLESAMPLE takes).
     */
   private def rewriteSample(sql: String): String = {
-    // regexes only fire outside quotes: check match position in mask
-    def applyRe(s: String, re: scala.util.matching.Regex, fmt: List[String] => String): String = {
-      val mask = quoteMask(s)
-      re.replaceAllIn(s, m =>
-        if (mask(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-        else java.util.regex.Matcher.quoteReplacement(fmt(m.subgroups)))
-    }
-    val pct = applyRe(sql, UsingSamplePct, g => s"TABLESAMPLE (${g.head} PERCENT)")
-    relocateSample(applyRe(pct, UsingSampleRows, g => s"TABLESAMPLE (${g.head} ROWS)"))
+    val pct = new Scan(sql).replaceUnquoted(UsingSamplePct)(m =>
+      s"TABLESAMPLE (${m.group(1)} PERCENT)")
+    relocateSample(new Scan(pct).replaceUnquoted(UsingSampleRows)(m =>
+      s"TABLESAMPLE (${m.group(1)} ROWS)"))
   }
 
   /** DuckDB also accepts the sample clause at the END of the query
@@ -853,91 +773,19 @@ object Dialect {
     * HAVING/ORDER/LIMIT.
     */
   private def relocateSample(sql: String): String = {
-    val at = lastTopLevel(sql, "TABLESAMPLE")
+    val sc = new Scan(sql)
+    val at = sc.last("TABLESAMPLE")
     if (at < 0) return sql
     val open = sql.indexOf('(', at)
     if (open < 0) return sql
-    val mask = quoteMask(sql)
-    var depth = 0; var j = open; var close = -1
-    while (j < sql.length && close < 0) {
-      if (!mask(j)) {
-        if (sql.charAt(j) == '(') depth += 1
-        else if (sql.charAt(j) == ')') { depth -= 1; if (depth == 0) close = j }
-      }
-      j += 1
-    }
+    val close = sc.partner(open)
     if (close < 0 || sql.substring(close + 1).trim.nonEmpty) return sql // not terminal
-    val kwAt = Seq("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT")
-      .map(k => firstTopLevel(sql, k)).filter(p => p >= 0 && p < at)
-      .sorted.headOption
-    kwAt match {
+    sc.earliest("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT").filter(_ < at) match {
       case Some(k) =>
         val seg = sql.substring(at, close + 1)
         sql.substring(0, k).trim + " " + seg + " " + sql.substring(k, at).trim
       case None => sql
     }
-  }
-
-  /** End index (exclusive) of the postfix-primary starting at `from`:
-    * optional unary sign, then a dotted chain of names/numbers,
-    * `quoted` names, or balanced () / [] groups.
-    */
-  private def operandEnd(s: String, from: Int): Int = {
-    val mask = quoteMask(s)
-    var p = from
-    while (p < s.length && s.charAt(p).isWhitespace) p += 1
-    if (p < s.length && (s.charAt(p) == '-' || s.charAt(p) == '+')) p += 1
-    while (p < s.length && s.charAt(p).isWhitespace) p += 1
-    var done = false
-    while (!done && p < s.length) {
-      s.charAt(p) match {
-        case c @ ('(' | '[') =>
-          val closeCh = if (c == '(') ')' else ']'
-          var depth = 0
-          var matched = false
-          while (p < s.length && !matched) {
-            val ch = s.charAt(p)
-            if (!mask(p)) {
-              if (ch == c) depth += 1
-              else if (ch == closeCh) { depth -= 1; if (depth == 0) matched = true }
-            }
-            p += 1
-          }
-          if (!matched) return from
-        case '`' =>
-          p += 1
-          while (p < s.length && s.charAt(p) != '`') p += 1
-          p += 1
-        case c if isWordChar(c) =>
-          val wStart = p
-          while (p < s.length && isWordChar(s.charAt(p))) p += 1
-          // forward mirror of operandStart's CASE handling: a right
-          // operand starting with CASE runs to its matching END
-          if (s.substring(wStart, p).equalsIgnoreCase("CASE")) {
-            var depth = 1
-            while (p < s.length && depth > 0) {
-              if (!mask(p) && isWordChar(s.charAt(p))) {
-                val ws = p
-                while (p < s.length && isWordChar(s.charAt(p))) p += 1
-                val w = s.substring(ws, p)
-                if (w.equalsIgnoreCase("CASE")) depth += 1
-                else if (w.equalsIgnoreCase("END")) depth -= 1
-              } else p += 1
-            }
-            if (depth > 0) return from // unbalanced — degenerate
-            return p
-          }
-        case _ => done = true
-      }
-      if (!done) {
-        if (p < s.length && (s.charAt(p) == '.' ||
-            s.charAt(p) == '(' || s.charAt(p) == '[')) {
-          if (s.charAt(p) == '.') p += 1 // continue the dotted chain
-          // '(' / '[' loop again as postfix group
-        } else done = true
-      }
-    }
-    p
   }
 
   /** DuckDB's `//` operator → `graft_intdiv(a, b)` (a dispatching
@@ -950,11 +798,11 @@ object Dialect {
     var guard = 0
     while (guard < 1000) {
       guard += 1
-      val mask = quoteMask(s)
+      val sc = new Scan(s)
       var i = 0
       var at = -1
       while (i + 1 < s.length && at < 0) {
-        if (!mask(i) && s.charAt(i) == '/' && !mask(i + 1) && s.charAt(i + 1) == '/')
+        if (!sc.quoted(i) && s.charAt(i) == '/' && !sc.quoted(i + 1) && s.charAt(i + 1) == '/')
           at = i
         i += 1
       }
@@ -962,8 +810,8 @@ object Dialect {
       var p = at - 1
       while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
       if (p < 0) return s
-      val start = operandStart(s, p)
-      val end = operandEnd(s, at + 2)
+      val start = sc.operandStart(p)
+      val end = sc.operandEnd(at + 2)
       if (end <= at + 2) return s
       val leftOp = s.substring(start, p + 1)
       val rightOp = s.substring(at + 2, end).trim
@@ -979,21 +827,9 @@ object Dialect {
     * registration carries DuckDB's boundary-crossing semantics.
     * Unquoted-unit and 2-arg spellings pass through untouched.
     */
-  private def rewriteDateDiff(sql: String): String = {
-    val re = """(?i)\b(date_diff|datediff)\s*\(\s*'""".r
-    val mask = quoteMask(sql)
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).foreach { m =>
-      if (!mask(m.start) && m.start >= last) {
-        sb.append(sql.substring(last, m.start))
-        sb.append("graft_date_diff")
-        sb.append(sql.substring(m.start + m.group(1).length, m.end))
-        last = m.end
-      }
-    }
-    if (last == 0) sql else { sb.append(sql.substring(last)); sb.toString }
-  }
+  private def rewriteDateDiff(sql: String): String =
+    new Scan(sql).replaceUnquoted("""(?i)\b(date_diff|datediff)\s*\(\s*'""".r)(m =>
+      "graft_date_diff" + m.matched.substring(m.group(1).length))
 
   /** DuckDB's JSON sugar: `x::JSON` casts vanish (JSON values travel
     * as strings; extraction parses at use), and the `->` / `->>`
@@ -1015,29 +851,17 @@ object Dialect {
     * `(j) ->> 'k'`.
     */
   private def rewriteJsonOps(sql: String): String = {
-    // strip ::JSON (quote-masked)
-    val castRe = """(?i)::\s*JSON\b""".r
-    val m0 = quoteMask(sql)
-    var s = {
-      val sb = new StringBuilder
-      var last = 0
-      castRe.findAllMatchIn(sql).foreach { m =>
-        if (!m0(m.start) && m.start >= last) {
-          sb.append(sql.substring(last, m.start)); last = m.end
-        }
-      }
-      if (last == 0) sql else { sb.append(sql.substring(last)); sb.toString }
-    }
+    var s = new Scan(sql).replaceUnquoted("""(?i)::\s*JSON\b""".r)(_ => "")
     var searchFrom = 0
     var guard = 0
     while (guard < 1000) {
       guard += 1
-      val mask = quoteMask(s)
+      val sc = new Scan(s)
       var i = searchFrom
       var at = -1
       var arrowLen = 0
       while (i + 1 < s.length && at < 0) {
-        if (!mask(i) && s.charAt(i) == '-' && s.charAt(i + 1) == '>') {
+        if (!sc.quoted(i) && s.charAt(i) == '-' && s.charAt(i + 1) == '>') {
           at = i
           arrowLen = if (i + 2 < s.length && s.charAt(i + 2) == '>') 3 else 2
         }
@@ -1052,11 +876,8 @@ object Dialect {
       while (r < s.length && s.charAt(r).isWhitespace) r += 1
       var identRight = false
       val rightEnd =
-        if (r < s.length && s.charAt(r) == '\'') {
-          var e = r + 1
-          while (e < s.length && mask(e)) e += 1
-          e
-        } else if (r < s.length && s.charAt(r).isDigit) {
+        if (r < s.length && s.charAt(r) == '\'') sc.literalEnd(r)
+        else if (r < s.length && s.charAt(r).isDigit) {
           var e = r
           while (e < s.length && s.charAt(e).isDigit) e += 1
           e
@@ -1072,7 +893,7 @@ object Dialect {
       var p = at - 1
       while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
       if (p < 0) return s
-      val start = operandStart(s, p)
+      val start = sc.operandStart(p)
       val leftOp = s.substring(start, p + 1)
       val bareIdent = leftOp.nonEmpty && leftOp.forall(isWordChar)
       var q = start - 1
@@ -1110,21 +931,8 @@ object Dialect {
         // top-level comma inside a parenthesized left operand must
         // disqualify the arrow or `(a, b) -> a` would silently become
         // a json extraction
-        val multiParamLambda = leftOp.startsWith("(") && leftOp.endsWith(")") && {
-          val lm = quoteMask(leftOp)
-          var depth = 0; var comma = false
-          var li = 0
-          while (li < leftOp.length) {
-            if (!lm(li)) leftOp.charAt(li) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case ',' => if (depth == 1) comma = true
-              case _ => ()
-            }
-            li += 1
-          }
-          comma
-        }
+        val multiParamLambda = leftOp.startsWith("(") && leftOp.endsWith(")") &&
+          new Scan(leftOp.substring(1, leftOp.length - 1)).firstChar(",", Parens) >= 0
         if (lambdaParam || multiParamLambda) {
           searchFrom = at + arrowLen
         }
@@ -1166,25 +974,14 @@ object Dialect {
     var guard = 0
     while (guard < 200) {
       guard += 1
-      val mask = quoteMask(s)
-      val mOpt = AggOrderRe.findAllMatchIn(s).find(m => m.start >= from && !mask(m.start))
-      if (mOpt.isEmpty) return s
-      val m = mOpt.get
+      val sc = new Scan(s)
+      val m = AggOrderRe.findAllMatchIn(s).find(m => m.start >= from && !sc.quoted(m.start))
+        .getOrElse(return s)
       val open = m.end - 1
-      var depth = 0
-      var j = open
-      var close = -1
-      while (j < s.length && close < 0) {
-        if (!mask(j)) s.charAt(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
+      val close = sc.partner(open)
       if (close < 0) return s
       val content = s.substring(open + 1, close)
-      val ob = firstTopLevel(content, "ORDER BY")
+      val ob = new Scan(content).first("ORDER BY")
       val fn = m.group(1).toLowerCase(java.util.Locale.ROOT)
       val replacement =
         if (ob < 0) distinctList(fn, content, s.substring(close + 1))
@@ -1205,7 +1002,7 @@ object Dialect {
     * NULLS LAST in BOTH directions unless spelled explicitly.
     */
   private def parseSortKeys(spec: String): Seq[(String, Boolean, Boolean)] =
-    splitTopLevel(spec, ',').map(_.trim).filter(_.nonEmpty).map { k0 =>
+    new Scan(spec).split(',').map(_.trim).filter(_.nonEmpty).map { k0 =>
       var k = k0
       var nullsFirst = false
       val upN = k.toUpperCase
@@ -1269,7 +1066,7 @@ object Dialect {
     if (orderInsensitiveAggs(fn)) return Some(s"$fn($argsPart)")
     val oneKeyPlain = keys.length == 1 && !spec.toUpperCase.contains("NULLS")
     if (fn == "string_agg") {
-      val args = splitTopLevel(argsPart, ',').map(_.trim)
+      val args = new Scan(argsPart).split(',').map(_.trim)
       if (args.isEmpty || args.length > 2) return None
       val sep = if (args.length == 2) args(1) else "','" // DuckDB's default
       if (args.head.toUpperCase.startsWith("DISTINCT ")) {
@@ -1303,7 +1100,7 @@ object Dialect {
       // first/last element instead (filtered to non-NULLs for
       // any_value; get() renders the all-NULL group NULL).
       val x = argsPart.trim
-      if (x.toUpperCase.startsWith("DISTINCT ") || splitTopLevel(x, ',').length != 1) return None
+      if (x.toUpperCase.startsWith("DISTINCT ") || new Scan(x).split(',').length != 1) return None
       if (oneKeyPlain) {
         val (key, asc, _) = keys.head
         val wantMin = (fn != "last") ^ !asc
@@ -1327,7 +1124,7 @@ object Dialect {
       val keyIsValue = keys.length == 1 && bare == keys.head._1
       // DISTINCT + sort key only when the key IS the value (DuckDB's
       // own restriction for a well-defined result)
-      if (splitTopLevel(bare, ',').length != 1 || (distinct && !keyIsValue)) return None
+      if (new Scan(bare).split(',').length != 1 || (distinct && !keyIsValue)) return None
       // NULLS LAST both ways, like DuckDB: array_sort puts NULLs last
       // ascending, sort_array descending
       val sorted =
@@ -1339,23 +1136,6 @@ object Dialect {
     }
   }
 
-  /** Postgres-style regex/like operators DuckDB supports: `~` is
-    * regexp_full_match (anchored, verified: 'Abc' ~ '^A' is FALSE),
-    * `!~` its negation, `~~`/`!~~` are LIKE/NOT LIKE. Pattern must be
-    * a string literal for the anchored forms (the overwhelming usage);
-    * otherwise the operator is left → loud parse error.
-    */
-  /** DuckDB's `^` (and `**`) is POWER while Spark's `^` is bitwise
-    * XOR — the nastiest silent-divergence operator in the dialect
-    * (2 ^ 3 = 8.0 there, 1 here). Both spellings rewrite to
-    * power(a, b), left-associative like Postgres/DuckDB; DuckDB's
-    * bitwise xor stays reachable as the registered xor() function.
-    * Operands are primary expressions (literals, identifier chains,
-    * calls, parenthesized exprs, brackets, a leading unary sign on
-    * the right side); a `^` whose operands the scanner cannot bound
-    * is left alone — every realistic spelling is covered, and `**`
-    * inside comments is excluded by the binary-context check.
-    */
   /** DuckDB's postfix `!` factorial and prefix `@` abs operators.
     * `n!` (not `!=`/`!~`) rewrites to factorial(n) for a bounded left
     * primary — a number, identifier chain, or parenthesized/bracketed
@@ -1365,32 +1145,22 @@ object Dialect {
     */
   private def rewriteFactorialAbs(sql: String): String = {
     if (sql.indexOf('!') < 0 && sql.indexOf('@') < 0) return sql
-    val mask = quoteMask(sql)
+    val sc = new Scan(sql)
     var out = sql
     // right-to-left so earlier indices stay valid after replacement
     var i = sql.length - 1
     val edits = scala.collection.mutable.ListBuffer.empty[(Int, Int, String)]
     while (i >= 0) {
       val c = sql.charAt(i)
-      if (!mask(i) && c == '!' &&
+      if (!sc.quoted(i) && c == '!' &&
           (i + 1 >= sql.length || (sql.charAt(i + 1) != '=' && sql.charAt(i + 1) != '~')) &&
           (i == 0 || (sql.charAt(i - 1) != '!' && sql.charAt(i - 1) != '<' && sql.charAt(i - 1) != '>'))) {
         var p = i - 1
         while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
         if (p >= 0) {
           val start =
-            if (sql.charAt(p) == ')' || sql.charAt(p) == ']') {
-              val open = if (sql.charAt(p) == ')') '(' else '['
-              var depth = 0; var q = p; var s = -1
-              while (q >= 0 && s < 0) {
-                if (!mask(q)) {
-                  if (sql.charAt(q) == sql.charAt(p)) depth += 1
-                  else if (sql.charAt(q) == open) { depth -= 1; if (depth == 0) s = q }
-                }
-                q -= 1
-              }
-              s
-            } else if (isWordChar(sql.charAt(p))) {
+            if (sql.charAt(p) == ')' || sql.charAt(p) == ']') sc.partner(p)
+            else if (isWordChar(sql.charAt(p))) {
               var q = p
               while (q >= 0 && (isWordChar(sql.charAt(q)) || sql.charAt(q) == '.')) q -= 1
               q + 1
@@ -1398,7 +1168,7 @@ object Dialect {
           if (start >= 0)
             edits += ((start, i + 1, s"factorial(${sql.substring(start, p + 1)})"))
         }
-      } else if (!mask(i) && c == '@' &&
+      } else if (!sc.quoted(i) && c == '@' &&
           i + 1 < sql.length && sql.charAt(i + 1) != '>' &&
           (i == 0 || sql.charAt(i - 1) != '<')) {
         if (sql.charAt(i + 1) == '(') {
@@ -1416,34 +1186,20 @@ object Dialect {
     out
   }
 
+  /** DuckDB's `^` (and `**`) is POWER while Spark's `^` is bitwise
+    * XOR — the nastiest silent-divergence operator in the dialect
+    * (2 ^ 3 = 8.0 there, 1 here). Both spellings rewrite to
+    * power(a, b), left-associative like Postgres/DuckDB; DuckDB's
+    * bitwise xor stays reachable as the registered xor() function.
+    * Operands are primary expressions (literals, identifier chains,
+    * calls, parenthesized exprs, brackets, a leading unary sign on
+    * the right side); a `^` whose operands the scanner cannot bound
+    * is left alone — every realistic spelling is covered, and `**`
+    * inside comments is excluded by the binary-context check.
+    */
   private def rewritePower(sql: String): String = {
     if (sql.indexOf('^') < 0 && !sql.contains("**")) return sql
-    val mask = quoteMask(sql)
-
-    def matchOpenLeft(close: Int): Int = {
-      val cl = sql.charAt(close); val op = if (cl == ')') '(' else '['
-      var depth = 0; var q = close
-      while (q >= 0) {
-        if (!mask(q)) {
-          if (sql.charAt(q) == cl) depth += 1
-          else if (sql.charAt(q) == op) { depth -= 1; if (depth == 0) return q }
-        }
-        q -= 1
-      }
-      -1
-    }
-    def matchCloseRight(open: Int): Int = {
-      val op = sql.charAt(open); val cl = if (op == '(') ')' else ']'
-      var depth = 0; var q = open
-      while (q < sql.length) {
-        if (!mask(q)) {
-          if (sql.charAt(q) == op) depth += 1
-          else if (sql.charAt(q) == cl) { depth -= 1; if (depth == 0) return q }
-        }
-        q += 1
-      }
-      -1
-    }
+    val sc = new Scan(sql)
     def wordish(c: Char): Boolean = isWordChar(c) || c == '.'
 
     // start index of the primary ending just before `before`; -1 if unbounded
@@ -1457,38 +1213,25 @@ object Dialect {
         done = true
         sql.charAt(p) match {
           case ')' | ']' =>
-            val o = matchOpenLeft(p)
+            val o = sc.partner(p)
             if (o < 0) return -1
             start = o
             var q = o - 1
             while (q >= 0 && wordish(sql.charAt(q))) q -= 1
             if (q < o - 1) start = q + 1
             p = start - 1
-          case '\'' | '"' | '`' if mask(p) => // closing quote
-            var q = p
-            while (q >= 0 && mask(q)) q -= 1
-            start = q + 1
-            p = q
+          case '\'' | '"' | '`' if sc.quoted(p) => // closing quote
+            start = sc.literalStart(p)
+            p = start - 1
           case c if wordish(c) =>
             var q = p
             while (q >= 0 && wordish(sql.charAt(q))) q -= 1
             if (sql.substring(q + 1, p + 1).equalsIgnoreCase("END")) {
               // `CASE … END ^ 2` (round-13 fuzz): the CASE expression
-              // is the primary — scan back to its matching CASE
-              var depth = 1
-              var r2 = q
-              while (r2 >= 0 && depth > 0) {
-                if (!mask(r2) && isWordChar(sql.charAt(r2))) {
-                  val we = r2
-                  while (r2 >= 0 && isWordChar(sql.charAt(r2))) r2 -= 1
-                  val w = sql.substring(r2 + 1, we + 1)
-                  if (w.equalsIgnoreCase("END")) depth += 1
-                  else if (w.equalsIgnoreCase("CASE")) depth -= 1
-                } else r2 -= 1
-              }
-              if (depth > 0) return -1
-              start = r2 + 1
-              p = r2
+              // is the primary
+              start = sc.partner(q + 1)
+              if (start < 0) return -1
+              p = start - 1
             } else { start = q + 1; p = q }
           case _ => return if (start >= 0) start else -1
         }
@@ -1525,34 +1268,21 @@ object Dialect {
       while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
       if (p < sql.length && (sql.charAt(p) == '-' || sql.charAt(p) == '+')) p += 1
       if (p >= sql.length) return -1
-      var end = -1
-      sql.charAt(p) match {
-        case '\'' | '"' | '`' =>
-          var q = p + 1
-          while (q < sql.length && mask(q)) q += 1
-          end = q
+      var end = sql.charAt(p) match {
+        case '\'' | '"' | '`' => sc.literalEnd(p)
         case '(' | '[' =>
-          val c = matchCloseRight(p)
+          val c = sc.partner(p)
           if (c < 0) return -1
-          end = c + 1
+          c + 1
         case c if wordish(c) =>
           var q = p
           while (q < sql.length && wordish(sql.charAt(q))) q += 1
           if (sql.substring(p, q).equalsIgnoreCase("CASE")) {
             // forward mirror: `2 ^ CASE … END` runs to the matching END
-            var depth = 1
-            while (q < sql.length && depth > 0) {
-              if (!mask(q) && isWordChar(sql.charAt(q))) {
-                val ws = q
-                while (q < sql.length && isWordChar(sql.charAt(q))) q += 1
-                val w = sql.substring(ws, q)
-                if (w.equalsIgnoreCase("CASE")) depth += 1
-                else if (w.equalsIgnoreCase("END")) depth -= 1
-              } else q += 1
-            }
-            if (depth > 0) return -1
-          }
-          end = q
+            val e = sc.partner(p)
+            if (e < 0) return -1
+            e + 3
+          } else q
         case _ => return -1
       }
       // trailing chains: call args, subscripts, field access
@@ -1561,7 +1291,7 @@ object Dialect {
         more = false
         sql.charAt(end) match {
           case '(' | '[' =>
-            val c = matchCloseRight(end)
+            val c = sc.partner(end)
             if (c < 0) return end
             end = c + 1; more = true
           case '.' if end + 1 < sql.length && isWordChar(sql.charAt(end + 1)) =>
@@ -1576,7 +1306,7 @@ object Dialect {
 
     var i = 0
     while (i < sql.length) {
-      if (!mask(i)) {
+      if (!sc.quoted(i)) {
         val isCaret = sql.charAt(i) == '^'
         val isStar2 = !isCaret && sql.charAt(i) == '*' && i + 1 < sql.length &&
           sql.charAt(i + 1) == '*' && (i == 0 || sql.charAt(i - 1) != '*') &&
@@ -1638,26 +1368,31 @@ object Dialect {
     * and Spark rejects the GLOB keyword loudly.
     */
   private def rewriteGlob(sql: String): String = {
-    if (!containsUnquoted(sql, "GLOB")) return sql
-    val mask = quoteMask(sql)
-    val mOpt = """(?i)\b(NOT\s+)?GLOB\s*""".r.findAllMatchIn(sql)
-      .find(mm => !mask(mm.start) && mm.end < sql.length && sql.charAt(mm.end) == '\'')
-    val m = mOpt.getOrElse(return sql)
-    var q = m.end + 1
-    while (q < sql.length && mask(q)) q += 1
+    val sc = new Scan(sql)
+    if (!sc.has("GLOB")) return sql
+    val m = """(?i)\b(NOT\s+)?GLOB\s*""".r.findAllMatchIn(sql)
+      .find(mm => !sc.quoted(mm.start) && mm.end < sql.length && sql.charAt(mm.end) == '\'')
+      .getOrElse(return sql)
+    val q = sc.literalEnd(m.end)
     val inner = sql.substring(m.end + 1, q - 1)
     val rep = (if (m.group(1) != null) "NOT RLIKE " else "RLIKE ") +
       "'^(?:" + globRegex(inner) + ")$'"
     rewriteGlob(sql.substring(0, m.start) + rep + sql.substring(q))
   }
 
+  /** Postgres-style regex/like operators DuckDB supports: `~` is
+    * regexp_full_match (anchored, verified: 'Abc' ~ '^A' is FALSE),
+    * `!~` its negation, `~~`/`!~~` are LIKE/NOT LIKE. Pattern must be
+    * a string literal for the anchored forms (the overwhelming usage);
+    * otherwise the operator is left → loud parse error.
+    */
   private def rewriteTildeOps(sql: String): String = {
-    val mask = quoteMask(sql)
+    val sc = new Scan(sql)
     val out = new StringBuilder
     var i = 0
     while (i < sql.length) {
       var matched = false
-      if (!mask(i) && sql.charAt(i) == '~' || (!mask(i) && sql.charAt(i) == '!' &&
+      if (!sc.quoted(i) && sql.charAt(i) == '~' || (!sc.quoted(i) && sql.charAt(i) == '!' &&
           i + 1 < sql.length && sql.charAt(i + 1) == '~')) {
         val neg = sql.charAt(i) == '!'
         var k = i + (if (neg) 1 else 0) // first '~'
@@ -1677,8 +1412,7 @@ object Dialect {
           var r = k
           while (r < sql.length && sql.charAt(r).isWhitespace) r += 1
           if (r < sql.length && sql.charAt(r) == '\'') {
-            var q = r + 1
-            while (q < sql.length && mask(q)) q += 1
+            val q = sc.literalEnd(r)
             val inner0 = sql.substring(r + 1, q - 1)
             val inner = if (tildes == 3) globRegex(inner0) else inner0
             out.append(if (neg) " NOT RLIKE " else " RLIKE ")
@@ -1738,8 +1472,9 @@ object Dialect {
     * paren, keyword, or nothing) is a unary sign and is absorbed into
     * the operand itself.
     */
-  private def comparisonLhsStart(s: String, pEnd: Int): Int = {
-    var st = operandStart(s, pEnd)
+  private def comparisonLhsStart(sc: Scan, pEnd: Int): Int = {
+    val s = sc.s
+    var st = sc.operandStart(pEnd)
     var loop = true
     while (loop && st > 0) {
       var q = st - 1
@@ -1768,7 +1503,7 @@ object Dialect {
           loop = false
         } else if (r >= 0 && (isWordChar(s.charAt(r)) || s.charAt(r) == ')' ||
             s.charAt(r) == ']' || s.charAt(r) == '`' || s.charAt(r) == '\'')) {
-          st = operandStart(s, r)
+          st = sc.operandStart(r)
         } else loop = false
       } else loop = false
     }
@@ -1781,22 +1516,11 @@ object Dialect {
     var guard = 0
     while (guard < 200) {
       guard += 1
-      val mask = quoteMask(s)
-      val mOpt = QuantifiedRe.findAllMatchIn(s).find(m => m.start >= from && !mask(m.start))
-      if (mOpt.isEmpty) return s
-      val m = mOpt.get
+      val sc = new Scan(s)
+      val m = QuantifiedRe.findAllMatchIn(s).find(m => m.start >= from && !sc.quoted(m.start))
+        .getOrElse(return s)
       val open = m.end - 1
-      var depth = 0
-      var j = open
-      var close = -1
-      while (j < s.length && close < 0) {
-        if (!mask(j)) s.charAt(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
+      val close = sc.partner(open)
       if (close < 0) return s
       val inner = s.substring(open + 1, close).trim
       val innerUp = inner.toUpperCase(java.util.Locale.ROOT)
@@ -1813,7 +1537,7 @@ object Dialect {
       else if (subquery) {
         while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
         if (p < 0) return s
-        val start = comparisonLhsStart(s, p)
+        val start = comparisonLhsStart(sc, p)
         val e = "(" + s.substring(start, p + 1) + ")"
         val isAll = m.group(1).equalsIgnoreCase("ALL")
         val normOp = op match { case "==" => "=" case "!=" => "<>" case o => o }
@@ -1882,7 +1606,7 @@ object Dialect {
       else {
         while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
         if (p < 0) return s
-        val start = operandStart(s, p)
+        val start = sc.operandStart(p)
         val leftOp = s.substring(start, p + 1)
         val fn = if (m.group(1).equalsIgnoreCase("ALL")) "forall" else "exists"
         s = s.substring(0, start) +
@@ -1893,9 +1617,6 @@ object Dialect {
     s
   }
 
-  /** DuckDB accepts `OFFSET n LIMIT m` in either order; Spark wants
-    * LIMIT first.
-    */
   /** DuckDB's `<<`/`>>` bit-shift operators → graft_shiftl/graft_shiftr
     * (fuzz v4: Spark cannot parse `>>` at all — PARSE_SYNTAX_ERROR —
     * and its `<<` wraps silently where DuckDB raises). Operand capture
@@ -1916,12 +1637,12 @@ object Dialect {
     var guard = 0
     while (guard < 200) {
       guard += 1
-      val mask = quoteMask(s)
+      val sc = new Scan(s)
       var i = -1
       var j = math.max(from, 0)
       while (j < s.length - 1 && i < 0) {
         val c = s.charAt(j)
-        if (!mask(j) && (c == '<' || c == '>') && s.charAt(j + 1) == c &&
+        if (!sc.quoted(j) && (c == '<' || c == '>') && s.charAt(j + 1) == c &&
             (j == 0 || (s.charAt(j - 1) != '-' && s.charAt(j - 1) != c)) &&
             (j + 2 >= s.length || s.charAt(j + 2) != c))
           i = j
@@ -1932,9 +1653,9 @@ object Dialect {
       var p = i - 1
       while (p >= 0 && s.charAt(p).isWhitespace) p -= 1
       if (p < 0) return s
-      val start = comparisonLhsStart(s, p)
+      val start = comparisonLhsStart(sc, p)
       val lhs = s.substring(start, p + 1)
-      var e = operandEnd(s, i + 2)
+      var e = sc.operandEnd(i + 2)
       if (e <= i + 2) { from = i + 2 }
       else {
         var loop = true
@@ -1944,7 +1665,7 @@ object Dialect {
           if (q < s.length && "+-*/%".indexOf(s.charAt(q)) >= 0 &&
               !(q + 1 < s.length &&
                 "+-*/%<>=&|".indexOf(s.charAt(q + 1)) >= 0)) {
-            val e2 = operandEnd(s, q + 1)
+            val e2 = sc.operandEnd(q + 1)
             if (e2 > q + 1) e = e2 else loop = false
           } else loop = false
         }
@@ -1957,15 +1678,13 @@ object Dialect {
     s
   }
 
-  private def rewriteOffsetLimit(sql: String): String = {
-    val re = """(?i)\bOFFSET\s+(\d+)\s+LIMIT\s+(\d+)""".r
-    val mask = quoteMask(sql)
-    re.replaceAllIn(sql, m =>
-      if (mask(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
-  }
+  /** DuckDB accepts `OFFSET n LIMIT m` in either order; Spark wants
+    * LIMIT first.
+    */
+  private def rewriteOffsetLimit(sql: String): String =
+    new Scan(sql).replaceUnquoted("""(?i)\bOFFSET\s+(\d+)\s+LIMIT\s+(\d+)""".r)(m =>
+      s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
 
-  /** The two PRAGMA metadata verbs DuckDB clients commonly issue. */
   /** DuckDB's simplified `UNPIVOT` statement →
     * Spark's `SELECT * FROM … UNPIVOT (v FOR n IN (cols))`.
     * Covered form: `UNPIVOT <table> ON <c1, c2…> INTO NAME <n> VALUE <v>`.
@@ -1992,16 +1711,16 @@ object Dialect {
     val head = """(?is)^\s*FROM\b""".r
     if (head.findFirstIn(sql).isEmpty) return sql
     val trimmed = sql.trim.stripSuffix(";")
-    val fromAt = firstTopLevel(trimmed, "FROM")
-    val selAt = firstTopLevel(trimmed, "SELECT")
+    val sc = new Scan(trimmed)
+    val fromAt = sc.first("FROM")
+    val selAt = sc.first("SELECT")
     if (selAt < 0)
       return "SELECT * " + trimmed.substring(fromAt)
     // FROM <src> SELECT <list> [tail]: split the list from trailing
     // clauses at the first top-level clause keyword after SELECT
     val src = trimmed.substring(fromAt + 4, selAt).trim
     val rest = trimmed.substring(selAt + 6).trim
-    val cut = Seq("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "QUALIFY")
-      .map(k => firstTopLevel(rest, k)).filter(_ >= 0).sorted.headOption
+    val cut = new Scan(rest).earliest("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "QUALIFY")
     cut match {
       case Some(c) =>
         s"SELECT ${rest.substring(0, c).trim} FROM $src ${rest.substring(c).trim}"
@@ -2011,32 +1730,26 @@ object Dialect {
 
   /** `COLUMNS(…)` call sites in `text`: (start, open-paren, close-paren). */
   private def columnsCalls(text: String): Seq[(Int, Int, Int)] = {
-    val mask = quoteMask(text)
-    val lower = text.toLowerCase
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-    var i = 0
-    while (i < text.length) {
-      var advanced = false
-      if (!mask(i) && lower.startsWith("columns", i) &&
-          (i == 0 || !isWordChar(text.charAt(i - 1)) && text.charAt(i - 1) != '.') &&
-          (i + 7 >= text.length || !isWordChar(text.charAt(i + 7)))) {
-        var k = i + 7
-        while (k < text.length && text.charAt(k).isWhitespace) k += 1
-        if (k < text.length && text.charAt(k) == '(') {
-          var depth = 0; var j = k; var close = -1
-          while (j < text.length && close < 0) {
-            if (!mask(j)) {
-              if (text.charAt(j) == '(') depth += 1
-              else if (text.charAt(j) == ')') { depth -= 1; if (depth == 0) close = j }
-            }
-            j += 1
-          }
-          if (close >= 0) { out += ((i, k, close)); i = close + 1; advanced = true }
-        }
-      }
-      if (!advanced) i += 1
-    }
-    out.toSeq
+    val sc = new Scan(text)
+    var next = 0 // a call's arguments are not searched for further calls
+    sc.find("COLUMNS").filter(i => i >= next && (i == 0 || text.charAt(i - 1) != '.'))
+      .flatMap { i =>
+        val open = text.indexWhere(!_.isWhitespace, i + 7)
+        val close = if (open >= 0 && text.charAt(open) == '(') sc.partner(open) else -1
+        if (close < 0) None else { next = close + 1; Some((i, open, close)) }
+      }.toList
+  }
+
+  /** Column names of `SELECT * FROM <the FROM segment's sources>` from
+    * a LIMIT-0 analysis probe (no execution); None when it does not
+    * resolve. `fromSeg` is the text after FROM; its clauses are cut off.
+    */
+  private def fromColumns(spark: SparkSession, fromSeg: String): Option[Seq[String]] = {
+    val cutAt = new Scan(fromSeg).earliest("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
+      "ORDER", "LIMIT", "OFFSET")
+    val fromSrc = cutAt.map(fromSeg.substring(0, _)).getOrElse(fromSeg).trim.stripSuffix(";")
+    try Some(spark.sql(s"SELECT * FROM $fromSrc LIMIT 0").schema.fieldNames.toSeq)
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Column names matched by a COLUMNS() argument: `*`,
@@ -2051,7 +1764,7 @@ object Dialect {
     a match {
       case "*" => cols
       case excl(list) =>
-        val drop = splitTopLevel(list, ',')
+        val drop = new Scan(list).split(',')
           .map(_.trim.stripPrefix("\"").stripSuffix("\"").toLowerCase).toSet
         cols.filterNot(c => drop.contains(c.toLowerCase))
       case _ if a.startsWith("'") && a.endsWith("'") && a.length >= 2 =>
@@ -2085,6 +1798,41 @@ object Dialect {
     }
   }
 
+  /** Round-11 closure of the subquery residue: COLUMNS() inside a
+    * parenthesized subquery (derived tables, IN/EXISTS bodies) now
+    * rewrites too — each balanced paren group whose content is a
+    * SELECT gets the full rewrite recursively (its own FROM resolves
+    * its own schema, innermost first, so by the time an outer LIMIT-0
+    * probe runs its subqueries are already plain SQL). Correlated
+    * bodies whose probe can't resolve pass through and stay loud,
+    * the established contract.
+    */
+  private def rewriteSubqueryColumns(spark: SparkSession, sql: String): String = {
+    val sc = new Scan(sql)
+    if (!sc.has("COLUMNS")) return sql
+    val sb = new StringBuilder
+    var i = 0
+    while (i < sql.length) {
+      if (!sc.quoted(i) && sql.charAt(i) == '(') {
+        val close = sc.partner(i)
+        if (close < 0) { sb.append(sql.substring(i)); i = sql.length }
+        else {
+          val content = sql.substring(i + 1, close)
+          val trimmed = content.trim
+          val rewritten =
+            if (trimmed.length >= 6 &&
+                trimmed.substring(0, 6).equalsIgnoreCase("SELECT") &&
+                new Scan(content).has("COLUMNS"))
+              rewriteColumns(spark, content)
+            else rewriteSubqueryColumns(spark, content)
+          sb.append('(').append(rewritten).append(')')
+          i = close + 1
+        }
+      } else { sb.append(sql.charAt(i)); i += 1 }
+    }
+    sb.toString
+  }
+
   /** DuckDB `COLUMNS(…)` star-expressions in the TOP-LEVEL select
     * list — `COLUMNS(*)`, `COLUMNS(* EXCLUDE (…))`, `COLUMNS('regex')`
     * and the lambda form `COLUMNS(c -> predicate)`. Spark has no
@@ -2100,64 +1848,16 @@ object Dialect {
     * (no FROM, subquery-nested, unsupported argument shapes) pass
     * through and fail loudly downstream.
     */
-  /** Round-11 closure of the subquery residue: COLUMNS() inside a
-    * parenthesized subquery (derived tables, IN/EXISTS bodies) now
-    * rewrites too — each balanced paren group whose content is a
-    * SELECT gets the full rewrite recursively (its own FROM resolves
-    * its own schema, innermost first, so by the time an outer LIMIT-0
-    * probe runs its subqueries are already plain SQL). Correlated
-    * bodies whose probe can't resolve pass through and stay loud,
-    * the established contract.
-    */
-  private def rewriteSubqueryColumns(spark: SparkSession, sql: String): String = {
-    if (!containsUnquoted(sql, "COLUMNS")) return sql
-    val mask = quoteMask(sql)
-    val sb = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (!mask(i) && sql.charAt(i) == '(') {
-        var depth = 0; var j = i; var close = -1
-        while (j < sql.length && close < 0) {
-          if (!mask(j)) {
-            if (sql.charAt(j) == '(') depth += 1
-            else if (sql.charAt(j) == ')') { depth -= 1; if (depth == 0) close = j }
-          }
-          j += 1
-        }
-        if (close < 0) { sb.append(sql.substring(i)); i = sql.length }
-        else {
-          val content = sql.substring(i + 1, close)
-          val trimmed = content.trim
-          val rewritten =
-            if (trimmed.length >= 6 &&
-                trimmed.substring(0, 6).equalsIgnoreCase("SELECT") &&
-                containsUnquoted(content, "COLUMNS"))
-              rewriteColumns(spark, content)
-            else rewriteSubqueryColumns(spark, content)
-          sb.append('(').append(rewritten).append(')')
-          i = close + 1
-        }
-      } else { sb.append(sql.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
   private def rewriteColumns(spark: SparkSession, sql0: String): String = {
-    if (!containsUnquoted(sql0, "COLUMNS")) return sql0
+    if (!new Scan(sql0).has("COLUMNS")) return sql0
     val sql = rewriteSubqueryColumns(spark, sql0)
-    val sel = firstTopLevel(sql, "SELECT")
-    val fromAt = firstTopLevel(sql, "FROM")
+    val sc = new Scan(sql)
+    val sel = sc.first("SELECT")
+    val fromAt = sc.first("FROM")
     if (sel < 0 || fromAt < sel) return sql
     val selList = sql.substring(sel + 6, fromAt)
-    val fromSeg = sql.substring(fromAt + 4)
-    val cutAt = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
-        "ORDER", "LIMIT", "OFFSET")
-      .map(k => firstTopLevel(fromSeg, k)).filter(_ >= 0).sorted.headOption
-    val fromSrc = cutAt.map(fromSeg.substring(0, _)).getOrElse(fromSeg)
-      .trim.stripSuffix(";")
-    val allCols =
-      try spark.sql(s"SELECT * FROM $fromSrc LIMIT 0").schema.fieldNames.toSeq
-      catch { case scala.util.control.NonFatal(_) => return sql } // let the original fail loudly
+    // an unresolvable FROM lets the original fail loudly
+    val allCols = fromColumns(spark, sql.substring(fromAt + 4)).getOrElse(return sql)
     // Per-column copies of `item` with every COLUMNS(arg) occurrence
     // replaced by one matched column; None when item has no call.
     def expansions(item: String): Option[Seq[String]] = {
@@ -2181,7 +1881,7 @@ object Dialect {
     }
     var out = sql
     if (columnsCalls(selList).nonEmpty) {
-      val expanded = splitTopLevel(selList, ',').flatMap { item =>
+      val expanded = new Scan(selList).split(',').flatMap { item =>
         expansions(item).getOrElse(Seq(item.trim))
       }
       out = sql.substring(0, sel + 6) + " " + expanded.mkString(", ") + " " + sql.substring(fromAt)
@@ -2192,12 +1892,11 @@ object Dialect {
     // disjunction holds for EVERY matched column). Outer query only —
     // a COLUMNS in a subquery clause stays loud, like the select-list
     // rewrite's contract.
-    val whereAt = firstTopLevel(out, "WHERE")
+    val whereAt = new Scan(out).first("WHERE")
     if (whereAt >= 0) {
       val tail = out.substring(whereAt + 5)
-      val end = Seq("GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT", "OFFSET")
-        .map(k => firstTopLevel(tail, k)).filter(_ >= 0).sorted.headOption
-        .getOrElse(tail.length)
+      val end = new Scan(tail).earliest("GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
+        "LIMIT", "OFFSET").getOrElse(tail.length)
       val seg0 = tail.substring(0, end)
       val trailingSemi = seg0.trim.endsWith(";") && end == tail.length
       val seg = seg0.stripSuffix(" ").trim.stripSuffix(";")
@@ -2211,17 +1910,15 @@ object Dialect {
     // COLUMNS in ORDER BY: each order item expands to one sort key per
     // matched column, any ASC/DESC/NULLS suffix carried onto every
     // copy (verified: `ORDER BY COLUMNS('[xy]') DESC` ≡ x DESC, y DESC).
-    val orderAt = firstTopLevel(out, "ORDER BY")
+    val orderAt = new Scan(out).first("ORDER BY")
     if (orderAt >= 0) {
       val tail = out.substring(orderAt + 8)
-      val end = Seq("LIMIT", "OFFSET")
-        .map(k => firstTopLevel(tail, k)).filter(_ >= 0).sorted.headOption
-        .getOrElse(tail.length)
+      val end = new Scan(tail).earliest("LIMIT", "OFFSET").getOrElse(tail.length)
       val seg0 = tail.substring(0, end)
       val trailingSemi = seg0.trim.endsWith(";") && end == tail.length
       val seg = seg0.trim.stripSuffix(";")
       if (columnsCalls(seg).nonEmpty) {
-        val keys = splitTopLevel(seg, ',').flatMap { item =>
+        val keys = new Scan(seg).split(',').flatMap { item =>
           expansions(item) match {
             case None => Seq(item.trim)
             case Some(copies) =>
@@ -2240,26 +1937,6 @@ object Dialect {
     out
   }
 
-  /** `(content, remainder)` of a leading parenthesized group (after
-    * optional whitespace); None when `s` doesn't start with one.
-    */
-  private def parenGroup(s: String): Option[(String, String)] = {
-    var i = 0
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    if (i >= s.length || s.charAt(i) != '(') return None
-    val mask = quoteMask(s)
-    var depth = 0; var j = i; var close = -1
-    while (j < s.length && close < 0) {
-      if (!mask(j)) {
-        if (s.charAt(j) == '(') depth += 1
-        else if (s.charAt(j) == ')') { depth -= 1; if (depth == 0) close = j }
-      }
-      j += 1
-    }
-    if (close < 0) None
-    else Some((s.substring(i + 1, close), s.substring(close + 1)))
-  }
-
   /** DuckDB `* [EXCLUDE (…)] REPLACE (expr AS col, …)` star-modifier
     * in the top-level select list. Spark understands `* EXCEPT` but
     * has no REPLACE, so the shim expands the star against the FROM
@@ -2271,29 +1948,30 @@ object Dialect {
     * through and fail loudly downstream.
     */
   private def rewriteReplace(spark: SparkSession, sql: String): String = {
-    if (!containsUnquoted(sql, "REPLACE")) return sql
-    val sel = firstTopLevel(sql, "SELECT")
-    val fromAt = firstTopLevel(sql, "FROM")
+    val sc = new Scan(sql)
+    if (!sc.has("REPLACE")) return sql
+    val sel = sc.first("SELECT")
+    val fromAt = sc.first("FROM")
     if (sel < 0 || fromAt < sel) return sql
     val selList = sql.substring(sel + 6, fromAt)
-    val items = splitTopLevel(selList, ',').map(_.trim)
+    val items = new Scan(selList).split(',').map(_.trim)
     val idx = items.indexWhere(it =>
-      it.startsWith("*") && containsUnquoted(it, "REPLACE"))
+      it.startsWith("*") && new Scan(it).has("REPLACE"))
     if (idx < 0) return sql
     val item = items(idx)
     var rest = item.substring(1).trim
     var excluded = Set.empty[String]
     if (rest.toUpperCase.startsWith("EXCLUDE")) {
-      val g = parenGroup(rest.substring(7)).getOrElse(return sql)
-      excluded = splitTopLevel(g._1, ',')
+      val g = new Scan(rest.substring(7)).leadingGroup.getOrElse(return sql)
+      excluded = new Scan(g._1).split(',')
         .map(_.trim.stripPrefix("\"").stripSuffix("\"").toLowerCase).toSet
       rest = g._2.trim
     }
     if (!rest.toUpperCase.startsWith("REPLACE")) return sql
-    val g = parenGroup(rest.substring(7)).getOrElse(return sql)
+    val g = new Scan(rest.substring(7)).leadingGroup.getOrElse(return sql)
     if (g._2.trim.nonEmpty) return sql // trailing text after REPLACE (…) — not the modifier shape
-    val replacements: Seq[(String, String)] = splitTopLevel(g._1, ',').map { r =>
-      val asAt = lastTopLevel(r, "AS")
+    val replacements: Seq[(String, String)] = new Scan(g._1).split(',').map { r =>
+      val asAt = new Scan(r).last("AS")
       if (asAt < 0)
         throw new IllegalArgumentException(s"REPLACE entry must be `expr AS col`: ${r.trim}")
       val expr = r.substring(0, asAt).trim
@@ -2301,15 +1979,7 @@ object Dialect {
         .stripPrefix("\"").stripSuffix("\"").stripPrefix("`").stripSuffix("`")
       name.toLowerCase -> expr
     }
-    val fromSeg = sql.substring(fromAt + 4)
-    val cutAt = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
-        "ORDER", "LIMIT", "OFFSET")
-      .map(k => firstTopLevel(fromSeg, k)).filter(_ >= 0).sorted.headOption
-    val fromSrc = cutAt.map(fromSeg.substring(0, _)).getOrElse(fromSeg)
-      .trim.stripSuffix(";")
-    val allCols =
-      try spark.sql(s"SELECT * FROM $fromSrc LIMIT 0").schema.fieldNames.toSeq
-      catch { case scala.util.control.NonFatal(_) => return sql }
+    val allCols = fromColumns(spark, sql.substring(fromAt + 4)).getOrElse(return sql)
     val known = allCols.map(_.toLowerCase).toSet
     replacements.collectFirst { case (n, _) if !known(n) => n }.foreach { n =>
       throw new IllegalArgumentException(s"REPLACE names a column that does not exist: $n")
@@ -2325,30 +1995,6 @@ object Dialect {
       }
     val newItems = items.updated(idx, expandedStar.mkString(", "))
     sql.substring(0, sel + 6) + " " + newItems.mkString(", ") + " " + sql.substring(fromAt)
-  }
-
-  /** All depth-0, unmasked, word-bounded occurrences of `kw`. */
-  private def allTopLevelKeyword(content: String, kw: String): Seq[Int] = {
-    val mask = quoteMask(content)
-    val upper = content.toUpperCase
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var depth = 0
-    var i = 0
-    while (i < content.length) {
-      if (!mask(i)) {
-        content.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case _ =>
-            if (depth == 0 && upper.startsWith(kw, i) &&
-                (i == 0 || !isWordChar(content.charAt(i - 1))) &&
-                (i + kw.length >= content.length || !isWordChar(content.charAt(i + kw.length))))
-              out += i
-        }
-      }
-      i += 1
-    }
-    out.toSeq
   }
 
   /** DuckDB `ASOF [LEFT|INNER] JOIN` SQL over HTTP — the reference's
@@ -2370,7 +2016,7 @@ object Dialect {
     * several inequalities, USING) pass through and fail loudly.
     */
   private def rewriteAsOf(sql: String): String = {
-    val asofAt = firstTopLevel(sql, "ASOF")
+    val asofAt = new Scan(sql).first("ASOF")
     if (asofAt < 0) return sql
     val afterAsof = sql.substring(asofAt + 4)
     val jm = """(?is)^\s*(LEFT\s+|INNER\s+)?JOIN\b""".r.findFirstMatchIn(afterAsof).getOrElse(return sql)
@@ -2378,7 +2024,7 @@ object Dialect {
       if (jm.group(1) != null && jm.group(1).trim.equalsIgnoreCase("LEFT")) "LEFT" else "INNER"
     val bStart = asofAt + 4 + jm.end
     val rest = sql.substring(bStart)
-    val onAt = firstTopLevel(rest, "ON")
+    val onAt = new Scan(rest).first("ON")
     if (onAt < 0) return sql
     val bText = rest.substring(0, onAt).trim
     // right-side base + alias (references in ON/select list use the alias)
@@ -2393,14 +2039,13 @@ object Dialect {
     }
     // ON segment up to the next top-level clause / further join
     val condSeg = rest.substring(onAt + 2)
-    val cutAt = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
-        "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-        "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF")
-      .map(k => firstTopLevel(condSeg, k)).filter(_ >= 0).sorted.headOption
+    val cutAt = new Scan(condSeg).earliest("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
+      "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
+      "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF")
     val cond = cutAt.map(condSeg.substring(0, _)).getOrElse(condSeg)
     val tail = cutAt.map(condSeg.substring(_)).getOrElse("")
     // split conjuncts on top-level AND
-    val andAts = allTopLevelKeyword(cond, "AND")
+    val andAts = new Scan(cond).top("AND", AllBrackets).toSeq
     val bounds = (-3 +: andAts) :+ cond.length
     val conjuncts = bounds.sliding(2).map { case Seq(a, b) => cond.substring(a + 3, b).trim }.toSeq
     def refsB(side: String): Boolean = {
@@ -2410,30 +2055,16 @@ object Dialect {
     }
     // classify: exactly one inequality conjunct, the rest equi keys
     def topCompareOp(c: String): Option[(Int, String)] = {
-      val mask = quoteMask(c)
-      var depth = 0
-      var i = 0
-      while (i < c.length) {
-        if (!mask(i)) {
-          c.charAt(i) match {
-            case '(' | '[' => depth += 1
-            case ')' | ']' => depth -= 1
-            case ch @ ('<' | '>') if depth == 0 =>
-              val op = if (i + 1 < c.length && c.charAt(i + 1) == '=') s"$ch=" else s"$ch"
-              if (!(ch == '<' && i + 1 < c.length && c.charAt(i + 1) == '>')) // skip <>
-                return Some((i, op))
-            case _ =>
-          }
-        }
-        i += 1
-      }
-      None
+      def next(i: Int) = if (i + 1 < c.length) c.charAt(i + 1) else ' '
+      new Scan(c).topChars("<>", "()[]")
+        .find(i => !(c.charAt(i) == '<' && next(i) == '>')) // skip <>
+        .map(i => (i, if (next(i) == '=') s"${c.charAt(i)}=" else s"${c.charAt(i)}"))
     }
     val classified = conjuncts.map(c => (c, topCompareOp(c)))
     val ineqs = classified.filter(_._2.isDefined)
     if (ineqs.length != 1) return sql
     val equis = classified.filter(_._2.isEmpty).map(_._1)
-    if (equis.isEmpty || !equis.forall(e => containsUnquoted(e, "="))) return sql
+    if (equis.isEmpty || !equis.forall(e => new Scan(e).has("="))) return sql
     val (ineq, Some((opAt, op))) = ineqs.head: @unchecked
     val (s1, s2) = (ineq.substring(0, opAt).trim, ineq.substring(opAt + op.length).trim)
     // normalize to  <leftTime> OP <rightTime>
@@ -2470,8 +2101,9 @@ object Dialect {
     var out = sql.substring(0, asofAt) + joinType + " JOIN " + newB +
       " ON " + newCond + " " + tail
     // keep the synthesized columns out of a bare `SELECT *`
-    val sel = firstTopLevel(out, "SELECT")
-    val fromAt = firstTopLevel(out, "FROM")
+    val os = new Scan(out)
+    val sel = os.first("SELECT")
+    val fromAt = os.first("FROM")
     if (sel >= 0 && fromAt > sel && out.substring(sel + 6, fromAt).trim == "*")
       out = out.substring(0, sel + 6) + " * EXCEPT (__vf, __vu) " + out.substring(fromAt)
     rewriteAsOf(out) // a second ASOF join, if any
@@ -2485,24 +2117,22 @@ object Dialect {
     * pattern can't be anchored safely at rewrite time and fails loudly.
     */
   private def rewriteSimilarTo(sql: String): String = {
-    if (!containsUnquoted(sql, "SIMILAR")) return sql
-    val mask = quoteMask(sql)
-    val upper = sql.toUpperCase
+    val sc = new Scan(sql)
+    if (!sc.has("SIMILAR")) return sql
     val out = new StringBuilder
     var i = 0
     while (i < sql.length) {
       var matched = false
-      if (!mask(i) && upper.startsWith("SIMILAR", i) &&
+      if (!sc.quoted(i) && sql.regionMatches(true, i, "SIMILAR", 0, 7) &&
           (i == 0 || !isWordChar(sql.charAt(i - 1)))) {
         var k = i + 7
         while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (upper.startsWith("TO", k) &&
+        if (sql.regionMatches(true, k, "TO", 0, 2) &&
             (k + 2 >= sql.length || !isWordChar(sql.charAt(k + 2)))) {
           var p = k + 2
           while (p < sql.length && sql.charAt(p).isWhitespace) p += 1
           if (p < sql.length && sql.charAt(p) == '\'') {
-            var q = p + 1
-            while (q < sql.length && mask(q)) q += 1
+            val q = sc.literalEnd(p)
             val inner = sql.substring(p + 1, q - 1)
             out.append("RLIKE '^(?:").append(inner).append(")$'")
             i = q
@@ -2541,16 +2171,14 @@ object Dialect {
         }
       case _ => ()
     }
-    if (!containsUnquoted(out, "DESCRIBE")) return out
+    val sc = new Scan(out)
+    if (!sc.has("DESCRIBE")) return out
     val rel = """(?is)\(\s*DESCRIBE\s+([A-Za-z_][A-Za-z0-9_.]*)\s*\)""".r
-    val mask = quoteMask(out)
-    rel.replaceAllIn(out, m =>
-      if (mask(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        val v = s"__graft_describe_${describeViewN.incrementAndGet()}"
-        spark.sql(s"DESCRIBE ${m.group(1)}").createOrReplaceTempView(v)
-        v
-      })
+    sc.replaceUnquoted(rel) { m =>
+      val v = s"__graft_describe_${describeViewN.incrementAndGet()}"
+      spark.sql(s"DESCRIBE ${m.group(1)}").createOrReplaceTempView(v)
+      v
+    }
   }
 
   /** DuckDB `a POSITIONAL JOIN b` — zip two relations by row order.
@@ -2569,59 +2197,35 @@ object Dialect {
     */
   private val posJoinViewN = new java.util.concurrent.atomic.AtomicLong(0L)
   private def rewritePositionalJoin(spark: SparkSession, sql: String): String = {
-    if (!containsUnquoted(sql, "POSITIONAL")) return sql
+    val sc = new Scan(sql)
+    if (!sc.has("POSITIONAL")) return sql
     val m = """(?is)\bPOSITIONAL\s+JOIN\b""".r.findFirstMatchIn(sql).getOrElse(return sql)
-    val mask = quoteMask(sql)
-    if (mask(m.start)) return sql
+    if (sc.quoted(m.start)) return sql
     // left bound: the governing FROM at the same paren depth
-    var i = m.start - 1; var depth = 0; var fromEnd = -1
+    var i = m.start - 1; var fromEnd = -1
     while (i >= 0 && fromEnd < 0) {
-      if (!mask(i)) sql.charAt(i) match {
-        case ')' => depth += 1
-        case '(' => depth -= 1; if (depth < 0) return sql
-        case c if depth == 0 && (c == 'm' || c == 'M') && i >= 3 &&
-            sql.substring(i - 3, i + 1).equalsIgnoreCase("from") &&
-            (i - 3 == 0 || !isWordChar(sql.charAt(i - 4))) &&
-            !isWordChar(sql.charAt(i + 1)) =>
-          fromEnd = i + 1
-        case _ => ()
+      if (!sc.quoted(i)) sql.charAt(i) match {
+        case ')' => i = sc.partner(i); if (i < 0) return sql
+        case '(' => return sql
+        case _ => if (sc.keywordAt(i - 3, "FROM")) fromEnd = i + 1
       }
       i -= 1
     }
     if (fromEnd < 0) return sql
     val leftSeg = sql.substring(fromEnd, m.start)
-    val maskL = quoteMask(leftSeg)
-    var dl = 0
-    for (k <- 0 until leftSeg.length) { // comma-join prefix: bail loud
-      if (!maskL(k)) leftSeg.charAt(k) match {
-        case '(' => dl += 1
-        case ')' => dl -= 1
-        case ',' if dl == 0 => return sql
-        case _ => ()
-      }
-    }
+    // comma-join prefix: bail loud
+    if (new Scan(leftSeg).firstChar(",", Parens) >= 0) return sql
     val leftRel = leftSeg.trim
     // right bound: next top-level clause keyword, another join, a ')'
     // closing an enclosing scope, a comma, a semicolon, or the end
     val rest = sql.substring(m.end)
-    val maskR = quoteMask(rest)
-    var j = 0; var d2 = 0; var punctCut = -1
-    while (j < rest.length && punctCut < 0) {
-      if (!maskR(j)) rest.charAt(j) match {
-        case '(' => d2 += 1
-        case ')' => d2 -= 1; if (d2 < 0) punctCut = j
-        case ',' | ';' if d2 == 0 => punctCut = j
-        case _ => ()
-      }
-      j += 1
-    }
-    val kwCut = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
+    val rs = new Scan(rest)
+    val cutAt = (Seq(rs.scopeEnd) ++ rs.topChars(",;", Parens).nextOption() ++
+      rs.earliest("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
         "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
-        "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF", "POSITIONAL")
-      .map(k => firstTopLevel(rest, k)).filter(_ >= 0)
-    val cutAt = (kwCut ++ Some(punctCut).filter(_ >= 0)).sorted.headOption
-    val rightRel = cutAt.map(rest.substring(0, _)).getOrElse(rest).trim
-    val tail = cutAt.map(rest.substring(_)).getOrElse("")
+        "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF", "POSITIONAL")).min
+    val rightRel = rest.substring(0, cutAt).trim
+    val tail = rest.substring(cutAt)
     if (leftRel.isEmpty || rightRel.isEmpty) return sql
     val l = spark.sql(s"SELECT * FROM $leftRel")
     val r = spark.sql(s"SELECT * FROM $rightRel")
@@ -2630,8 +2234,8 @@ object Dialect {
     // operand's alias is requalified by the view, within the query
     // scope (the enclosing parens) that holds this FROM
     val head = sql.substring(0, fromEnd)
-    val hs = scopeEdge(head, forward = false)
-    val te = scopeEdge(tail, forward = true)
+    val hs = new Scan(head).scopeStart
+    val te = new Scan(tail).scopeEnd
     val sides = Seq(leftRel -> l.columns.toSeq, rightRel -> r.columns.toSeq)
     def requalify(t: String) = requalifyPosJoin(t, sides, v)
     val out = head.substring(0, hs) + requalify(head.substring(hs)) + s" $v " +
@@ -2639,27 +2243,6 @@ object Dialect {
     graft.operators.PositionalJoin(l, r).orderBy("pos").drop("pos")
       .createOrReplaceTempView(v)
     rewritePositionalJoin(spark, out)
-  }
-
-  /** Where the paren scope around `t`'s edge ends: the index after the
-    * first unmatched `(` scanning back from the end, or of the first
-    * unmatched `)` scanning forward from the start; `t`'s far edge if
-    * there is none.
-    */
-  private def scopeEdge(t: String, forward: Boolean): Int = {
-    val mask = quoteMask(t)
-    val (open, close) = if (forward) ('(', ')') else (')', '(')
-    var k = if (forward) 0 else t.length - 1
-    var d = 0
-    while (k >= 0 && k < t.length) {
-      if (!mask(k)) {
-        val c = t.charAt(k)
-        if (c == open) d += 1
-        else if (c == close) { d -= 1; if (d < 0) return if (forward) k else k + 1 }
-      }
-      k += (if (forward) 1 else -1)
-    }
-    if (forward) t.length else 0
   }
 
   /** The alias a FROM operand binds: the trailing `[AS] name[(cols)]`,
@@ -2688,19 +2271,15 @@ object Dialect {
     val named = sides.flatMap { case (rel, cols) => relAlias(rel).map(_ -> cols) }
     if (named.isEmpty) return text
     val all = sides.flatMap(_._2)
-    val mask = quoteMask(text)
+    val sc = new Scan(text)
     val sub = """(?i)\(\s*(SELECT|WITH|FROM|VALUES)\b""".r
-    for (o <- sub.findAllMatchIn(text) if !mask(o.start)) {
-      var k = o.start + 1; var d = 1
-      while (k < text.length && d > 0) {
-        if (!mask(k)) text.charAt(k) match { case '(' => d += 1; case ')' => d -= 1; case _ => () }
-        mask(k) = true; k += 1
-      }
-    }
+    val nested = sub.findAllMatchIn(text).map(_.start).filterNot(sc.quoted)
+      .map(o => (o, if (sc.partner(o) < 0) text.length else sc.partner(o))).toList
+    def hidden(i: Int) = sc.quoted(i) || nested.exists { case (o, c) => o < i && i <= c }
     val ref = """(?<![\w.`])([A-Za-z_]\w*)\s*\.\s*(\*|[A-Za-z_]\w*|`[^`]+`)""".r
     ref.replaceAllIn(text, m => {
       val mine = named.filter(_._1.equalsIgnoreCase(m.group(1)))
-      if (mask(m.start) || mine.isEmpty) java.util.regex.Matcher.quoteReplacement(m.matched)
+      if (hidden(m.start) || mine.isEmpty) java.util.regex.Matcher.quoteReplacement(m.matched)
       else {
         def fail(why: String): Nothing = throw new IllegalArgumentException(
           s"POSITIONAL JOIN: cannot resolve ${m.matched}: $why")
@@ -2718,6 +2297,7 @@ object Dialect {
     })
   }
 
+  /** The two PRAGMA metadata verbs DuckDB clients commonly issue. */
   private def rewritePragma(sql: String): String = {
     val ti = """(?i)^\s*PRAGMA\s+table_info\s*\(\s*'([A-Za-z_][A-Za-z0-9_.]*)'\s*\)\s*;?\s*$""".r
     val st = """(?i)^\s*PRAGMA\s+show_tables\s*;?\s*$""".r
@@ -2753,7 +2333,8 @@ object Dialect {
     * whole union (DuckDB binds it there) and is hoisted out.
     */
   private def rewriteUnionByName(spark: SparkSession, sql: String): String = {
-    if (!containsUnquoted(sql, "UNION")) return sql
+    val sc = new Scan(sql)
+    if (!sc.has("UNION")) return sql
     val un = """(?is)\bUNION\s+(ALL\s+)?BY\s+NAME\b""".r
     val m = un.findFirstMatchIn(sql).getOrElse(return sql)
     // a BY NAME union nested inside a paren span (derived table,
@@ -2761,19 +2342,9 @@ object Dialect {
     // this same function to the innermost enclosing span's content,
     // where the union IS top-level; repeat until no nested match is
     // left or a span makes no progress (then pass through loud)
-    if (firstTopLevel(sql, "UNION") != m.start) {
-      val mask = quoteMask(sql)
-      var depth = 0; var j = 0
-      val stack = new Array[Int](sql.length)
-      while (j < m.start) {
-        if (!mask(j)) sql.charAt(j) match {
-          case '(' => stack(depth) = j; depth += 1
-          case ')' => if (depth > 0) depth -= 1
-          case _ => ()
-        }
-        j += 1
-      }
-      if (depth == 0) {
+    if (sc.first("UNION") != m.start) {
+      val open = sc.enclosing(m.start)
+      if (open < 0) {
         // BY NAME is top-level but NOT the first top-level set op
         // (round-14 advice: `A UNION B UNION ALL BY NAME C` passed
         // through unrewritten → loud 400 while DuckDB serves it).
@@ -2787,16 +2358,7 @@ object Dialect {
         return rewriteUnionByName(spark,
           s"SELECT * FROM ($prefix) __ubn_p ${sql.substring(m.start)}")
       }
-      val open = stack(depth - 1)
-      var d = 0; var k = open; var close = -1
-      while (k < sql.length && close < 0) {
-        if (!mask(k)) sql.charAt(k) match {
-          case '(' => d += 1
-          case ')' => d -= 1; if (d == 0) close = k
-          case _ => ()
-        }
-        k += 1
-      }
+      val close = sc.partner(open)
       if (close < 0) return sql
       val inner = sql.substring(open + 1, close)
       val rewritten = rewriteUnionByName(spark, inner)
@@ -2813,9 +2375,8 @@ object Dialect {
     // pair, wrap it as a derived table, and recurse over the remainder.
     // INTERSECT binds tighter than UNION/EXCEPT and stays inside the
     // segment; a following UNION or EXCEPT ends it.
-    val segEnd = Seq(firstTopLevel(right, "UNION"), firstTopLevel(right, "EXCEPT"))
-      .filter(_ >= 0).sorted.headOption
-    segEnd.foreach { at =>
+    val rs = new Scan(right)
+    rs.earliest("UNION", "EXCEPT").foreach { at =>
       val seg = right.substring(0, at).trim
       val rest = right.substring(at)
       val pair = s"$left UNION ${if (all) "ALL " else ""}BY NAME $seg"
@@ -2825,8 +2386,7 @@ object Dialect {
         s"SELECT * FROM ($combined) __ubn_c $rest")
     }
     // hoist a trailing top-level ORDER BY / LIMIT / OFFSET
-    val tailAt = Seq("ORDER", "LIMIT", "OFFSET")
-      .map(k => firstTopLevel(right, k)).filter(_ >= 0).sorted.headOption
+    val tailAt = rs.earliest("ORDER", "LIMIT", "OFFSET")
     val tail = tailAt.map(right.substring(_)).getOrElse("")
     right = tailAt.map(right.substring(0, _)).getOrElse(right).trim
     val (lCols, rCols) =
@@ -2901,13 +2461,6 @@ object Dialect {
   private val DropMacroRe =
     """(?is)^\s*DROP\s+MACRO(?:\s+TABLE)?(\s+IF\s+EXISTS)?\s+([A-Za-z_][A-Za-z0-9_]*(?:\.[A-Za-z_][A-Za-z0-9_]*)?)\s*;?\s*$""".r
 
-  /** Handle `CREATE [OR REPLACE] [TEMP] MACRO [TABLE] f(params) AS
-    * [TABLE] body` / `DROP MACRO [TABLE] [IF EXISTS] f`. Returns the
-    * acknowledgment SQL (empty result set, like DuckDB's `[]`) when the
-    * statement is a macro verb, None otherwise. `MACRO TABLE` is the
-    * pre-1.x spelling the reference's tests/test.db was built with;
-    * `AS TABLE` is current DuckDB.
-    */
   /** Parse a parameter-list text into (name → default) pairs; None
     * when any entry isn't `identifier [:= default]` (used both to
     * parse real signatures and to PROBE whether text after a comma
@@ -2917,7 +2470,7 @@ object Dialect {
     val raw = group.trim
     val params: Seq[(String, Option[String])] =
       if (raw.isEmpty) Nil
-      else splitTopLevel(raw, ',').map { p =>
+      else new Scan(raw).split(',').map { p =>
         val d = p.indexOf(":=")
         if (d >= 0) (p.substring(0, d).trim.toLowerCase, Some(p.substring(d + 2).trim))
         else (p.trim.toLowerCase, None)
@@ -2981,7 +2534,7 @@ object Dialect {
     * PRIMARY KEY would diverge invisibly.
     */
   private def ddlSchema(colDefs: String): String = {
-    splitTopLevel(colDefs).map { cd =>
+    new Scan(colDefs).split(',', Parens).map { cd =>
       val t = cd.trim
       require("""(?i).*\b(PRIMARY|UNIQUE|CHECK|REFERENCES|NOT\s+NULL|DEFAULT)\b.*""".r
         .findFirstIn(t).isEmpty,
@@ -3006,24 +2559,6 @@ object Dialect {
       }
       s"${parts(0)} $sparkType"
     }.mkString(", ")
-  }
-
-  /** Split a column-definition list on top-level commas. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val mask = quoteMask(s)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0; var i = 0
-    while (i < s.length) {
-      if (!mask(i)) s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
   }
 
   private def sessionTable(spark: SparkSession, name: String): org.apache.spark.sql.DataFrame = {
@@ -3168,7 +2703,7 @@ object Dialect {
         }
       case UpdateRe(name, setList, where) =>
         val target = sessionTable(spark, name)
-        val assigns = splitTopLevel(setList).map { a =>
+        val assigns = new Scan(setList).split(',', Parens).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"invalid SET assignment: $a")
           a.substring(0, eq).trim -> a.substring(eq + 1).trim
@@ -3197,6 +2732,13 @@ object Dialect {
     } }
   }
 
+  /** Handle `CREATE [OR REPLACE] [TEMP] MACRO [TABLE] f(params) AS
+    * [TABLE] body` / `DROP MACRO [TABLE] [IF EXISTS] f`. Returns the
+    * acknowledgment SQL (empty result set, like DuckDB's `[]`) when the
+    * statement is a macro verb, None otherwise. `MACRO TABLE` is the
+    * pre-1.x spelling the reference's tests/test.db was built with;
+    * `AS TABLE` is current DuckDB.
+    */
   private def handleMacroVerb(spark: SparkSession, sql: String): Option[String] = {
     DropMacroRe.findFirstMatchIn(sql).foreach { m =>
       val existed = macrosFor(spark).remove(resolveMacroName(m.group(2))).isDefined
@@ -3215,34 +2757,21 @@ object Dialect {
     var cursor = m.end - 1 // at the '(' opening the current signature
     var done = false
     while (!done) {
-      val g = parenGroup(sql.substring(cursor)).getOrElse(
+      val g = new Scan(sql.substring(cursor)).leadingGroup.getOrElse(
         throw new IllegalArgumentException(s"unbalanced parameter list in CREATE MACRO $name"))
       val params = parseParamList(g._1).getOrElse(
         throw new IllegalArgumentException(s"invalid parameter list in CREATE MACRO $name"))
       val afterParams = g._2
-      val asAt = firstTopLevel(afterParams, "AS")
+      val asAt = new Scan(afterParams).first("AS")
       if (asAt < 0) throw new IllegalArgumentException(s"CREATE MACRO $name: missing AS")
       val bodyAll = afterParams.substring(asAt + 2)
       // find a top-level comma that begins the next signature
-      val bmask = quoteMask(bodyAll)
-      var depth = 0; var i = 0; var bodyEnd = -1
-      while (i < bodyAll.length && bodyEnd < 0) {
-        if (!bmask(i)) {
-          bodyAll.charAt(i) match {
-            case '(' | '[' | '{' => depth += 1
-            case ')' | ']' | '}' => depth -= 1
-            case ',' if depth == 0 =>
-              val probe = parenGroup(bodyAll.substring(i + 1))
-              if (probe.exists { case (grp, rest) =>
-                    parseParamList(grp).isDefined &&
-                      firstTopLevel(rest, "AS") >= 0 &&
-                      rest.substring(0, firstTopLevel(rest, "AS")).trim.isEmpty })
-                bodyEnd = i
-            case _ =>
-          }
+      val bodyEnd = new Scan(bodyAll).topChars(",").find { i =>
+        new Scan(bodyAll.substring(i + 1)).leadingGroup.exists { case (grp, rest) =>
+          val restAs = new Scan(rest).first("AS")
+          parseParamList(grp).isDefined && restAs >= 0 && rest.substring(0, restAs).trim.isEmpty
         }
-        i += 1
-      }
+      }.getOrElse(-1)
       val (bodyText, nextCursor) =
         if (bodyEnd < 0) (bodyAll, -1)
         else {
@@ -3317,7 +2846,7 @@ object Dialect {
       rounds += 1
       if (rounds > 10)
         throw new IllegalArgumentException("macro expansion exceeded depth 10 (recursive macro?)")
-      val mask = quoteMask(sql)
+      val sc = new Scan(sql)
       val lower = sql.toLowerCase
       val out = new StringBuilder
       var i = 0
@@ -3331,7 +2860,7 @@ object Dialect {
         else pos
       while (i < sql.length) {
         val hit = macros.keysIterator.find { name =>
-          !mask(i) && lower.startsWith(name, i) &&
+          !sc.quoted(i) && lower.startsWith(name, i) &&
             (i == 0 || !isWordChar(sql.charAt(i - 1)) &&
               (sql.charAt(i - 1) != '.' || qualifiedStart(i) != i)) &&
             {
@@ -3349,18 +2878,11 @@ object Dialect {
             val defs = macros(name)
             var k = i + name.length
             while (sql.charAt(k) != '(') k += 1
-            var depth = 0; var j = k; var close = -1
-            while (j < sql.length && close < 0) {
-              if (!mask(j)) {
-                if (sql.charAt(j) == '(') depth += 1
-                else if (sql.charAt(j) == ')') { depth -= 1; if (depth == 0) close = j }
-              }
-              j += 1
-            }
+            val close = sc.partner(k)
             if (close < 0) { out.append(sql.charAt(i)); i += 1 } // unbalanced — leave for the parser
             else {
               val rawArgs = sql.substring(k + 1, close).trim
-              val args = if (rawArgs.isEmpty) Nil else splitTopLevel(rawArgs, ',').map(_.trim)
+              val args = if (rawArgs.isEmpty) Nil else new Scan(rawArgs).split(',').map(_.trim)
               // overload resolution by binding: first signature (in
               // declaration order) whose parameters the args bind to
               val errors = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -3397,12 +2919,12 @@ object Dialect {
   private def substituteParams(body: String, bound: Seq[(String, String)]): String = {
     if (bound.isEmpty) return body
     val byName = bound.toMap
-    val mask = quoteMask(body)
+    val sc = new Scan(body)
     val lower = body.toLowerCase
     val out = new StringBuilder
     var i = 0
     while (i < body.length) {
-      val hit = if (mask(i)) None
+      val hit = if (sc.quoted(i)) None
         else byName.keysIterator.find { p =>
           lower.startsWith(p, i) &&
             (i == 0 || !isWordChar(body.charAt(i - 1)) && body.charAt(i - 1) != '.') &&
@@ -3463,7 +2985,7 @@ object Dialect {
         val df = kind match {
           case "csv" =>
             var r = spark.read.option("header", "true").option("inferSchema", "true")
-            splitTopLevel(opts, ',').map(_.trim).filter(_.nonEmpty).foreach { o =>
+            new Scan(opts).split(',').map(_.trim).filter(_.nonEmpty).foreach { o =>
               val eq = o.indexOf('=')
               val (k, v) =
                 if (eq < 0) (o.trim.toLowerCase, "true")
@@ -3562,24 +3084,13 @@ object Dialect {
   private val CastTypeRe = ("""(?i)\bAS\s+(""" + TypeAliasNames + """)\s*\)""").r
 
   private def rewriteTypeAliases(sql: String): String = {
-    val mask = quoteMask(sql)
-    val s1 = ColonTypeRe.replaceAllIn(sql, m =>
-      if (mask(m.start)) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else "::" + TypeAliasMap(m.group(1).toUpperCase))
+    val s1 = new Scan(sql).replaceUnquoted(ColonTypeRe)(m =>
+      "::" + TypeAliasMap(m.group(1).toUpperCase))
     // `AS TYPE)` only INSIDE a CAST/TRY_CAST argument list: find each
-    // CAST(, scan to its close, rewrite within that span
-    val castRe = """(?i)\b(?:try_)?cast\s*\(""".r
-    val mask1 = quoteMask(s1)
-    val spans = castRe.findAllMatchIn(s1).filterNot(m => mask1(m.start)).flatMap { m =>
-      var depth = 0; var j = m.end - 1; var close = -1
-      while (j < s1.length && close < 0) {
-        if (!mask1(j)) s1.charAt(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ => ()
-        }
-        j += 1
-      }
+    // CAST(, take its close, rewrite within that span
+    val sc = new Scan(s1)
+    val spans = CastOpenRe.findAllMatchIn(s1).filterNot(m => sc.quoted(m.start)).flatMap { m =>
+      val close = sc.partner(m.end - 1)
       if (close < 0) None else Some((m.start, close))
     }.toList
     if (spans.isEmpty) return s1
@@ -3599,13 +3110,9 @@ object Dialect {
     */
   private val ExtractQuotedRe =
     """(?i)\b(extract\s*\(\s*)'([A-Za-z_]+)'(\s+FROM\b)""".r
-  private def rewriteExtractQuoted(sql: String): String = {
-    val mask = quoteMask(sql)
-    ExtractQuotedRe.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (mask(m.start)) m.matched
-        else m.group(1) + m.group(2).toUpperCase + m.group(3)))
-  }
+  private def rewriteExtractQuoted(sql: String): String =
+    new Scan(sql).replaceUnquoted(ExtractQuotedRe)(m =>
+      m.group(1) + m.group(2).toUpperCase + m.group(3))
 
   /** Extract fields Spark's parser lacks (probe 12): `extract(epoch
     * FROM x)` → `graft_extract_epoch(x)` — the operand and its closing
@@ -3626,32 +3133,10 @@ object Dialect {
     // registered DuckDB-numbered functions instead (Sunday=0 / ISO 7)
     "dow" -> "dayofweek", "weekday" -> "dayofweek",
     "isodow" -> "isodow", "isoyear" -> "isoyear")
-  private def rewriteExtractFields(sql: String): String = {
-    // filter matches through quoteMask like the neighboring rewrites —
+  private def rewriteExtractFields(sql: String): String =
     // "extract(epoch FROM ..." inside a string literal must survive
-    val mask = quoteMask(sql)
-    ExtractFieldRe.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (mask(m.start)) m.matched
-        else ExtractFieldFn(m.group(1).toLowerCase) + "("))
-  }
+    new Scan(sql).replaceUnquoted(ExtractFieldRe)(m => ExtractFieldFn(m.group(1).toLowerCase) + "(")
 
-  /** `agg(args) FILTER (WHERE pred) OVER ...` — Spark supports agg
-    * FILTER only OUTSIDE windows (probe 14: "Window aggregate function
-    * with filter predicate is not supported yet"). For NULL-IGNORING
-    * aggregates the filter is exactly a CASE on the argument, so the
-    * windowed form rewrites to `agg(CASE WHEN pred THEN args END)
-    * OVER ...` (count(*) → count(CASE WHEN pred THEN 1 END)).
-    * Null-RESPECTING functions (first/last/lag/...) are NOT rewritten
-    * — the CASE would change their semantics — and keep Spark's loud
-    * error. Non-window FILTER is untouched (native).
-    */
-  private val FilterIgnoringAggs = Set(
-    "count", "sum", "avg", "mean", "min", "max", "median", "product",
-    "stddev", "stddev_samp", "stddev_pop", "var_samp", "var_pop", "variance",
-    "string_agg", "group_concat", "listagg", "array_agg", "list",
-    "bit_and", "bit_or", "bit_xor", "bool_and", "bool_or", "fsum", "favg")
-  private val FilterWhereRe = """(?i)\bfilter\s*\(\s*where\b""".r
   /** DuckDB window-frame `EXCLUDE CURRENT ROW / GROUP / TIES` (round-14
     * fuzz v8 — Spark has no EXCLUDE syntax at all, so these were loud
     * 400s where DuckDB runs them). The DECOMPOSABLE aggregates rewrite
@@ -3696,28 +3181,14 @@ object Dialect {
     * (256 KiB request cap bounds it).
     */
   private def rewriteFrameExclude(sql: String): String = {
-    if (!containsUnquoted(sql, "EXCLUDE")) return sql
-    val mask = quoteMask(sql)
-    val upper = sql.toUpperCase
+    val sc = new Scan(sql)
+    if (!sc.has("EXCLUDE")) return sql
     // ---- locate an EXCLUDE that terminates an OVER ( … ) spec ----
     var i = 0
     while (i < sql.length) {
-      val atKw = !mask(i) && upper.startsWith("EXCLUDE", i) &&
-        (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-        (i + 7 >= sql.length || !isWordChar(sql.charAt(i + 7)))
-      if (atKw) {
+      if (sc.keywordAt(i, "EXCLUDE")) {
         // innermost unclosed '(' enclosing position i
-        var depth = 0; var open = -1; var j = 0
-        val stack = new Array[Int](sql.length)
-        while (j < i) {
-          if (!mask(j)) sql.charAt(j) match {
-            case '(' => stack(depth) = j; depth += 1
-            case ')' => if (depth > 0) depth -= 1
-            case _ => ()
-          }
-          j += 1
-        }
-        if (depth > 0) open = stack(depth - 1)
+        val open = sc.enclosing(i)
         // the '(' must belong to an OVER clause
         val isOver = open >= 0 && {
           val before = sql.substring(0, open).reverse.dropWhile(_.isWhitespace)
@@ -3725,16 +3196,7 @@ object Dialect {
             (before.length == 4 || !isWordChar(before.charAt(4)))
         }
         if (isOver) {
-          // matching close of the OVER paren
-          var d = 0; var k = open; var close = -1
-          while (k < sql.length && close < 0) {
-            if (!mask(k)) sql.charAt(k) match {
-              case '(' => d += 1
-              case ')' => d -= 1; if (d == 0) close = k
-              case _ => ()
-            }
-            k += 1
-          }
+          val close = sc.partner(open)
           // the aggregate call before OVER: `name ( args ) OVER (`
           val beforeOver = {
             var p = open - 1
@@ -3743,19 +3205,8 @@ object Dialect {
             while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
             p
           }
-          var fnClose = beforeOver
-          var argOpen = -1
-          if (fnClose >= 0 && sql.charAt(fnClose) == ')') {
-            var d2 = 0; var q = fnClose
-            while (q >= 0 && argOpen < 0) {
-              if (!mask(q)) sql.charAt(q) match {
-                case ')' => d2 += 1
-                case '(' => d2 -= 1; if (d2 == 0) argOpen = q
-                case _ => ()
-              }
-              q -= 1
-            }
-          }
+          val fnClose = beforeOver
+          val argOpen = if (fnClose >= 0 && sql.charAt(fnClose) == ')') sc.partner(fnClose) else -1
           var ns = argOpen - 1
           while (ns >= 0 && sql.charAt(ns).isWhitespace) ns -= 1
           val nameEnd = ns + 1
@@ -3792,7 +3243,8 @@ object Dialect {
             val specNE = sql.substring(open + 1, i).trim
             // frame analysis over the EXCLUDE-free spec
             val specU = specNE.toUpperCase
-            def kwAt(kw: String): Int = firstTopLevel(specNE, kw)
+            val specScan = new Scan(specNE)
+            def kwAt(kw: String): Int = specScan.first(kw)
             val frameAt = Seq(kwAt("ROWS"), kwAt("RANGE"), kwAt("GROUPS"))
               .filter(_ >= 0).sorted.headOption.getOrElse(-1)
             val frameTxt = if (frameAt >= 0)
@@ -3848,7 +3300,7 @@ object Dialect {
                 else "(?is)^ORDER\\s+BY\\s+(.*)$".r
                   .findFirstMatchIn(specNE.substring(oAt, frameAt).trim)
                   .map(_.group(1).trim)
-                  .filter(k => !topLevelComma(k))
+                  .filter(k => new Scan(k).firstChar(",") < 0)
                   .map(_.replaceAll("(?i)\\s+NULLS\\s+(FIRST|LAST)$", "")
                     .replaceAll("(?i)\\s+(ASC|DESC)$", "").trim)
               }
@@ -3919,6 +3371,22 @@ object Dialect {
     sql
   }
 
+  /** `agg(args) FILTER (WHERE pred) OVER ...` — Spark supports agg
+    * FILTER only OUTSIDE windows (probe 14: "Window aggregate function
+    * with filter predicate is not supported yet"). For NULL-IGNORING
+    * aggregates the filter is exactly a CASE on the argument, so the
+    * windowed form rewrites to `agg(CASE WHEN pred THEN args END)
+    * OVER ...` (count(*) → count(CASE WHEN pred THEN 1 END)).
+    * Null-RESPECTING functions (first/last/lag/...) are NOT rewritten
+    * — the CASE would change their semantics — and keep Spark's loud
+    * error. Non-window FILTER is untouched (native).
+    */
+  private val FilterIgnoringAggs = Set(
+    "count", "sum", "avg", "mean", "min", "max", "median", "product",
+    "stddev", "stddev_samp", "stddev_pop", "var_samp", "var_pop", "variance",
+    "string_agg", "group_concat", "listagg", "array_agg", "list",
+    "bit_and", "bit_or", "bit_xor", "bool_and", "bool_or", "fsum", "favg")
+  private val FilterWhereRe = """(?i)\bfilter\s*\(\s*where\b""".r
   private def rewriteWindowFilter(sql: String): String = {
     var out = sql
     var changed = true
@@ -3926,20 +3394,12 @@ object Dialect {
     while (changed && guard < 100) {
       changed = false
       guard += 1
-      val mask = quoteMask(out)
-      val hit = FilterWhereRe.findAllMatchIn(out).filterNot(m => mask(m.start))
+      val sc = new Scan(out)
+      val hit = FilterWhereRe.findAllMatchIn(out).filterNot(m => sc.quoted(m.start))
         .toSeq.reverseIterator.flatMap { m =>
           // matching close of the FILTER( group
           val openIdx = out.indexOf('(', m.start)
-          var depth = 0; var j = openIdx; var close = -1
-          while (j < out.length && close < 0) {
-            if (!mask(j)) out.charAt(j) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ => ()
-            }
-            j += 1
-          }
+          val close = sc.partner(openIdx)
           if (close < 0) None
           else {
             var k = close + 1
@@ -3953,15 +3413,7 @@ object Dialect {
               while (p >= 0 && out.charAt(p).isWhitespace) p -= 1
               if (p < 0 || out.charAt(p) != ')') None
               else {
-                var d2 = 0; var q = p; var open2 = -1
-                while (q >= 0 && open2 < 0) {
-                  if (!mask(q)) out.charAt(q) match {
-                    case ')' => d2 += 1
-                    case '(' => d2 -= 1; if (d2 == 0) open2 = q
-                    case _ => ()
-                  }
-                  q -= 1
-                }
+                val open2 = sc.partner(p)
                 if (open2 < 0) None
                 else {
                   var ns = open2 - 1
@@ -3976,7 +3428,7 @@ object Dialect {
                     }
                     if (fname == "count" && argsTxt == "*")
                       Some((ns + 1, close, s"count(CASE WHEN $pred THEN 1 END)"))
-                    else if (topLevelComma(argsTxt)) None // multi-arg: stays loud
+                    else if (new Scan(argsTxt).firstChar(",") >= 0) None // multi-arg: stays loud
                     else Some((ns + 1, close,
                       s"$fname(CASE WHEN $pred THEN $argsTxt END)"))
                   }
@@ -4007,19 +3459,11 @@ object Dialect {
     while (changed && guard < 50) {
       changed = false
       guard += 1
-      val mask = quoteMask(out)
-      UnnestRecRe.findAllMatchIn(out).filterNot(m => mask(m.start)).toSeq.reverseIterator
+      val sc = new Scan(out)
+      UnnestRecRe.findAllMatchIn(out).filterNot(m => sc.quoted(m.start)).toSeq.reverseIterator
         .foreach { m =>
           if (!changed) {
-            var depth = 0; var j = m.end - 1; var close = -1
-            while (j < out.length && close < 0) {
-              if (!mask(j)) out.charAt(j) match {
-                case '(' => depth += 1
-                case ')' => depth -= 1; if (depth == 0) close = j
-                case _ => ()
-              }
-              j += 1
-            }
+            val close = sc.partner(m.end - 1)
             if (close >= 0) {
               val content = out.substring(m.end, close)
               val recRe = """(?i),\s*recursive\s*:=\s*(true|false)\s*$""".r
@@ -4117,17 +3561,18 @@ object Dialect {
   private def rewriteMultiUnnest(sql: String): String = {
     val up = sql.toUpperCase(java.util.Locale.ROOT)
     if (!up.contains("UNNEST")) return sql
-    val selAt = firstTopLevel(sql, "SELECT")
+    val sc = new Scan(sql)
+    val selAt = sc.first("SELECT")
     if (selAt != 0) return sql // subquery-leading forms: leave alone
-    val fromAt = firstTopLevel(sql, "FROM")
+    val fromAt = sc.first("FROM")
     val listEnd = if (fromAt >= 0) fromAt else sql.length
     val listStr = sql.substring(selAt + "SELECT".length, listEnd)
-    val items = splitTopLevel(listStr, ',').map(_.trim)
+    val items = new Scan(listStr).split(',').map(_.trim)
     val ItemRe = """(?is)^unnest\s*\((.*)\)(?:\s+(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*))?$""".r
     val unnestish = items.count(i =>
       """(?is)^unnest\s*\(.*""".r.findFirstIn(i).isDefined)
     if (unnestish < 2) return sql
-    if (firstTopLevel(sql, "GROUP BY") >= 0 || firstTopLevel(sql, "HAVING") >= 0 ||
+    if (sc.first("GROUP BY") >= 0 || sc.first("HAVING") >= 0 ||
         listStr.trim.toUpperCase.startsWith("DISTINCT"))
       throw new IllegalArgumentException(
         "multiple unnest() items zip row-wise in DuckDB; combining them with " +
@@ -4145,8 +3590,7 @@ object Dialect {
     val seq = s"CASE WHEN coalesce($g, 0) <= 0 THEN array() ELSE sequence(1, $g) END"
     // ORDER BY / LIMIT / OFFSET stay with the OUTER select
     val tail = if (fromAt >= 0) sql.substring(fromAt) else ""
-    val cutAt = Seq("ORDER BY", "LIMIT", "OFFSET")
-      .map(k => firstTopLevel(tail, k)).filter(_ >= 0).sorted.headOption
+    val cutAt = new Scan(tail).earliest("ORDER BY", "LIMIT", "OFFSET")
     val (innerTail, outerTail) = cutAt match {
       case Some(c) => (tail.substring(0, c), " " + tail.substring(c))
       case None => (tail, "")
@@ -4166,76 +3610,23 @@ object Dialect {
     * (probe 13; rules per source type live in
     * graft.functions.IntCastDispatch). CAST(x AS INT) /
     * TRY_CAST(x AS INT) / x::INT rewrite to the graft_int_cast
-    * dispatch function — innermost-first with a rescan after each
-    * replacement, so nested casts stay index-safe. Runs AFTER
-    * rewriteTypeAliases (type names already canonical; HUGEINT/
-    * UBIGINT became DECIMAL targets, which Spark already rounds).
+    * dispatch function. Runs AFTER rewriteTypeAliases (type names
+    * already canonical; HUGEINT/UBIGINT became DECIMAL targets, which
+    * Spark already rounds).
     */
   private val IntTargetRe =
     """(?i)\s+AS\s+(TINYINT|SMALLINT|INT|INTEGER|BIGINT)\s*\)$""".r
   private val ColonIntRe = """::\s*(?i)(TINYINT|SMALLINT|INT|INTEGER|BIGINT)\b""".r
-  private def rewriteIntCasts(sql: String): String = {
-    var out = sql
-    var changed = true
-    var guard = 0
-    val castRe = """(?i)\b(try_)?cast\s*\(""".r
-    while (changed && guard < 200) {
-      changed = false
-      guard += 1
-      val mask = quoteMask(out)
-      // innermost-first: pick the LAST cast-open whose span has an
-      // integer target and no nested cast inside
-      val opens = castRe.findAllMatchIn(out).filterNot(m => mask(m.start)).toList
-      val candidates = opens.reverseIterator.flatMap { m =>
-        var depth = 0; var j = m.end - 1; var close = -1
-        while (j < out.length && close < 0) {
-          if (!mask(j)) out.charAt(j) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = j
-            case _ => ()
-          }
-          j += 1
-        }
-        if (close < 0) None
-        else {
-          val seg = out.substring(m.start, close + 1)
-          IntTargetRe.findFirstMatchIn(seg).map { tm =>
-            val isTry = m.group(1) != null
-            val openParen = seg.indexOf('(')
-            val inner = seg.substring(openParen + 1, tm.start)
-            val fn = if (isTry) "graft_try_int_cast" else "graft_int_cast"
-            (m.start, close, s"$fn($inner, '${tm.group(1).toUpperCase}')")
-          }
-        }
-      }
-      candidates.toSeq.headOption.foreach { case (start, close, repl) =>
-        out = out.substring(0, start) + repl + out.substring(close + 1)
-        changed = true
-      }
-      if (!changed) {
-        // x::INT form: capture the left primary with operandStart
-        val mask2 = quoteMask(out)
-        ColonIntRe.findAllMatchIn(out).filterNot(m => mask2(m.start)).toSeq.lastOption
-          .foreach { m =>
-            val start = operandStart(out, m.start - 1)
-            val lhs = out.substring(start, m.start)
-            out = out.substring(0, start) +
-              s"graft_int_cast($lhs, '${m.group(1).toUpperCase}')" +
-              out.substring(m.end)
-            changed = true
-          }
-      }
-    }
-    out
-  }
+  private def rewriteIntCasts(sql: String): String =
+    rewriteCastsTo(sql, IntTargetRe, ColonIntRe, (isTry, x, target) =>
+      s"${if (isTry) "graft_try_int_cast" else "graft_int_cast"}($x, '${target.group(1).toUpperCase}')")
 
   /** CAST(x AS VARCHAR) carries Java's floating rendering ('1.0E8',
     * 'NaN') where DuckDB prints '100000000.0' / 'nan' (probe 26) —
     * rewrite to graft_varchar_cast, whose dispatch sends DOUBLE/FLOAT
     * children through the DuckDB text renderer and leaves every other
-    * source on Spark's cast. Same innermost-first scan discipline as
-    * rewriteIntCasts. Sized VARCHAR(n) targets take the same path with
-    * the size DROPPED: DuckDB ignores the length entirely
+    * source on Spark's cast. Sized VARCHAR(n) targets take the same
+    * path with the size DROPPED: DuckDB ignores the length entirely
     * (12345::VARCHAR(3) = '12345') while Spark's native varchar(n)
     * cast enforces it — passing the size through was both a silent
     * truncation hazard and, via ColonVarcharRe's old unguarded match,
@@ -4245,50 +3636,51 @@ object Dialect {
     """(?i)\s+AS\s+(VARCHAR|STRING|TEXT)\s*(?:\(\s*\d+\s*\))?\s*\)$""".r
   private val ColonVarcharRe =
     """::\s*(?i)(VARCHAR|STRING|TEXT)\b(?:\s*\(\s*\d+\s*\))?""".r
-  private def rewriteVarcharCasts(sql: String): String = {
+  private def rewriteVarcharCasts(sql: String): String =
+    rewriteCastsTo(sql, VarcharTargetRe, ColonVarcharRe, (isTry, x, _) =>
+      s"${if (isTry) "graft_try_varchar_cast" else "graft_varchar_cast"}($x)")
+
+  private val CastOpenRe = """(?i)\b(try_)?cast\s*\(""".r
+
+  /** CAST / TRY_CAST(x AS T) whose `AS T)` tail matches `target`, then
+    * `x::T` matching `colon`, become `render(isTry, x, typeMatch)` —
+    * innermost-first with a rescan after each replacement, so nested
+    * casts stay index-safe.
+    */
+  private def rewriteCastsTo(sql: String, target: scala.util.matching.Regex,
+      colon: scala.util.matching.Regex,
+      render: (Boolean, String, scala.util.matching.Regex.Match) => String): String = {
     var out = sql
     var changed = true
     var guard = 0
-    val castRe = """(?i)\b(try_)?cast\s*\(""".r
     while (changed && guard < 200) {
       changed = false
       guard += 1
-      val mask = quoteMask(out)
-      val opens = castRe.findAllMatchIn(out).filterNot(m => mask(m.start)).toList
+      val sc = new Scan(out)
+      // innermost-first: pick the LAST cast-open whose span has a
+      // matching target and no nested cast inside
+      val opens = CastOpenRe.findAllMatchIn(out).filterNot(m => sc.quoted(m.start)).toList
       val candidates = opens.reverseIterator.flatMap { m =>
-        var depth = 0; var j = m.end - 1; var close = -1
-        while (j < out.length && close < 0) {
-          if (!mask(j)) out.charAt(j) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = j
-            case _ => ()
-          }
-          j += 1
-        }
+        val close = sc.partner(m.end - 1)
         if (close < 0) None
         else {
           val seg = out.substring(m.start, close + 1)
-          VarcharTargetRe.findFirstMatchIn(seg).map { tm =>
-            val isTry = m.group(1) != null
-            val openParen = seg.indexOf('(')
-            val inner = seg.substring(openParen + 1, tm.start)
-            val fn = if (isTry) "graft_try_varchar_cast" else "graft_varchar_cast"
-            (m.start, close, s"$fn($inner)")
+          target.findFirstMatchIn(seg).map { tm =>
+            val inner = seg.substring(seg.indexOf('(') + 1, tm.start)
+            (m.start, close, render(m.group(1) != null, inner, tm))
           }
         }
       }
-      candidates.toSeq.headOption.foreach { case (start, close, repl) =>
+      candidates.nextOption().foreach { case (start, close, repl) =>
         out = out.substring(0, start) + repl + out.substring(close + 1)
         changed = true
       }
       if (!changed) {
-        val mask2 = quoteMask(out)
-        ColonVarcharRe.findAllMatchIn(out).filterNot(m => mask2(m.start)).toSeq.lastOption
+        // x::T form: capture the left primary with operandStart
+        colon.findAllMatchIn(out).filterNot(m => sc.quoted(m.start)).toSeq.lastOption
           .foreach { m =>
-            val start = operandStart(out, m.start - 1)
-            val lhs = out.substring(start, m.start)
-            out = out.substring(0, start) +
-              s"graft_varchar_cast($lhs)" +
+            val start = sc.operandStart(m.start - 1)
+            out = out.substring(0, start) + render(false, out.substring(start, m.start), m) +
               out.substring(m.end)
             changed = true
           }
@@ -4296,6 +3688,14 @@ object Dialect {
     }
     out
   }
+
+  /** Words whose right side is an EXPRESSION slot — a sign after one
+    * of these is unary (see rewritePower's includeUnarySign). */
+  private val UnaryContextKw = Set(
+    "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "AND", "OR", "NOT", "ON",
+    "BY", "HAVING", "RETURN", "RETURNS", "AS", "IN", "LIKE", "BETWEEN",
+    "CASE", "SET", "VALUES", "DISTINCT", "ALL", "UNION", "EXCEPT",
+    "INTERSECT", "LIMIT", "OFFSET", "QUALIFY", "IS", "COALESCE", "ILIKE")
 
   /** DuckDB's default NULL order is NULLS LAST in BOTH directions
     * (default_null_order = 'nulls_last'); Spark's ASC default is
@@ -4310,38 +3710,28 @@ object Dialect {
     * appears at its own paren depth (a subquery inside a key that
     * already got the suffix does not mask the outer key).
     */
-  /** Words whose right side is an EXPRESSION slot — a sign after one
-    * of these is unary (see rewritePower's includeUnarySign). */
-  private val UnaryContextKw = Set(
-    "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "AND", "OR", "NOT", "ON",
-    "BY", "HAVING", "RETURN", "RETURNS", "AS", "IN", "LIKE", "BETWEEN",
-    "CASE", "SET", "VALUES", "DISTINCT", "ALL", "UNION", "EXCEPT",
-    "INTERSECT", "LIMIT", "OFFSET", "QUALIFY", "IS", "COALESCE", "ILIKE")
-
   private val OrderByRe = """(?i)\bORDER\s+BY\b""".r
   private val OrderEndKw = Seq("LIMIT", "OFFSET", "FETCH", "ROWS", "RANGE",
     "GROUPS", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "HAVING", "QUALIFY")
   private[graft] def rewriteOrderNulls(sql: String): String = {
     var out = sql
     val matches = {
-      val mask = quoteMask(out)
-      OrderByRe.findAllMatchIn(out).filterNot(m => mask(m.start))
+      val sc = new Scan(out)
+      OrderByRe.findAllMatchIn(out).filterNot(m => sc.quoted(m.start))
         .map(_.end).toList.reverse
     }
     matches.foreach { segStart =>
-      val mask = quoteMask(out)
+      val sc = new Scan(out)
       // find the segment end: depth-0 terminator keyword, a ')' that
       // would close the enclosing paren, ';', or end of string
       var i = segStart
-      var depth = 0
       var end = -1
       while (i < out.length && end < 0) {
         val c = out.charAt(i)
-        if (!mask(i)) c match {
-          case '(' => depth += 1; i += 1
-          case ')' => if (depth == 0) end = i else { depth -= 1; i += 1 }
-          case ';' if depth == 0 => end = i
-          case ch if depth == 0 && (ch.isLetter) &&
+        if (!sc.quoted(i)) c match {
+          case '(' => i = if (sc.partner(i) < 0) out.length else sc.partner(i) + 1
+          case ')' | ';' => end = i
+          case ch if ch.isLetter &&
               (i == 0 || !out.charAt(i - 1).isLetterOrDigit && out.charAt(i - 1) != '_') =>
             val w = out.substring(i).takeWhile(x => x.isLetterOrDigit || x == '_')
             if (OrderEndKw.contains(w.toUpperCase)) {
@@ -4374,28 +3764,11 @@ object Dialect {
         } else i += 1
       }
       if (end < 0) end = out.length
-      val seg = out.substring(segStart, end)
-      val keys = splitTopLevel(seg, ',')
-      val hasNullsRe = """(?i)\bNULLS\b""".r
-      def topLevelNulls(key: String): Boolean = {
-        val km = quoteMask(key)
-        var d = 0
-        var found = false
-        hasNullsRe.findAllMatchIn(key).foreach { m =>
-          if (!km(m.start)) {
-            val before = key.substring(0, m.start)
-            val bm = quoteMask(before)
-            val dd = before.zipWithIndex.count { case (ch, ix) => ch == '(' && !bm(ix) } -
-              before.zipWithIndex.count { case (ch, ix) => ch == ')' && !bm(ix) }
-            if (dd == 0) found = true
-          }
-        }
-        d == 0 && found
-      }
+      val keys = new Scan(out.substring(segStart, end)).split(',')
       if (keys.nonEmpty && keys.forall(_.trim.nonEmpty)) {
         val rewritten = keys.map { k =>
           val t = k.trim
-          if (topLevelNulls(t)) t else s"$t NULLS LAST"
+          if (new Scan(t).first("NULLS") >= 0) t else s"$t NULLS LAST"
         }
         out = out.substring(0, segStart) + " " + rewritten.mkString(", ") +
           (if (end < out.length && out.charAt(end) == ')') "" else " ") +
@@ -4408,29 +3781,73 @@ object Dialect {
   def rewrite(spark: SparkSession, sql: String,
       pathOk: String => Boolean = _ => true,
       readOnly: Boolean = false): String =
-    // macro verbs short-circuit; macro CALLS expand right after the
-    // FROM-first normalization so the substituted bodies flow through
-    // every later rewrite (read_csv, brackets, //, …) and their file
-    // paths hit the sandbox check at use time
-    // rewriteFactorialAbs runs OUTSIDE rewritePower deliberately: DuckDB
-    // parses `2^3!` as `(2^3)!` (verified — it is a binder error there,
-    // because postfix `!` binds INTEGER only and 2^3 is DOUBLE), so
-    // factorial(power(2,3)) is the faithful shape and FactorialDispatch
-    // reproduces the loud binder failure; `2^(3!)` = 64.0 both engines.
+    // macro and DDL verbs short-circuit; every other statement runs the
+    // text passes in order
     handleMacroVerb(spark, sql).orElse(
       handleDdlVerb(spark, sql, pathOk, readOnly)).getOrElse(
-      rewriteOrderNulls(rewritePositionalJoin(spark,
-      // rewriteQuantified runs AFTER rewriteShiftOps (and power/glob):
-      // `a << 1 = ANY (SELECT …)` must see graft_shiftl(a, 1) as an
-      // absorbable primary when capturing the comparison LHS, not bind
-      // the quantified CASE as the shift's right operand
-      rewriteDistinctOn(rewriteQualify(rewriteExclude(rewriteOffsetLimit(rewriteFactorialAbs(rewriteQuantified(rewriteShiftOps(rewritePower(rewriteGlob(rewriteTildeOps(rewriteAggOrder(rewriteSimilarTo(rewriteJsonOps(rewriteDateDiff(rewriteIntDiv(
-        rewriteSample(rewriteStructPack(rewriteBrackets(rewriteBraces(
-          rewriteVarcharCasts(rewriteIntCasts(rewriteTypeAliases(rewriteFrameExclude(rewriteWindowFilter(rewriteMultiUnnest(rewriteUnnestRecursive(rewriteExtractFields(rewriteExtractQuoted(
-          rewriteUnionByName(spark, rewriteReplace(spark, rewriteColumns(spark, rewriteAsOf(rewriteGenerateSeries(rewriteSources(spark,
-            rewritePivot(spark, rewriteUnpivot(rewriteSummarize(spark,
-              rewritePragma(rewriteDescribe(spark, expandMacros(spark, rewriteFromFirst(rewriteStringEscapes(sql)))))))),
-            pathOk)))))))))))))))))))))))))))))))))))))
+      passes(spark, pathOk).foldLeft(sql)((text, pass) => pass(text)))
+
+  /** The text passes in the order they run, first to last. */
+  private def passes(spark: SparkSession, pathOk: String => Boolean): Seq[String => String] = Seq(
+    rewriteStringEscapes,
+    rewriteFromFirst,
+    // macro calls expand right after the FROM-first normalization, so
+    // the substituted bodies flow through every later pass (read_csv,
+    // brackets, //, …) and their file paths hit the sandbox check at
+    // use time
+    expandMacros(spark, _),
+    rewriteDescribe(spark, _),
+    rewritePragma,
+    rewriteSummarize(spark, _),
+    rewriteUnpivot,
+    rewritePivot(spark, _),
+    rewriteSources(spark, _, pathOk),
+    rewriteGenerateSeries,
+    rewriteAsOf,
+    rewriteColumns(spark, _),
+    rewriteReplace(spark, _),
+    rewriteUnionByName(spark, _),
+    rewriteExtractQuoted,
+    rewriteExtractFields,
+    rewriteUnnestRecursive,
+    rewriteMultiUnnest,
+    rewriteWindowFilter,
+    rewriteFrameExclude,
+    rewriteTypeAliases,
+    rewriteIntCasts,
+    rewriteVarcharCasts,
+    rewriteBraces,
+    rewriteBrackets,
+    rewriteStructPack,
+    rewriteSample,
+    rewriteIntDiv,
+    rewriteDateDiff,
+    rewriteJsonOps,
+    rewriteSimilarTo,
+    rewriteAggOrder,
+    rewriteTildeOps,
+    rewriteGlob,
+    rewritePower,
+    rewriteShiftOps,
+    // after shift and power: `a << 1 = ANY (SELECT …)` and
+    // `2 ^ 2 = ANY ([4.0])` must see graft_shiftl(a, 1) / power(2, 2)
+    // as a whole primary when capturing the comparison LHS, not bind
+    // the quantified rewrite as the operator's right operand (glob
+    // runs earlier too; `x GLOB 'p' = ANY (…)` fails loudly in either
+    // order)
+    rewriteQuantified,
+    // outside power: DuckDB parses `2^3!` as `(2^3)!` (verified — a
+    // binder error there, because postfix `!` binds INTEGER only and
+    // 2^3 is DOUBLE), so factorial(power(2,3)) is the faithful shape
+    // and FactorialDispatch reproduces the loud binder failure;
+    // `2^(3!)` = 64.0 on both engines
+    rewriteFactorialAbs,
+    rewriteOffsetLimit,
+    rewriteExclude,
+    rewriteQualify,
+    rewriteDistinctOn,
+    rewritePositionalJoin(spark, _),
+    rewriteOrderNulls)
 
   /** The serving plane's spark.sql: parse, then rewrite arithmetic to
     * DuckDB semantics BEFORE analysis so Catalyst's own coercion

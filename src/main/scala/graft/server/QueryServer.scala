@@ -523,9 +523,7 @@ object ServerMain {
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.GraftSession.tune(
       SparkSession.builder()
-        // the planner rule only: injectInto below registers the
-        // functions, and GraftExtensions' builtin overrides would log a
-        // replacement WARN each at session build
+        // the planner rule; injectInto below registers the functions
         .withExtensions(graft.ParamLiterals.inject)
         .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
         .appName("graft-server")

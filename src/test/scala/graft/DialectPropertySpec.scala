@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * SQL, idempotence on its own output, and scanner correctness.
   */
 class DialectPropertySpec extends AnyFunSuite {
+  import DialectPropertySpec._
   import TestSpark._
 
   // raw-scalacheck sampling (the scalatest bridge artifact is not a dependency)
@@ -160,6 +161,78 @@ class DialectPropertySpec extends AnyFunSuite {
     assert(Dialect.rewrite(spark, sql) == sql)
   }
 
+  private def item(depth: Int): Gen[Item] = {
+    val plain = Gen.oneOf("SELECT", "from", "Order BY", "x", "a_1", "AS", "as", "CASE",
+      "END", "end", "FROMX", "_from", ",", ",", ":", "+", "=").map(Plain(_))
+    val quoted = Gen.oneOf("'it''s'", "'a, b'", "'(as'", "\"c(d\"", "`e]f`", "'{from}'",
+      "\"q\"\"x\"", "''").map(Quoted(_))
+    if (depth >= 3) Gen.oneOf(plain, quoted)
+    else Gen.frequency(4 -> plain, 2 -> quoted,
+      1 -> (for {
+        k <- Gen.choose(0, 2)
+        xs <- Gen.listOf(Gen.lzy(item(depth + 1)))
+      } yield Group(k, xs.take(6))))
+  }
+
+  private def render(items: List[Item]): Marked = {
+    val sb = new StringBuilder
+    val quoted = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    val depthAll, depthParens = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val pairs = scala.collection.mutable.Map.empty[Int, Int]
+    def put(s: String, q: Boolean, all: Int, parens: Int): Unit = s.foreach { c =>
+      sb.append(c); quoted += q; depthAll += all; depthParens += parens
+    }
+    def go(xs: List[Item], all: Int, parens: Int): Unit = xs.foreach { x =>
+      if (sb.nonEmpty) put(" ", q = false, all, parens)
+      x match {
+        case Plain(s) => put(s, q = false, all, parens)
+        case Quoted(s) => put(s, q = true, all, parens)
+        case Group(k, inner) =>
+          val p = if (k == 0) 1 else 0
+          val open = sb.length
+          put("([{".charAt(k).toString, q = false, all, parens)
+          go(inner, all + 1, parens + p)
+          pairs(open) = sb.length; pairs(sb.length) = open
+          put(")]}".charAt(k).toString, q = false, all, parens)
+      }
+    }
+    go(items, 0, 0)
+    Marked(sb.toString, quoted.toVector, depthAll.toVector, depthParens.toVector, pairs.toMap)
+  }
+
+  test("scanner: top-level splits re-join, keyword hits sit at depth 0, partners pair both ways") {
+    val marked = for {
+      items <- Gen.listOf(item(0))
+      cut <- Gen.choose(0, 1000)
+    } yield {
+      val m = render(items.take(12))
+      if (cut % 4 == 0) m.take(cut % (m.text.length + 1)) else m // a prefix leaves brackets open
+    }
+    def word(c: Char) = Character.isLetterOrDigit(c) || c == '_'
+    forSamples(marked, 400) { m =>
+      val t = m.text
+      val sc = new Dialect.Scan(t)
+      assert(sc.quoted.toVector == m.quoted, t)
+      for ((brackets, depth) <- Seq(Dialect.Parens -> m.depthParens, Dialect.AllBrackets -> m.depthAll)) {
+        def top(i: Int) = !m.quoted(i) && depth(i) == 0 && !"()[]{}".contains(t.charAt(i))
+        assert(sc.split(',', brackets).mkString(",") == t, t)
+        assert(sc.topChars(",", brackets).toList == t.indices.filter(i => top(i) && t.charAt(i) == ','), t)
+        for (kw <- Seq("FROM", "AS", "ORDER BY")) {
+          val want = t.indices.filter(i => top(i) && t.regionMatches(true, i, kw, 0, kw.length) &&
+            (i == 0 || !word(t.charAt(i - 1))) &&
+            (i + kw.length >= t.length || !word(t.charAt(i + kw.length))))
+          assert(sc.top(kw, brackets).toList == want, s"$kw in $t")
+        }
+      }
+      t.indices.foreach { i =>
+        val p = sc.partner(i)
+        if (p >= 0) assert(sc.partner(p) == i, s"$i <-> $p in $t")
+        if ("()[]{}".contains(t.charAt(i)) && !m.quoted(i))
+          assert(p == m.pairs.getOrElse(i, -1), s"partner of $i in $t")
+      }
+    }
+  }
+
   // ----- macro expander adversarial properties (round-5 brief #5) -----
   // dedicated session: the macro registry is session-scoped, so these
   // registrations can never leak into other suites
@@ -231,4 +304,21 @@ class DialectPropertySpec extends AnyFunSuite {
       assert(rw(once) == once, s"not idempotent: $q -> $once")
     }
   }
+}
+
+object DialectPropertySpec {
+  /** A generated text with, per position, whether it sits inside a
+    * quoted literal and how many brackets enclose it (all three kinds,
+    * and parentheses alone), plus the generated bracket pairs.
+    */
+  final case class Marked(text: String, quoted: Vector[Boolean],
+      depthAll: Vector[Int], depthParens: Vector[Int], pairs: Map[Int, Int]) {
+    def take(n: Int): Marked = Marked(text.take(n), quoted.take(n), depthAll.take(n),
+      depthParens.take(n), pairs.filter { case (a, b) => a < n && b < n })
+  }
+
+  sealed trait Item
+  final case class Plain(s: String) extends Item
+  final case class Quoted(s: String) extends Item
+  final case class Group(kind: Int, items: List[Item]) extends Item
 }

@@ -28,7 +28,7 @@ class ParamLiteralSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     T.views(spark, sf, "orders")
-    // a session built without GraftExtensions: no literal rule
+    // a session built without ParamLiterals.inject: no literal rule
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try plainSession = SparkSession.builder().config("spark.ui.enabled", "false").getOrCreate()
