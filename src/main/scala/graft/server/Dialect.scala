@@ -118,38 +118,50 @@ object Dialect {
 
     /** An unquoted, word-bounded, case-insensitive `kw` at `i`. */
     def keywordAt(i: Int, kw: String): Boolean =
-      i >= 0 && i < s.length && !quoted(i) && s.regionMatches(true, i, kw, 0, kw.length) &&
+      i >= 0 && i < s.length && !quoted(i) && {
+        // cheap ASCII first-character filter before the full match
+        val c = s.charAt(i)
+        c >= 128 || (c | 0x20) == (kw.charAt(0) | 0x20)
+      } && s.regionMatches(true, i, kw, 0, kw.length) &&
         (i == 0 || !isWordChar(s.charAt(i - 1))) &&
         (i + kw.length >= s.length || !isWordChar(s.charAt(i + kw.length)))
 
     /** Every occurrence of keyword `kw` at any depth. */
-    def find(kw: String): Iterator[Int] = s.indices.iterator.filter(keywordAt(_, kw))
+    def find(kw: String): Seq[Int] = positions("", Int.MaxValue)(keywordAt(_, kw))
 
-    def has(kw: String): Boolean = find(kw).hasNext
+    def has(kw: String): Boolean = positions("", 1)(keywordAt(_, kw)).nonEmpty
 
     /** An unquoted occurrence of a raw token (no word-boundary check). */
     def hasToken(tok: String): Boolean =
       (0 to s.length - tok.length).exists(i => !quoted(i) && s.startsWith(tok, i))
 
-    /** Unquoted positions at depth 0, bracket characters excluded. */
-    private def tops(brackets: String): Iterator[Int] = {
+    /** The first `limit` unquoted positions where `hit` holds, in order:
+      * at depth 0 counting the kinds in `brackets`, bracket characters
+      * excluded; at any depth when `brackets` is empty.
+      */
+    private def positions(brackets: String, limit: Int)(hit: Int => Boolean): Seq[Int] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
       var depth = 0
-      s.indices.iterator.filter { i =>
-        !quoted(i) && {
+      var i = 0
+      while (i < s.length && out.length < limit) {
+        if (!quoted(i)) {
           val b = brackets.indexOf(s.charAt(i))
           if (b >= 0) depth += (if (b % 2 == 0) 1 else -1)
-          b < 0 && depth == 0
+          else if (depth == 0 && hit(i)) out += i
         }
+        i += 1
       }
+      out.toSeq
     }
 
     /** Every depth-0 occurrence of keyword `kw`. */
-    def top(kw: String, brackets: String = Parens): Iterator[Int] =
-      tops(brackets).filter(keywordAt(_, kw))
+    def top(kw: String, brackets: String = Parens): Seq[Int] =
+      positions(brackets, Int.MaxValue)(keywordAt(_, kw))
 
-    def first(kw: String, brackets: String = Parens): Int = top(kw, brackets).nextOption().getOrElse(-1)
+    def first(kw: String, brackets: String = Parens): Int =
+      positions(brackets, 1)(keywordAt(_, kw)).headOption.getOrElse(-1)
 
-    def last(kw: String, brackets: String = Parens): Int = top(kw, brackets).foldLeft(-1)((_, i) => i)
+    def last(kw: String, brackets: String = Parens): Int = top(kw, brackets).lastOption.getOrElse(-1)
 
     /** The earliest first depth-0 occurrence among `kws`. */
     def earliest(kws: String*): Option[Int] = kws.map(first(_)).filter(_ >= 0).minOption
@@ -158,11 +170,11 @@ object Dialect {
     def earliestLast(kws: String*): Option[Int] = kws.map(last(_)).filter(_ >= 0).minOption
 
     /** Depth-0 positions of any character in `cs`. */
-    def topChars(cs: String, brackets: String = AllBrackets): Iterator[Int] =
-      tops(brackets).filter(i => cs.indexOf(s.charAt(i)) >= 0)
+    def topChars(cs: String, brackets: String = AllBrackets): Seq[Int] =
+      positions(brackets, Int.MaxValue)(i => cs.indexOf(s.charAt(i)) >= 0)
 
     def firstChar(cs: String, brackets: String = AllBrackets): Int =
-      topChars(cs, brackets).nextOption().getOrElse(-1)
+      positions(brackets, 1)(i => cs.indexOf(s.charAt(i)) >= 0).headOption.getOrElse(-1)
 
     /** The text split at every depth-0 `sep`. */
     def split(sep: Char, brackets: String = AllBrackets): Seq[String] = {
@@ -723,7 +735,7 @@ object Dialect {
     while (guard < 1000) {
       guard += 1
       val sc = new Scan(s)
-      val at = sc.find(fname).nextOption().getOrElse(return s)
+      val at = sc.find(fname).headOption.getOrElse(return s)
       val open = s.indexOf('(', at + fname.length)
       if (open < 0 || s.substring(at + fname.length, open).trim.nonEmpty) return s
       val close = sc.partner(open)
@@ -1732,7 +1744,7 @@ object Dialect {
   private def columnsCalls(text: String): Seq[(Int, Int, Int)] = {
     val sc = new Scan(text)
     var next = 0 // a call's arguments are not searched for further calls
-    sc.find("COLUMNS").filter(i => i >= next && (i == 0 || text.charAt(i - 1) != '.'))
+    sc.find("COLUMNS").iterator.filter(i => i >= next && (i == 0 || text.charAt(i - 1) != '.'))
       .flatMap { i =>
         val open = text.indexWhere(!_.isWhitespace, i + 7)
         val close = if (open >= 0 && text.charAt(open) == '(') sc.partner(open) else -1
@@ -2045,7 +2057,7 @@ object Dialect {
     val cond = cutAt.map(condSeg.substring(0, _)).getOrElse(condSeg)
     val tail = cutAt.map(condSeg.substring(_)).getOrElse("")
     // split conjuncts on top-level AND
-    val andAts = new Scan(cond).top("AND", AllBrackets).toSeq
+    val andAts = new Scan(cond).top("AND", AllBrackets)
     val bounds = (-3 +: andAts) :+ cond.length
     val conjuncts = bounds.sliding(2).map { case Seq(a, b) => cond.substring(a + 3, b).trim }.toSeq
     def refsB(side: String): Boolean = {
@@ -2220,7 +2232,7 @@ object Dialect {
     // closing an enclosing scope, a comma, a semicolon, or the end
     val rest = sql.substring(m.end)
     val rs = new Scan(rest)
-    val cutAt = (Seq(rs.scopeEnd) ++ rs.topChars(",;", Parens).nextOption() ++
+    val cutAt = (Seq(rs.scopeEnd) ++ rs.topChars(",;", Parens).headOption ++
       rs.earliest("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
         "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
         "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ASOF", "POSITIONAL")).min
@@ -3838,8 +3850,7 @@ object Dialect {
     rewriteQuantified,
     // outside power: DuckDB parses `2^3!` as `(2^3)!` (verified — a
     // binder error there, because postfix `!` binds INTEGER only and
-    // 2^3 is DOUBLE), so factorial(power(2,3)) is the faithful shape
-    // and FactorialDispatch reproduces the loud binder failure;
+    // 2^3 is DOUBLE), so `!` must see the power() call as its operand;
     // `2^(3!)` = 64.0 on both engines
     rewriteFactorialAbs,
     rewriteOffsetLimit,
