@@ -162,8 +162,9 @@ class DialectPropertySpec extends AnyFunSuite {
   }
 
   private def item(depth: Int): Gen[Item] = {
+    // stray closers and openers make the bracket kinds interleave
     val plain = Gen.oneOf("SELECT", "from", "Order BY", "x", "a_1", "AS", "as", "CASE",
-      "END", "end", "FROMX", "_from", ",", ",", ":", "+", "=").map(Plain(_))
+      "END", "end", "FROMX", "_from", ",", ",", ":", "+", "=", ")", "]", "{").map(Plain(_))
     val quoted = Gen.oneOf("'it''s'", "'a, b'", "'(as'", "\"c(d\"", "`e]f`", "'{from}'",
       "\"q\"\"x\"", "''").map(Quoted(_))
     if (depth >= 3) Gen.oneOf(plain, quoted)
@@ -177,27 +178,18 @@ class DialectPropertySpec extends AnyFunSuite {
   private def render(items: List[Item]): Marked = {
     val sb = new StringBuilder
     val quoted = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val depthAll, depthParens = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val pairs = scala.collection.mutable.Map.empty[Int, Int]
-    def put(s: String, q: Boolean, all: Int, parens: Int): Unit = s.foreach { c =>
-      sb.append(c); quoted += q; depthAll += all; depthParens += parens
-    }
-    def go(xs: List[Item], all: Int, parens: Int): Unit = xs.foreach { x =>
-      if (sb.nonEmpty) put(" ", q = false, all, parens)
+    def put(s: String, q: Boolean): Unit = s.foreach { c => sb.append(c); quoted += q }
+    def go(xs: List[Item]): Unit = xs.foreach { x =>
+      if (sb.nonEmpty) put(" ", q = false)
       x match {
-        case Plain(s) => put(s, q = false, all, parens)
-        case Quoted(s) => put(s, q = true, all, parens)
+        case Plain(s) => put(s, q = false)
+        case Quoted(s) => put(s, q = true)
         case Group(k, inner) =>
-          val p = if (k == 0) 1 else 0
-          val open = sb.length
-          put("([{".charAt(k).toString, q = false, all, parens)
-          go(inner, all + 1, parens + p)
-          pairs(open) = sb.length; pairs(sb.length) = open
-          put(")]}".charAt(k).toString, q = false, all, parens)
+          put("([{".charAt(k).toString, q = false); go(inner); put(")]}".charAt(k).toString, q = false)
       }
     }
-    go(items, 0, 0)
-    Marked(sb.toString, quoted.toVector, depthAll.toVector, depthParens.toVector, pairs.toMap)
+    go(items)
+    Marked(sb.toString, quoted.toVector)
   }
 
   test("scanner: top-level splits re-join, keyword hits sit at depth 0, partners pair both ways") {
@@ -213,7 +205,12 @@ class DialectPropertySpec extends AnyFunSuite {
       val t = m.text
       val sc = new Dialect.Scan(t)
       assert(sc.quoted.toVector == m.quoted, t)
-      for ((brackets, depth) <- Seq(Dialect.Parens -> m.depthParens, Dialect.AllBrackets -> m.depthAll)) {
+      for (brackets <- Seq(Dialect.Parens, Dialect.AllBrackets)) {
+        // depth before each position, by counting the kinds in `brackets`
+        val depth = t.indices.scanLeft(0) { (d, j) =>
+          val b = brackets.indexOf(t.charAt(j))
+          if (m.quoted(j) || b < 0) d else if (b % 2 == 0) d + 1 else d - 1
+        }
         def top(i: Int) = !m.quoted(i) && depth(i) == 0 && !"()[]{}".contains(t.charAt(i))
         assert(sc.split(',', brackets).mkString(",") == t, t)
         assert(sc.topChars(",", brackets).toList == t.indices.filter(i => top(i) && t.charAt(i) == ','), t)
@@ -224,11 +221,27 @@ class DialectPropertySpec extends AnyFunSuite {
           assert(sc.top(kw, brackets).toList == want, s"$kw in $t")
         }
       }
+      // a bracket's partner: where counting its own kind alone, from
+      // the bracket towards its partner, first returns to zero
+      def counted(i: Int): Int = {
+        val k = "()[]{}".indexOf(t.charAt(i))
+        val (open, close, step) = ("()[]{}".charAt(k & ~1), "()[]{}".charAt(k | 1), if (k % 2 == 0) 1 else -1)
+        var d = 0
+        var j = i
+        while (j >= 0 && j < t.length) {
+          if (!m.quoted(j)) {
+            if (t.charAt(j) == open) d += step else if (t.charAt(j) == close) d -= step
+            if (d == 0) return j
+          }
+          j += step
+        }
+        -1
+      }
       t.indices.foreach { i =>
         val p = sc.partner(i)
         if (p >= 0) assert(sc.partner(p) == i, s"$i <-> $p in $t")
         if ("()[]{}".contains(t.charAt(i)) && !m.quoted(i))
-          assert(p == m.pairs.getOrElse(i, -1), s"partner of $i in $t")
+          assert(p == counted(i), s"partner of $i in $t")
       }
     }
   }
@@ -307,14 +320,9 @@ class DialectPropertySpec extends AnyFunSuite {
 }
 
 object DialectPropertySpec {
-  /** A generated text with, per position, whether it sits inside a
-    * quoted literal and how many brackets enclose it (all three kinds,
-    * and parentheses alone), plus the generated bracket pairs.
-    */
-  final case class Marked(text: String, quoted: Vector[Boolean],
-      depthAll: Vector[Int], depthParens: Vector[Int], pairs: Map[Int, Int]) {
-    def take(n: Int): Marked = Marked(text.take(n), quoted.take(n), depthAll.take(n),
-      depthParens.take(n), pairs.filter { case (a, b) => a < n && b < n })
+  /** A generated text and, per position, whether it sits inside a quoted literal. */
+  final case class Marked(text: String, quoted: Vector[Boolean]) {
+    def take(n: Int): Marked = Marked(text.take(n), quoted.take(n))
   }
 
   sealed trait Item
